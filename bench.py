@@ -42,7 +42,7 @@ def force_count(df) -> int:
     join-back can be eliminated (SCALING.md §16). max() over the hash is
     overflow-safe under ANSI mode (unlike sum) and cannot be
     constant-folded or rewritten to count(*). Shared by bench.py and
-    tools/scale_ladder.py — keep the single copy."""
+    tools/ladder.py — keep the single copy."""
     cols = [F.map_entries(c).alias(c) if t.startswith("map")
             else F.col(c) for c, t in df.dtypes]
     row = df.select(

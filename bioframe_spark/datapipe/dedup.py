@@ -175,6 +175,63 @@ def ngram_jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
         # the single-exchange formulation replaces the cache: consumers
         # replay shuffle files, not the explode
         cache = False
+    if max_doc_freq is None:
+        # counts-ride formulation (see docstring): n_sh = array size,
+        # computed map-side and carried through the join. Rebuilt from
+        # the array form of the same shingle set word_shingles explodes.
+        base = _spread_if_underpartitioned(df).select(
+            F.col(id_col), shingle_array(F.col(text_col), n).alias("__arr"))
+        # stacked select: __arr is consumed twice (size + passthrough),
+        # so CollapseProject leaves the chain in its own projection —
+        # split→transform→array_distinct evaluates ONCE per document
+        tbl = base.select(F.col(id_col), F.size("__arr").alias("__n_sh"),
+                          F.col("__arr"))
+        if cache == "auto":
+            # the cache is the MATERIALIZATION BARRIER for the shingle
+            # chain: without it each join side re-derives it from the
+            # raw text (and the inferred size(arr)>0 filter under the
+            # Generate pays the chain once more — PushDownPredicates
+            # substitutes the alias through any Project/Repartition, so
+            # no projection point can hold it). The ARRAY-form table is
+            # cached, not the exploded rows: the chain runs once into
+            # the cache, each join side pays only its own cheap explode
+            # of the stored arrays. Same plan-size gate as before: at
+            # 100 TB pinning a corpus-sized frame loses to recomputing,
+            # and the big-input join is a shingle-keyed SMJ whose two
+            # canonically-identical sides share one exchange anyway.
+            from ..operators.ops import _plan_size_bytes, _threshold
+            cache = _plan_size_bytes(df) <= _threshold(
+                df, "shingleCacheBytes", 64 << 20)
+        if cache:
+            tbl = tbl.cache()
+        sh = tbl.select(F.col(id_col), "__n_sh",
+                        F.explode("__arr").alias("shingle"))
+        if hash_shingles:
+            sh = sh.withColumn("shingle", F.xxhash64(F.col("shingle")))
+        a = sh.select(F.col(id_col).alias("id1"),
+                      F.col("__n_sh").alias("n1"), "shingle")
+        b = sh.select(F.col(id_col).alias("id2"),
+                      F.col("__n_sh").alias("n2"), "shingle")
+        out = (
+            a.join(b, "shingle")
+            .filter(F.col("id1") < F.col("id2"))
+            # n1/n2 are functions of id1/id2 — identical groups, and the
+            # partial aggregate still collapses map-side
+            .groupBy("id1", "id2", "n1", "n2")
+            .agg(F.count(F.lit(1)).alias("n_common"))
+            # long arithmetic like the old counts (ANSI overflow safety)
+            .withColumn("n_union", F.col("n1").cast("long")
+                        + F.col("n2") - F.col("n_common"))
+            # integer-form threshold test: inter/union >= t <=> inter >= t*union
+            .filter(F.col("n_common").cast("double")
+                    >= F.lit(threshold) * F.col("n_union"))
+            .select("id1", "id2", "n_common", "n_union")
+        )
+        if cache:
+            _ride_cache(out, [tbl])
+        return out
+    # aggregated-counts formulation: every max_doc_freq variant (eager
+    # InSet / window / lazy anti-join) — see the docstring's r10 note
     sh = word_shingles(df, n=n, text_col=text_col, id_col=id_col)
     if hash_shingles:
         sh = sh.withColumn("shingle", F.xxhash64(F.col("shingle")))
@@ -188,7 +245,7 @@ def ngram_jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
                 .withColumn("__df", F.count(F.lit(1)).over(wsp))
                 .filter(F.col("__df") <= max_doc_freq)
                 .drop("__df"))
-    elif max_doc_freq is not None:
+    else:
         # 100 TB skew guard: a stopword shingle occurring in d documents
         # contributes d^2 join candidates — one hot key can dominate the
         # whole stage. Drop shingles with document frequency > cutoff
@@ -254,63 +311,6 @@ def ngram_jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
             # 10 items), no join in the plan at all
             sh = sh.filter(~key.isin([int(v) for v in hot_pdf["__k"]]))
         # empty hot list: nothing to drop, skip the filter entirely
-    if max_doc_freq is None:
-        # counts-ride formulation (see docstring): n_sh = array size,
-        # computed map-side and carried through the join. Rebuilt from
-        # the array form of the same shingle set word_shingles explodes.
-        base = _spread_if_underpartitioned(df).select(
-            F.col(id_col), shingle_array(F.col(text_col), n).alias("__arr"))
-        # stacked select: __arr is consumed twice (size + passthrough),
-        # so CollapseProject leaves the chain in its own projection —
-        # split→transform→array_distinct evaluates ONCE per document
-        tbl = base.select(F.col(id_col), F.size("__arr").alias("__n_sh"),
-                          F.col("__arr"))
-        if cache == "auto":
-            # the cache is the MATERIALIZATION BARRIER for the shingle
-            # chain: without it each join side re-derives it from the
-            # raw text (and the inferred size(arr)>0 filter under the
-            # Generate pays the chain once more — PushDownPredicates
-            # substitutes the alias through any Project/Repartition, so
-            # no projection point can hold it). The ARRAY-form table is
-            # cached, not the exploded rows: the chain runs once into
-            # the cache, each join side pays only its own cheap explode
-            # of the stored arrays. Same plan-size gate as before: at
-            # 100 TB pinning a corpus-sized frame loses to recomputing,
-            # and the big-input join is a shingle-keyed SMJ whose two
-            # canonically-identical sides share one exchange anyway.
-            from ..operators.ops import _plan_size_bytes, _threshold
-            cache = _plan_size_bytes(df) <= _threshold(
-                df, "shingleCacheBytes", 64 << 20)
-        if cache:
-            tbl = tbl.cache()
-        sh = tbl.select(F.col(id_col), "__n_sh",
-                        F.explode("__arr").alias("shingle"))
-        if hash_shingles:
-            sh = sh.withColumn("shingle", F.xxhash64(F.col("shingle")))
-        a = sh.select(F.col(id_col).alias("id1"),
-                      F.col("__n_sh").alias("n1"), "shingle")
-        b = sh.select(F.col(id_col).alias("id2"),
-                      F.col("__n_sh").alias("n2"), "shingle")
-        out = (
-            a.join(b, "shingle")
-            .filter(F.col("id1") < F.col("id2"))
-            # n1/n2 are functions of id1/id2 — identical groups, and the
-            # partial aggregate still collapses map-side
-            .groupBy("id1", "id2", "n1", "n2")
-            .agg(F.count(F.lit(1)).alias("n_common"))
-            # long arithmetic like the old counts (ANSI overflow safety)
-            .withColumn("n_union", F.col("n1").cast("long")
-                        + F.col("n2") - F.col("n_common"))
-            # integer-form threshold test: inter/union >= t <=> inter >= t*union
-            .filter(F.col("n_common").cast("double")
-                    >= F.lit(threshold) * F.col("n_union"))
-            .select("id1", "id2", "n_common", "n_union")
-        )
-        if cache:
-            _ride_cache(out, [tbl])
-        return out
-    # aggregated-counts formulation: every max_doc_freq variant (eager
-    # InSet / window / lazy anti-join) — see the docstring's r10 note
     if cache == "auto":
         from ..operators.ops import _plan_size_bytes, _threshold
         cache = _plan_size_bytes(df) <= _threshold(

@@ -398,7 +398,8 @@ _CLOSEST_COGROUP_BYTES = 128 << 20  # above this combined scan size the
 # switches to the binned cap-escalation plan. Crossover measured on a
 # coordinate-shifted replication of the sf0.1 workload (8 chroms):
 # 72 MB combined -> cogroup 7.6 s vs binned 11.6 s; 288 MB -> cogroup
-# 66 s vs binned 24 s (tools/scale_ladder.py)
+# 66 s vs binned 24 s (SCALING §11; `python tools/ladder.py
+# 'closest(auto)'` reproduces the ladder)
 
 
 def _small_df2(df2: DataFrame) -> bool:
@@ -616,9 +617,16 @@ def _closest_binned(
     # df2 is scanned once per rung — persist it across the ladder so
     # rungs 2+ read the cache, not the source (the r4 ladder re-scanned
     # and re-measured df2 every escalation); skipped on the small path
-    # (a small scan costs less than the cache bookkeeping)
-    df2p = (df2j.persist(StorageLevel.MEMORY_AND_DISK)
-            if n_rounds > 1 and not small else df2j)
+    # (a small scan costs less than the cache bookkeeping). A df2 the
+    # caller already cached stays theirs: only our own persist is
+    # released with the result.
+    handles = []  # the ladder's persists, released with the result
+    df2p = df2j
+    if n_rounds > 1 and not small:
+        lvl = df2j.storageLevel
+        if not (lvl.useMemory or lvl.useDisk):
+            handles.append(df2j)
+        df2p = df2j.persist(StorageLevel.MEMORY_AND_DISK)
 
     done_parts = []
     remaining = d1
@@ -712,6 +720,7 @@ def _closest_binned(
                   "__cb_e" + sfx1, "__cb_cap" + sfx1, "__cb_cap0" + sfx1)
         ).persist(StorageLevel.MEMORY_AND_DISK)
         done_parts.append(found)
+        handles.append(found)
 
         def _left_null(misses):
             null_cols = {c.name + sfx2: F.lit(None).cast(c.dataType)
@@ -761,6 +770,10 @@ def _closest_binned(
                 # every row complete — no further rounds, no left-nulls
                 break
 
+    # the persists ride on the result, so a materialized-and-dropped
+    # closest leaves no CacheManager entry for the session lifetime
+    if remaining is not d1:
+        handles.append(remaining)
     out = done_parts[0]
     for part in done_parts[1:]:
         out = out.unionByName(part, allowMissingColumns=True)
@@ -789,7 +802,8 @@ def _closest_binned(
         if return_distance:
             keep_cols.append("distance")
         out = out.select(*keep_cols)
-    return out
+    from ..datapipe.dedup import _ride_cache
+    return _ride_cache(out, handles)
 
 
 def _closest_broadcast(
@@ -909,6 +923,15 @@ def closest(
     mode), else binned when the combined input scan size exceeds
     ``_CLOSEST_COGROUP_BYTES`` and the feature set allows it (self-mode
     and callable tie-breakers need a kernel strategy).
+
+    On the binned path the ladder's internal persists ride on the
+    returned frame: they are released when it is garbage-collected, or
+    at once by ``datapipe.dedup.release_cache``. A transform chained
+    straight onto the call (``bf.closest(a, b).filter(...)``) drops that
+    frame before the derived plan runs, which then recomputes the whole
+    ladder uncached. Keep the result referenced until the derived frame
+    has run, or hand the persists over with
+    ``datapipe.dedup.carry_cache(derived, result)``.
     """
     if k < 1:
         raise ValueError("k>=1 required")

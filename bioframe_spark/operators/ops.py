@@ -1225,7 +1225,9 @@ _CLUSTER_PREMERGE_BYTES = 8 << 20  # cluster's premerge crossover (see
 _PREMERGE_BYTES = 32 << 20  # above this scan size merge shrinks its rows
 # MAP-SIDE before any shuffle. Re-measured after the r6 buffered fuse
 # (256k-row windows, ~40x shrink vs the old per-Arrow-batch 1.3x;
-# tools/premerge_crossover.py, medians of 3 solo): classic still wins
+# medians of 3 solo, reproduce with `python tools/ladder.py
+# 'merge(classic)' 'merge(premerge)' 'merge(ranged)'
+# 'merge(premerge+ranged)'`): classic still wins
 # at 14 MB (1.22 s vs 1.62 s — the fuse pass floor), premerge wins
 # 1.6x at 55 MB (1.60 s vs 2.54 s) and 2.5x at 220 MB (3.52 s vs
 # 8.72 s) — the wash moved down from the old ~57 MB to ~30 MB.
@@ -1459,7 +1461,8 @@ def merge(df: DataFrame, min_dist: int | None = 0, cols=None,
     before any shuffle — shrinks shuffle volume by the local merge
     factor (often 10-100× on merge-friendly genomic data) at the price
     of one Arrow round trip over the input. Crossover re-measured after
-    the r6 buffered fuse (tools/premerge_crossover.py, SCALING §11-r06):
+    the r6 buffered fuse (SCALING §11-r06; ``python tools/ladder.py
+    'merge(classic)' 'merge(premerge)'``):
     classic wins at 14 MB, premerge wins 1.6x at 55 MB and 2.5x at
     220 MB — default ``"auto"`` turns it on above
     ``spark.bioframe.premergeBytes`` (32 MB, the measured wash). The
@@ -2362,10 +2365,6 @@ def coverage(df1: DataFrame, df2: DataFrame, suffixes=("", "_"),
             return out if return_input else out.select("coverage")
     m2 = merge(df2, min_dist=0, cols=cols2)
     merged2 = m2.filter(F.col(ck2).isNotNull())
-    # keep merge's internal persist (if any) alive until THIS result is
-    # released — chaining .filter() would otherwise GC the merge result
-    # and fire its finalizer before the coverage plan ever runs
-    _merge_handles = getattr(m2, "_bioframe_cache", [])
     coords = (
         df1.select(F.col(ck1).alias("__cc"), F.col(sk1).alias("__cs"),
                    F.col(ek1).alias("__ce"))
@@ -2392,10 +2391,11 @@ def coverage(df1: DataFrame, df2: DataFrame, suffixes=("", "_"),
         .drop("__cc", "__cs", "__ce", "__cov")
     )
     out = out if return_input else out.select("coverage")
-    if _merge_handles:
-        from ..datapipe.dedup import _ride_cache
-        out = _ride_cache(out, _merge_handles)
-    return out
+    # move merge's internal persist (if any) onto THIS result: left on
+    # m2, its finalizer would unpersist the frames when m2 goes out of
+    # scope at return, before the coverage plan ever runs
+    from ..datapipe.dedup import carry_cache
+    return carry_cache(out, m2)
 
 
 def _complement_infinite(df: DataFrame, ck: str, sk: str, ek: str) -> DataFrame:

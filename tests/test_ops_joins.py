@@ -150,6 +150,27 @@ def test_subtract(d1, d2):
     assert got == [tuple(e) for e in expected]
 
 
+def test_coverage_keeps_merge_persist_alive(spark):
+    # createDataFrame inputs estimate at 1<<60 bytes, so the join path's
+    # merge(df2) premerges and persists its fused frame; that persist
+    # must survive coverage() returning (and merge's own result being
+    # collected) until the coverage result is released
+    import gc
+
+    from bioframe_spark.datapipe import dedup
+
+    d1 = ivals(spark, [("chr1", 10 * i, 10 * i + 25) for i in range(40)])
+    d2 = ivals(spark, [("chr1", 7 * i, 7 * i + 5) for i in range(60)])
+    out = bf.coverage(d1, d2)
+    gc.collect()
+    handles = getattr(out, "_bioframe_cache", None)
+    assert handles
+    assert all(h.storageLevel.useMemory for h in handles)
+    assert out.count() == 40
+    dedup.release_cache(out)
+    assert not any(h.storageLevel.useMemory for h in handles)
+
+
 def test_count_overlaps_coverage_return_input_false(spark):
     from helpers import ivals
 

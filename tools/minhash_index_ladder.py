@@ -31,7 +31,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from bioframe_spark.session import get_spark  # noqa: E402
 from bench import force_count as _force_count  # noqa: E402
 from bioframe_spark.datapipe import dedup  # noqa: E402
-from tools.datapipe_ladder64 import rep_docs_any  # noqa: E402
+from tools.ladder import biject_docs  # noqa: E402
 
 
 def main():
@@ -41,13 +41,13 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
     docs0 = spark.read.parquet(f"{sf_dir}/documents.parquet") \
         .select("doc_id", "text")
-    batch = rep_docs_any(docs0, 1).cache()  # == copy #c00 inside the index
+    batch = biject_docs(docs0, 1).cache()  # == copy #c00 inside the index
     batch.count()
 
     results: dict[str, dict[int, float]] = {}
     rows_out: dict[str, dict[int, int]] = {}
     for k in (1, 4, 16, 64):
-        corpus = rep_docs_any(docs0, k).cache()
+        corpus = biject_docs(docs0, k).cache()
         nd = corpus.count()
         print(f"k={k}: {nd} docs indexed", flush=True)
         loc = tempfile.mkdtemp(prefix=f"mh_ladder_{k}_")

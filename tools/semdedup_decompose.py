@@ -21,7 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from bioframe_spark.session import get_spark  # noqa: E402
 from bench import force_count as _force_count  # noqa: E402
 from bioframe_spark.datapipe import similarity  # noqa: E402
-from tools.span_ladder import rep_embeddings_orth  # noqa: E402
+from tools.ladder import roll_embeddings  # noqa: E402
 
 RUNGS = (1, 4, 16, 64)
 
@@ -35,7 +35,7 @@ def main():
 
     results: dict[str, dict[int, float]] = {}
     for k in RUNGS:
-        emb = rep_embeddings_orth(emb0, k).cache()
+        emb = roll_embeddings(emb0, k).cache()
         emb.count()
         nc = 16 * k
 
