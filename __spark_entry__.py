@@ -601,14 +601,10 @@ def q_contamination(spark, sf_dir):
 def q_curate(spark, sf_dir):
     """The end-to-end curation pipeline: quality gate → exact dedup →
     fuzzy dedup (components → canonical) → train/val split, one DAG."""
-    from bioframe_spark.datapipe.dedup import carry_cache
     from bioframe_spark.datapipe.pipeline import curate_corpus
     docs = _t(spark, sf_dir, "documents")
-    out = curate_corpus(docs, min_tokens=30, jaccard_threshold=0.5,
-                        val_fraction=0.2, seed=5)
-    # carry the pipeline's internal persist across the select so it
-    # survives until THIS frame is materialized and released
-    return carry_cache(out.select("doc_id", "split"), out)
+    return curate_corpus(docs, min_tokens=30, jaccard_threshold=0.5,
+                         val_fraction=0.2, seed=5).select("doc_id", "split")
 
 
 def q_dedup_components(spark, sf_dir):
@@ -3495,24 +3491,38 @@ FROM b JOIN a ON a.chrom = b.chrom AND {ov_ab}
 GROUP BY ALL
 """
 
-    stream_closest = _CTE + """, a3 AS (
-  SELECT DISTINCT chrom, start, "end" FROM a
-), cand AS (
-  SELECT a3.chrom, a3.start, a3."end",
+    # Two-phase candidates, so the ranking never sees every per-chromosome
+    # a x b pair: first the pairs with idist <= w, then the full
+    # per-chromosome pairs only for rows that have none of those. Exact:
+    # when a row has a windowed candidate, its minimal idist is <= w, so
+    # every candidate at the minimum (ties included) is in the window.
+    # The band join keeps every pair with idist <= w: overlapping pairs
+    # satisfy it, and otherwise idist - 1 >= max(b.start - a.end,
+    # a.start - b.end).
+    w = 10_000
+    pairs = """SELECT a3.chrom, a3.start, a3."end",
          b.bid, b.start AS ss, b."end" AS se, b.strand AS st,
          CASE WHEN a3.start < b."end" AND b.start < a3."end" THEN 0
               ELSE GREATEST(a3.start, b.start)
                    - LEAST(a3."end", b."end") + 1
          END AS idist
-  FROM a3 JOIN b ON a3.chrom = b.chrom
-), ranked AS (
-  SELECT *, ROW_NUMBER() OVER (
-     PARTITION BY chrom, start, "end" ORDER BY idist, ss, se) AS rk
-  FROM cand
+  FROM {a3} JOIN b ON a3.chrom = b.chrom"""
+    stream_closest = _CTE + f""", a3 AS (
+  SELECT DISTINCT chrom, start, "end" FROM a
+), near AS (
+  SELECT * FROM ({pairs.format(a3="a3")}
+    AND b.start <= a3."end" + {w} AND a3.start <= b."end" + {w})
+  WHERE idist <= {w}
+), cand AS (
+  SELECT * FROM near
+  UNION ALL
+  {pairs.format(a3='(SELECT * FROM a3 ANTI JOIN near USING (chrom, start, "end")) a3')}
 ), hits AS (
   SELECT chrom, start, "end", bid, ss, se, st,
          CASE WHEN idist = 0 THEN 0 ELSE idist - 1 END AS distance
-  FROM ranked WHERE rk = 1
+  FROM cand
+  QUALIFY ROW_NUMBER() OVER (
+     PARTITION BY chrom, start, "end" ORDER BY idist, ss, se) = 1
 )
 SELECT a.chrom, a.start, a."end",
        h.bid AS bid_ann,

@@ -1,14 +1,13 @@
 """Benchmark: headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
 Prints ONE COMPACT JSON line (totals + sentinel + worst-5 + the
-per-query medians map — the driver's per-query/scaling comparison reads
-it from here):
+per-query medians map):
 {"metric": "...", "value": N, "unit": "sec", "queries": {...}, ...}
 and writes the FULL per-query record (warm medians + cold firsts) to
-BENCH_LOCAL.json next to this file — the stdout line is captured from a
-2000-char bounded tail by the round driver and must never outgrow it
-again (BENCH_r06.json committed head-truncated at 47 queries; the
-medians-only line measures ~1.45 KB at 53 queries).
+BENCH_LOCAL.json next to this file. Readers of the stdout line keep a
+2000-char tail, so ``stdout_line`` drops the medians map when the line
+would outgrow that (the medians-only line measures ~1.45 KB at 53
+queries).
 
 Each query is timed end-to-end (plan + execute + materialization of every
 output column) after a warmup of the session. The timing action is a
@@ -34,6 +33,24 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from bioframe_spark.session import get_spark  # noqa: E402
 import __spark_entry__ as em  # noqa: E402
+
+
+LINE_MAX = 2000  # chars of stdout tail that readers of the line keep
+
+
+def stdout_line(rec: dict) -> str:
+    """``rec`` as one JSON line of at most LINE_MAX chars when possible:
+    an over-long line loses its per-query ``"queries"`` map (totals and
+    ``worst5`` stay; BENCH_LOCAL.json has the full record)."""
+    line = json.dumps(rec)
+    if len(line) > LINE_MAX:
+        line = json.dumps({k: v for k, v in rec.items() if k != "queries"})
+    return line
+
+
+def n_cached(spark) -> int:
+    """CacheManager entries: the only cache a re-run plan can replay."""
+    return spark._jsparkSession.sharedState().cacheManager().cachedData().size()
 
 
 def force_count(df) -> int:
@@ -142,7 +159,6 @@ def main():
     sentinel_df.count()  # materialize the cache outside the probe
 
     def probe_sentinel(reps: int = 3) -> float:
-        sentinel_df.cache().count()  # re-pin (query-loop cache resets drop it)
         samples = []
         for _ in range(reps):
             t0 = time.time()
@@ -165,19 +181,7 @@ def main():
         cached.count()
         pinned.append(cached)
         setattr(em, fn_name, lambda spark, sf_dir, _df=cached: _df)
-
-    def _n_persistent() -> int:
-        return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
-
-    def _reset_extra_caches():
-        # Ops with internal persists (the eager closest-binned ladder)
-        # leave cached intermediates behind; Spark's CacheManager matches
-        # an identical re-run's plan against them, so rep 2+ would time
-        # the cache, not the plan. Drop everything and re-pin the inputs
-        # (outside the timer) so every rep pays the full plan.
-        spark.catalog.clearCache()
-        for df in pinned:
-            df.cache().count()
+    n_pinned = len(pinned) + 1  # + the sentinel
 
     # Single-shot timings on a cold 32-core local JVM swing up to 5x
     # (JIT, codegen compilation, shuffle-file page cache). Run each query
@@ -223,13 +227,17 @@ def main():
         fn = qs[name]
         samples = []
         n = 0
-        base_cached = _n_persistent()
         for rep in range(reps):
             t0 = time.time()
-            n = force_count(fn(spark, sf_dir))
+            # the scope releases the query's internal persists, so no
+            # later rep replays them from the cache
+            with bf.scope():
+                n = force_count(fn(spark, sf_dir))
             samples.append(time.time() - t0)
-            if _n_persistent() > base_cached:
-                _reset_extra_caches()
+            if n_cached(spark) > n_pinned:
+                raise RuntimeError(
+                    f"{name} left {n_cached(spark) - n_pinned} cached frames "
+                    "beyond the pinned inputs")
         cold[name] = round(samples[0], 3)
         med = sorted(samples)[len(samples) // 2]
         times[name] = round(med, 3)
@@ -251,34 +259,17 @@ def main():
         # solo value ~0.1-0.2 s; 2x+ above that = contended snapshot
         "sentinel": {"pre": sentinel_pre, "post": sentinel_post},
     }
-    # The per-round artifact is captured from a BOUNDED TAIL of stdout
-    # (2000 chars in the committed BENCH_r*.json records): at 47 queries
-    # the full record (medians + colds) on one line outgrew it and
-    # BENCH_r06.json committed head-truncated ("parsed": null). Ship the
-    # full record as a committed file and keep the stdout line within the
-    # tail bound. r10 (VERDICT-r9 #2, additions-only): the stdout line
-    # regains the per-query MEDIANS map — without it the driver's PERF
-    # comparison had per_query: {} / n_common: 0 both optimization
-    # rounds. 53 medians ≈ 1.15 KB; measured line total 1.45 KB < 2000,
-    # and the cold map (the r6 overflow's other half) stays file-only.
+    # The full record (medians + colds) goes to a file; the cold map
+    # stays file-only, and stdout_line keeps the line in its tail bound.
     local_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                               "BENCH_LOCAL.json")
     with open(local_path, "w") as f:
         json.dump(full, f, indent=1, sort_keys=True)
         f.write("\n")
     worst5 = dict(sorted(times.items(), key=lambda kv: -kv[1])[:5])
-    print(json.dumps({
-        "metric": "bench_total",
-        "value": round(total, 3),
-        "unit": "sec",
-        "sf": sf,
-        "reps": reps,
-        "n_queries": len(times),
-        "sentinel": {"pre": sentinel_pre, "post": sentinel_post},
-        "worst5": worst5,
-        "queries": times,
-        "full": "BENCH_LOCAL.json",
-    }))
+    line = {k: v for k, v in full.items() if k not in ("cold", "queries")}
+    print(stdout_line({**line, "n_queries": len(times), "worst5": worst5,
+                       "queries": times, "full": "BENCH_LOCAL.json"}))
 
 
 if __name__ == "__main__":

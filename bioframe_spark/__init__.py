@@ -30,6 +30,7 @@ from .core.construction import (
     sanitize_bedframe,
 )
 from .core import checks
+from .core.persist import scope
 # numpy kernel compat layer, exported like the reference's
 # `from .core import arrops` (reference __init__.py)
 from .core import arrops

@@ -10,7 +10,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
+from ..core.persist import owns, persist
 from .text import tokens
 
 
@@ -98,6 +100,7 @@ def word_shingles(df: DataFrame, n: int = 3, text_col: str = "text",
     )
 
 
+@owns
 def ngram_jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
                         text_col: str = "text", id_col: str = "doc_id",
                         cache: bool | str = "auto",
@@ -118,10 +121,9 @@ def ngram_jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
     explode recompute (~2× wall locally). Default ``"auto"`` caches only
     while the INPUT is small (``spark.bioframe.shingleCacheBytes``,
     64 MB) — at 100 TB pinning an exploded ≫input-size frame is worse
-    than recomputing. When cached, the handle rides on the result
-    (``release_cache(out)`` unpersists it deterministically once the
-    result is materialized — never ``clearCache()``, which would evict
-    unrelated frames).
+    than recomputing. The cache is released with the result, or at the
+    end of an enclosing ``bioframe_spark.scope()`` (see
+    ``core/persist.py``).
 
     ``hash_shingles``: replace the shingle STRING join key (tens of
     bytes per exploded row, shuffled three ways) with its ``xxhash64``
@@ -203,7 +205,7 @@ def ngram_jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
             cache = _plan_size_bytes(df) <= _threshold(
                 df, "shingleCacheBytes", 64 << 20)
         if cache:
-            tbl = tbl.cache()
+            tbl = persist(tbl, StorageLevel.MEMORY_AND_DISK_DESER)
         sh = tbl.select(F.col(id_col), "__n_sh",
                         F.explode("__arr").alias("shingle"))
         if hash_shingles:
@@ -227,8 +229,6 @@ def ngram_jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
                     >= F.lit(threshold) * F.col("n_union"))
             .select("id1", "id2", "n_common", "n_union")
         )
-        if cache:
-            _ride_cache(out, [tbl])
         return out
     # aggregated-counts formulation: every max_doc_freq variant (eager
     # InSet / window / lazy anti-join) — see the docstring's r10 note
@@ -316,7 +316,7 @@ def ngram_jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
         cache = _plan_size_bytes(df) <= _threshold(
             df, "shingleCacheBytes", 64 << 20)
     if cache:
-        sh = sh.cache()
+        sh = persist(sh, StorageLevel.MEMORY_AND_DISK_DESER)
     counts = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.select(F.col(id_col).alias("id1"), "shingle")
     b = sh.select(F.col(id_col).alias("id2"), "shingle")
@@ -339,72 +339,7 @@ def ngram_jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
         .filter(F.col("n_common").cast("double") >= F.lit(threshold) * F.col("n_union"))
         .select("id1", "id2", "n_common", "n_union")
     )
-    if cache:
-        _ride_cache(out, [sh])
     return out
-
-
-def release_cache(df: DataFrame) -> None:
-    """Unpersist the internal frames an operator cached for
-    multi-consumer reuse (the handles ride on the result DataFrame).
-    Call once the result has been materialized — a deterministic
-    lifecycle, unlike ``spark.catalog.clearCache()`` which evicts every
-    cached frame in the session."""
-    for h in getattr(df, "_bioframe_cache", None) or []:
-        try:
-            h.unpersist()
-        except Exception:
-            # session already stopped — nothing left to free
-            pass
-
-
-def _unpersist_jdfs(jdfs) -> None:
-    for j in jdfs:
-        try:
-            j.unpersist(False)
-        except Exception:
-            pass
-
-
-def _ride_cache(out: DataFrame, handles: list) -> DataFrame:
-    """Attach persisted-handle lifecycle to a result DataFrame:
-    ``release_cache(out)`` frees the handles deterministically, and a
-    ``weakref.finalize`` backstop unpersists them when the result object
-    is garbage-collected — so a harness that materializes the result and
-    drops the reference (the oracle gate's loop shape) does not leak a
-    CacheManager entry for the session lifetime. DataFrame ``.persist``
-    registers in the JVM CacheManager, which — unlike raw RDD caches —
-    the ContextCleaner never evicts on GC; this finalizer is the
-    Python-side substitute.
-
-    The finalizer captures the JVM handles, NOT the Python DataFrames:
-    finalize args are strong references, so holding the Python objects
-    would pin a handle list containing ``out`` itself (the
-    ``incremental_dedup`` shape, where the persisted frame IS the
-    result) and the finalizer would never fire."""
-    import weakref
-
-    out._bioframe_cache = handles
-    out._bioframe_finalizer = weakref.finalize(
-        out, _unpersist_jdfs, [h._jdf for h in handles])
-    return out
-
-
-def carry_cache(derived: DataFrame, source: DataFrame) -> DataFrame:
-    """Move ride-on-result cache handles from ``source`` onto a frame
-    DERIVED from it (``source.select(...)`` etc.): without this, letting
-    ``source`` go out of scope fires its GC finalizer and unpersists the
-    internal caches BEFORE the derived plan (which still references
-    them) ever materializes — correct but re-executes the shared
-    subtrees the persist exists to share. No-op when ``source`` carries
-    no handles."""
-    handles = getattr(source, "_bioframe_cache", None)
-    if not handles:
-        return derived
-    fin = getattr(source, "_bioframe_finalizer", None)
-    if fin is not None:
-        fin.detach()
-    return _ride_cache(derived, handles)
 
 
 def _seeded_hash(col: Column, seed: int, hash_fn: str) -> Column:
@@ -872,9 +807,11 @@ def incremental_dedup(new_docs: DataFrame, path: str, *,
     (measured: probe ~flat across a 64× index growth, SCALING
     §12-r08). ``update=False`` = dry run (what WOULD survive).
     LSH parameters come from the stored meta, so every increment is
-    automatically consistent with the build. The returned frame is
-    persisted when ``update=True`` (it feeds both the index append and
-    the caller) — ``release_cache(result)`` / GC frees it."""
+    automatically consistent with the build. With ``update=True`` the
+    returned frame is a local checkpoint (it feeds both the index append
+    and the caller), not a persist: Spark frees its blocks once the
+    frame is garbage-collected, so no ``bioframe_spark.scope()`` is
+    needed around it."""
     # exclude_same_id=False: inside the increment loop a same-id match
     # IS a duplicate — a re-submitted document must be rejected against
     # its own earlier index entry, not excused by sharing its id
@@ -979,6 +916,7 @@ def _simhash_kernel(bits: int):
     return _sig
 
 
+@owns
 def simhash_dup_pairs(df: DataFrame, max_hamming: int = 3,
                       text_col: str = "text", id_col: str = "doc_id",
                       bits: int = 64, hash_fn: str = "xxhash64",
@@ -998,9 +936,9 @@ def simhash_dup_pairs(df: DataFrame, max_hamming: int = 3,
     under it) runs twice — measured 1.76 s vs 1.04 s at sf0.1. The
     cached frame is tiny (~16 bytes/doc: id + one long), so the
     ``"auto"`` gate (input plan size ≤
-    ``spark.bioframe.simhashCacheBytes``, 4 GB) is generous; the handle
-    rides on the result for ``release_cache()``, same lifecycle as
-    :func:`ngram_jaccard_pairs`.
+    ``spark.bioframe.simhashCacheBytes``, 4 GB) is generous; it is
+    released with the result or at the end of an enclosing
+    ``bioframe_spark.scope()``, as in :func:`ngram_jaccard_pairs`.
 
     PRECONDITION: ``id_col`` values must be UNIQUE (the normal dedup
     contract — ids are document keys). The kept-once rule emits one row
@@ -1036,7 +974,7 @@ def simhash_dup_pairs(df: DataFrame, max_hamming: int = 3,
     sig = simhash(df, text_col=text_col, id_col=id_col, bits=bits,
                   hash_fn=hash_fn)
     if cache:
-        sig = sig.cache()
+        sig = persist(sig, StorageLevel.MEMORY_AND_DISK_DESER)
     chunks = sig.select(
         id_col, "simhash", F.explode(chunks_arr).alias("c"),
     ).select(id_col, "simhash", "c.chunk_id", "c.chunk")
@@ -1066,8 +1004,6 @@ def simhash_dup_pairs(df: DataFrame, max_hamming: int = 3,
         .filter(F.col("chunk_id") == first_eq)
         .select("id1", "id2", "hamming")
     )
-    if cache:
-        _ride_cache(pairs, [sig])
     return pairs
 
 
@@ -1540,6 +1476,7 @@ def winnow_fingerprints(df: DataFrame, k: int = 25, w: int = 16,
     return sub.mapInPandas(gen, out_schema)
 
 
+@owns
 def duplicate_spans(df: DataFrame, k: int = 25, w: int = 16,
                     min_docs: int = 2, text_col: str = "text",
                     id_col: str = "doc_id",
@@ -1617,15 +1554,12 @@ def duplicate_spans(df: DataFrame, k: int = 25, w: int = 16,
     # each doc emits a fingerprint at most once -> count(*) keyed by the
     # fingerprint == distinct-doc count (null fingerprints are excluded
     # from dup-flagging below, their group is moot)
-    cache_handles = []
     if strategy == "join":
         # persist the emission: the stats aggregate and the join probe
         # side are two consumers, and exchange reuse cannot bridge an
         # agg/join pair (the agg's exchange carries partial rows) — the
-        # kernel would execute twice (plan_audit catch, §12-r07d);
-        # release_cache(result) frees it
-        ex = ex.persist()
-        cache_handles.append(ex)
+        # kernel would execute twice (plan_audit catch, §12-r07d)
+        ex = persist(ex, StorageLevel.MEMORY_AND_DISK_DESER)
         stats = ex.groupBy("__h").agg(F.count(F.lit(1)).alias("__nd"))
         # LEFT: null-fingerprint rows (short/null docs) never match but
         # must survive into the per-doc rollup
@@ -1648,8 +1582,6 @@ def duplicate_spans(df: DataFrame, k: int = 25, w: int = 16,
         "dup_frac",
         F.when(F.col("n_spans") > 0,
                F.round(F.col("n_dup_spans") / F.col("n_spans"), 9)))
-    if cache_handles:
-        _ride_cache(out, cache_handles)
     return out
 
 
@@ -1669,6 +1601,7 @@ def drop_duplicate_spans_docs(df: DataFrame, max_dup_frac: float = 0.5,
     return df.join(keep, id_col, "left_semi")
 
 
+@owns
 def remove_duplicate_spans(df: DataFrame, k: int = 25, w: int = 16,
                            min_docs: int = 2, text_col: str = "text",
                            id_col: str = "doc_id",
@@ -1708,9 +1641,9 @@ def remove_duplicate_spans(df: DataFrame, k: int = 25, w: int = 16,
     ``strategy="join"`` keeps the aggregate+join shape — its stats join
     is AQE-skew-splittable where a corpus-hot fingerprint would pin the
     window variant's partition on one task — and PERSISTS the kernel
-    emission so the two consumers share one execution
-    (``release_cache(result)`` frees it). The corpus text moves through
-    exactly one exchange in both modes.
+    emission so the two consumers share one execution (released with the
+    result, or at the end of an enclosing ``bioframe_spark.scope()``).
+    The corpus text moves through exactly one exchange in both modes.
     """
     if strategy not in ("window", "join"):
         raise ValueError(f"strategy must be 'window' or 'join', got "
@@ -1738,7 +1671,6 @@ def remove_duplicate_spans(df: DataFrame, k: int = 25, w: int = 16,
             yield pd.DataFrame({"__id": ids, "__h": hs, "__pos": ps})
 
     ex = sub.mapInPandas(gen_pos, pos_schema)
-    cache_handles = []
     if strategy == "window":
         w_ord = Window.partitionBy("__h").orderBy("__id", "__pos")
         w_all = Window.partitionBy("__h")
@@ -1755,8 +1687,7 @@ def remove_duplicate_spans(df: DataFrame, k: int = 25, w: int = 16,
                 .groupBy("__id")
                 .agg(F.collect_list("__pos").alias("__cuts")))
     else:
-        ex = ex.persist()
-        cache_handles.append(ex)
+        ex = persist(ex, StorageLevel.MEMORY_AND_DISK_DESER)
         stats = (ex.groupBy("__h")
                    .agg(F.count_distinct("__id").alias("__nd"),
                         F.min("__id").alias("__keeper"))
@@ -1808,10 +1739,7 @@ def remove_duplicate_spans(df: DataFrame, k: int = 25, w: int = 16,
                                 "n_cut_spans": nspans,
                                 "n_removed_chars": nchars})
 
-    out = joined.mapInPandas(gen_cut, out_schema)
-    if cache_handles:
-        _ride_cache(out, cache_handles)
-    return out
+    return joined.mapInPandas(gen_cut, out_schema)
 
 
 def span_dup_pairs(df: DataFrame, k: int = 25, w: int = 16,

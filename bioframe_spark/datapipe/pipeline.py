@@ -21,12 +21,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import (_ride_cache, drop_exact_duplicates,
-                    drop_near_duplicates, ngram_jaccard_pairs)
+from ..core.persist import owns, persist
+from .dedup import (drop_exact_duplicates, drop_near_duplicates,
+                    ngram_jaccard_pairs)
 from .sampling import train_val_split
 from .text import token_count
 
 
+@owns
 def curate_corpus(
     docs: DataFrame,
     min_tokens: int = 10,
@@ -55,17 +57,12 @@ def curate_corpus(
     # canonical anti-join; without a persist each consumer replays
     # scan -> gate -> dedup window -> semi join (r9; same shared-frame
     # persist convention as merge()'s premerge path and the CC edge
-    # cache)
-    from pyspark.storagelevel import StorageLevel
-    exact = exact.persist(StorageLevel.MEMORY_AND_DISK)
+    # cache). It and the pair miner's own persists live as long as the
+    # result, or until an enclosing scope() exits.
+    exact = persist(exact)
     pairs = ngram_jaccard_pairs(exact, n=n, threshold=jaccard_threshold,
                                 text_col=text_col, id_col=id_col,
                                 max_doc_freq=max_doc_freq)
     canonical = drop_near_duplicates(exact, pairs, id_col=id_col)
-    out = train_val_split(canonical, val_fraction, key_col=id_col,
-                          seed=seed)
-    # the persist handle rides on the result (release_cache /
-    # weakref-finalize lifecycle, same as dedup.py's internal caches) so
-    # repeated calls in a long-lived session don't accumulate
-    # corpus-sized CacheManager entries
-    return _ride_cache(out, [exact])
+    return train_val_split(canonical, val_fraction, key_col=id_col,
+                           seed=seed)

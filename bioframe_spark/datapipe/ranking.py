@@ -22,6 +22,9 @@ import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
+
+from ..core.persist import owns, persist
 
 TOKEN_SPLIT_RE = "[^a-z0-9]+"
 
@@ -266,6 +269,7 @@ def _bigram_structs(text_col: str):
                F.array().cast("array<struct<p:string,c:string>>")))
 
 
+@owns
 def bigram_lm_scores(df: DataFrame, *, ref: DataFrame | None = None,
                      add_k: float = 0.5,
                      id_col: str = "doc_id", text_col: str = "text",
@@ -298,10 +302,11 @@ def bigram_lm_scores(df: DataFrame, *, ref: DataFrame | None = None,
     # consumers — the V-scalar count and the scoring join; persisting
     # it makes the count action materialize the cache so the join reads
     # it back instead of re-running the reference explode+aggregate
-    # (the multi-consumer re-execution hazard, SCALING §12-r06c). The
-    # handle rides on the result for release_cache().
-    uni = (ref.select(F.explode(rtoks).alias("p"))
-           .groupBy("p").agg(F.count("*").alias("__uc"))).persist()
+    # (the multi-consumer re-execution hazard, SCALING §12-r06c). It is
+    # released with the result or at the end of an enclosing scope().
+    uni = persist(ref.select(F.explode(rtoks).alias("p"))
+                  .groupBy("p").agg(F.count("*").alias("__uc")),
+                  StorageLevel.MEMORY_AND_DISK_DESER)
     bi = (ref.select(F.explode(_bigram_structs(text_col)).alias("b"))
           .select("b.p", "b.c")
           .groupBy("p", "c").agg(F.count("*").alias("__bc")))
@@ -331,13 +336,11 @@ def bigram_lm_scores(df: DataFrame, *, ref: DataFrame | None = None,
                      .cast("long").alias("n_bigrams")))
     score = (F.round(F.col("score"), score_decimals)
              if score_decimals is not None else F.col("score"))
-    out = scored.select(F.col("__id").alias(id_col),
-                        score.alias("score"), "n_bigrams")
-    from .dedup import _ride_cache
-    _ride_cache(out, [uni])
-    return out
+    return scored.select(F.col("__id").alias(id_col),
+                         score.alias("score"), "n_bigrams")
 
 
+@owns
 def score_buckets(df: DataFrame, fractions: tuple = (1 / 3, 2 / 3), *,
                   score_col: str = "score",
                   bucket_col: str = "bucket",
@@ -360,10 +363,11 @@ def score_buckets(df: DataFrame, fractions: tuple = (1 / 3, 2 / 3), *,
     assignment). ``cache=True`` (default) persists ``df`` before the
     threshold action so an expensive upstream (a scoring pipeline's
     explode + joins) runs ONCE — the multi-consumer re-execution hazard
-    this repo's plan audit polices; the handle rides on the result for
-    :func:`~bioframe_spark.datapipe.dedup.release_cache` (with a GC
-    finalizer backstop). Set ``cache=False`` when the input is a cheap
-    raw scan: re-scanning parquet beats spilling a corpus-sized cache.
+    this repo's plan audit polices. The persist is released with the
+    result, or at the end of an enclosing ``bioframe_spark.scope()``; an
+    input the caller already cached is used as is and stays cached. Set
+    ``cache=False`` when the input is a cheap raw scan: re-scanning
+    parquet beats spilling a corpus-sized cache.
 
     Exact vs approximate thresholds: ``approx=False`` (default) uses
     Spark's exact ``percentile`` — linear-interpolation quantiles, the
@@ -384,10 +388,8 @@ def score_buckets(df: DataFrame, fractions: tuple = (1 / 3, 2 / 3), *,
     if not fr or any(not (0.0 < f < 1.0) for f in fr) or fr != sorted(fr):
         raise ValueError(
             "fractions must be strictly increasing values in (0, 1)")
-    handles = []
     if cache:
-        df = df.persist()
-        handles.append(df)
+        df = persist(df, StorageLevel.MEMORY_AND_DISK_DESER)
     frac_arr = F.array(*[F.lit(f) for f in fr])
     agg = (F.percentile_approx(F.col(score_col), frac_arr,
                                F.lit(int(approx_accuracy)))
@@ -405,9 +407,6 @@ def score_buckets(df: DataFrame, fractions: tuple = (1 / 3, 2 / 3), *,
         expr = F.when(F.col(score_col).isNull(),
                       F.lit(None).cast("int")).otherwise(expr)
         out = df.withColumn(bucket_col, expr.cast("int"))
-    if handles:
-        from .dedup import _ride_cache
-        _ride_cache(out, handles)
     return out
 
 

@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..core.persist import owns, persist
 from ..core.specs import _resolve_cols, _verify_columns
 from ..functions.intervals import overlap_predicate
 
@@ -594,8 +595,9 @@ def _closest_binned(
     # wall at sf0.1), and could never exit early; with the count we stop
     # as soon as every row has its k neighbors (round 1 usually finishes
     # all but the sparse tail). MEMORY_AND_DISK so a 100 TB remaining set
-    # spills instead of evicting.
-    from pyspark.storagelevel import StorageLevel
+    # spills instead of evicting. Every persist is released by the
+    # caller's owner (core/persist.py) except superseded remaining sets,
+    # which are unpersisted as soon as the next one is counted.
 
     # a zero-length df2 row exactly at INT64_MAX can never fall inside a
     # half-open probe window whose padded end saturates at INT64_MAX —
@@ -617,16 +619,10 @@ def _closest_binned(
     # df2 is scanned once per rung — persist it across the ladder so
     # rungs 2+ read the cache, not the source (the r4 ladder re-scanned
     # and re-measured df2 every escalation); skipped on the small path
-    # (a small scan costs less than the cache bookkeeping). A df2 the
-    # caller already cached stays theirs: only our own persist is
-    # released with the result.
-    handles = []  # the ladder's persists, released with the result
+    # (a small scan costs less than the cache bookkeeping)
     df2p = df2j
     if n_rounds > 1 and not small:
-        lvl = df2j.storageLevel
-        if not (lvl.useMemory or lvl.useDisk):
-            handles.append(df2j)
-        df2p = df2j.persist(StorageLevel.MEMORY_AND_DISK)
+        df2p = persist(df2j)
 
     done_parts = []
     remaining = d1
@@ -713,14 +709,12 @@ def _closest_binned(
             # already reached the span bound (completeness unconditional
             # — it keeps whatever candidates exist)
             ranked = ranked.filter((F.col("__cnt") >= k) | at_bound)
-        found = (
+        found = persist(
             ranked
             .withColumns({sk1 + sfx1: s1o, ek1 + sfx1: e1o})
             .drop("__rk", "__cnt", "__idist", "__cb_s" + sfx1,
-                  "__cb_e" + sfx1, "__cb_cap" + sfx1, "__cb_cap0" + sfx1)
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+                  "__cb_e" + sfx1, "__cb_cap" + sfx1, "__cb_cap0" + sfx1))
         done_parts.append(found)
-        handles.append(found)
 
         def _left_null(misses):
             null_cols = {c.name + sfx2: F.lit(None).cast(c.dataType)
@@ -743,9 +737,8 @@ def _closest_binned(
                 # uniform cap: a non-last rung's cap is < bound by the
                 # n_rounds construction, so the bound-exit branch below
                 # is provably empty — skip its anti-join entirely
-                nxt = remaining.join(
-                    matched_rids, "__cb_rid", "left_anti",
-                ).persist(StorageLevel.MEMORY_AND_DISK)
+                nxt = persist(remaining.join(
+                    matched_rids, "__cb_rid", "left_anti"))
             else:
                 # rows whose cap hit the bound THIS rung leave the
                 # ladder now either way: matched ones are in `found`;
@@ -759,9 +752,8 @@ def _closest_binned(
                 bound_rows = remaining.filter(cap_now >= F.lit(bound))
                 done_parts.append(_left_null(
                     bound_rows.join(matched_rids, "__cb_rid", "left_anti")))
-                nxt = remaining.filter(cap_now < F.lit(bound)).join(
-                    matched_rids, "__cb_rid", "left_anti",
-                ).persist(StorageLevel.MEMORY_AND_DISK)
+                nxt = persist(remaining.filter(cap_now < F.lit(bound)).join(
+                    matched_rids, "__cb_rid", "left_anti"))
             n_left = nxt.count()
             if remaining is not d1:
                 remaining.unpersist()
@@ -770,10 +762,6 @@ def _closest_binned(
                 # every row complete — no further rounds, no left-nulls
                 break
 
-    # the persists ride on the result, so a materialized-and-dropped
-    # closest leaves no CacheManager entry for the session lifetime
-    if remaining is not d1:
-        handles.append(remaining)
     out = done_parts[0]
     for part in done_parts[1:]:
         out = out.unionByName(part, allowMissingColumns=True)
@@ -802,8 +790,7 @@ def _closest_binned(
         if return_distance:
             keep_cols.append("distance")
         out = out.select(*keep_cols)
-    from ..datapipe.dedup import _ride_cache
-    return _ride_cache(out, handles)
+    return out
 
 
 def _closest_broadcast(
@@ -893,6 +880,7 @@ def _closest_broadcast(
     return out
 
 
+@owns
 def closest(
     df1: DataFrame,
     df2: DataFrame | None = None,
@@ -924,14 +912,13 @@ def closest(
     ``_CLOSEST_COGROUP_BYTES`` and the feature set allows it (self-mode
     and callable tie-breakers need a kernel strategy).
 
-    On the binned path the ladder's internal persists ride on the
-    returned frame: they are released when it is garbage-collected, or
-    at once by ``datapipe.dedup.release_cache``. A transform chained
-    straight onto the call (``bf.closest(a, b).filter(...)``) drops that
-    frame before the derived plan runs, which then recomputes the whole
-    ladder uncached. Keep the result referenced until the derived frame
-    has run, or hand the persists over with
-    ``datapipe.dedup.carry_cache(derived, result)``.
+    The binned path persists df2 and each ladder rung. Called outside a
+    scope, those persists are released when the returned frame is
+    garbage-collected; a transform chained straight onto the call
+    (``bf.closest(a, b).filter(...)``) drops that frame at once, and the
+    derived plan then recomputes the ladder uncached. Inside
+    ``with bf.scope():`` they stay cached until the block exits, so
+    derived frames run warm there.
     """
     if k < 1:
         raise ValueError("k>=1 required")

@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..core import construction
+from ..core.persist import owns
 from ..core.specs import _resolve_cols, _verify_columns
 from ..functions.intervals import overlap_predicate
 from .ops import merge, overlap, subtract
@@ -24,6 +25,7 @@ __all__ = [
 ]
 
 
+@owns
 def frac_gene_coverage(df: DataFrame, genes: DataFrame, cols=None) -> DataFrame:
     """Per interval: fraction of bp covered by genes + gene count
     (reference ``extras.py:357-386``, which fetches the UCSC mRNA table;

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..core import construction
+from ..core.persist import owns, persist
 from ..core.specs import _resolve_cols, _verify_columns
 from ..core.stringops import parse_region
 from ..functions.intervals import (
@@ -1140,14 +1141,9 @@ def _distinct_islands_ranged(df: DataFrame, ck: str, sk: str, ek: str, on: list,
     # consumer both read this frame; without it each consumer re-executes
     # scan → dedup agg → exchange → windows (no exchange reuse across the
     # branches — column pruning de-canonicalizes the subtrees). Same
-    # persist-the-shared-frame convention as merge()'s premerge path.
-    # The handle rides on the returned frame (``_bioframe_cache``) so the
-    # public caller can attach the release_cache / weakref-finalize
-    # lifecycle to its result — without it, repeated calls in a
-    # long-lived session accumulate CacheManager entries (r10 advisor).
-    from pyspark.storagelevel import StorageLevel
-    dd = dd.persist(StorageLevel.MEMORY_AND_DISK)
-    dd_handle = dd
+    # persist-the-shared-frame convention as merge()'s premerge path,
+    # released by the calling operator's owner (core/persist.py).
+    dd = persist(dd)
     # partitioning (keys, __rng) is preserved by the cache, so this
     # aggregate is map-side only (no exchange) over the persisted rows
     kcounts = dd.groupBy(*keys, "__rng").agg(F.max("__k").alias("__k"))
@@ -1172,9 +1168,7 @@ def _distinct_islands_ranged(df: DataFrame, ck: str, sk: str, ek: str, on: list,
     # range's first effective border get __ofs = the previous chain's last
     # island number
     dd = dd.withColumn("__island", F.col("__ofs") + F.col("__local_isl"))
-    out = dd.drop("__rng", "__M", "__b", "__local_isl", "__ofs", "__k")
-    out._bioframe_cache = [dd_handle]
-    return out
+    return dd.drop("__rng", "__M", "__b", "__local_isl", "__ofs", "__k")
 
 
 _RANGED_PILEUP_BYTES = 64 << 20  # pileup's two-phase ranged scan-sum
@@ -1441,6 +1435,7 @@ def _merge_local(df: DataFrame, ck, sk, ek, on, min_dist):
     return df.sparkSession.createDataFrame(rows, schema)
 
 
+@owns
 def merge(df: DataFrame, min_dist: int | None = 0, cols=None,
           on: list | None = None, range_width="auto",
           premerge="auto", local="auto") -> DataFrame:
@@ -1523,8 +1518,7 @@ def merge(df: DataFrame, min_dist: int | None = 0, cols=None,
             # persist the Arrow fuse executes once per branch (measured
             # 58 -> 33 s on the 64x ladder). The persisted frame is the
             # FUSED rows — small by construction when the fuse pays off.
-            from pyspark.storagelevel import StorageLevel
-            pm = pm.persist(StorageLevel.MEMORY_AND_DISK)
+            pm = persist(pm)
             if range_width_auto:
                 # adaptive post-fuse construction: the persist makes the
                 # SHRUNKEN row count exact and nearly free — when it
@@ -1541,11 +1535,9 @@ def merge(df: DataFrame, min_dist: int | None = 0, cols=None,
                 if n_pm <= _threshold(df, "premergeClassicRows",
                                       _PREMERGE_CLASSIC_ROWS):
                     range_width = None
-        handles = [pm]
         if range_width is not None:
             isl = _distinct_islands_ranged(pm, ck, sk, ek, on, min_dist,
                                            range_width, weight="__cnt")
-            handles += getattr(isl, "_bioframe_cache", [])
             out = isl.groupBy(ck, *on, "__island").agg(
                 F.min(sk).alias(sk),
                 F.max(ek).alias(ek),
@@ -1557,11 +1549,7 @@ def merge(df: DataFrame, min_dist: int | None = 0, cols=None,
         nulls_out = nulls.select(
             ck, sk, ek, *on, F.lit(None).cast("long").alias("n_intervals")
         )
-        # internal persists ride the result for deterministic release
-        # (release_cache + weakref-finalize backstop; dedup.py owns the
-        # single helper copy)
-        from ..datapipe.dedup import _ride_cache
-        return _ride_cache(out.unionByName(nulls_out), handles)
+        return out.unionByName(nulls_out)
     if range_width is not None:
         nulls, valid = _null_key_rows(df, ck, sk, ek, on)
         isl = _distinct_islands_ranged(valid, ck, sk, ek, on, min_dist, range_width)
@@ -1574,12 +1562,7 @@ def merge(df: DataFrame, min_dist: int | None = 0, cols=None,
         nulls_out = nulls.select(
             ck, sk, ek, *on, F.lit(None).cast("long").alias("n_intervals")
         )
-        out = out.unionByName(nulls_out)
-        handles = getattr(isl, "_bioframe_cache", [])
-        if handles:
-            from ..datapipe.dedup import _ride_cache
-            out = _ride_cache(out, handles)
-        return out
+        return out.unionByName(nulls_out)
     # Single-scan, single-shuffle, border-row path: null-key rows ride the
     # SAME window pass in their own partition group (flagged), so the
     # input is read once and no union branch exists.
@@ -1669,10 +1652,8 @@ def _cluster_islands(df: DataFrame, ck, sk, ek, on, min_dist,
     keys = [ck] + on
     if range_width is not None:
         isl_d = _distinct_islands_ranged(df, ck, sk, ek, on, min_dist, range_width)
-        cache_handles = getattr(isl_d, "_bioframe_cache", [])
     else:
         isl_d = _distinct_islands(df, ck, sk, ek, on, min_dist)
-        cache_handles = []
     # keep isl_d's consumer count minimal: every consumer re-expands the
     # whole distinct-islands subtree in the physical plan (no exchange
     # reuse), i.e. another scan + shuffle of the input at scale. Two
@@ -1723,7 +1704,6 @@ def _cluster_islands(df: DataFrame, ck, sk, ek, on, min_dist,
     totals = counts.agg(
         F.coalesce(F.sum("__n"), F.lit(0)).cast("long").alias("__base"))
     out = out.drop(*["__k_" + k for k in keys], "__ofs")
-    out._bioframe_cache = cache_handles
     return out, totals
 
 
@@ -1842,6 +1822,7 @@ def _cluster_premerged(df: DataFrame, ck, sk, ek, on, min_dist):
     return assigned, len(cl)
 
 
+@owns
 def cluster(df: DataFrame, min_dist: int | None = 0, cols=None,
             on: list | None = None, return_input: bool = True,
             return_cluster_ids: bool = True,
@@ -1901,12 +1882,10 @@ def cluster(df: DataFrame, min_dist: int | None = 0, cols=None,
             clustered, n_real = res
             totals = df.sparkSession.range(1).select(
                 F.lit(n_real).cast("long").alias("__base"))
-    cluster_handles = []
     if clustered is None:
         range_width = _auto_range_width(df, sk, ek, range_width)
         clustered, totals = _cluster_islands(valid, ck, sk, ek, on, min_dist,
                                              range_width=range_width)
-        cluster_handles = getattr(clustered, "_bioframe_cache", [])
         clustered = clustered.drop("__island")
     # null rows: singleton clusters numbered after the real ones; the
     # base comes from the aggregated island counts, NOT from
@@ -1939,11 +1918,6 @@ def cluster(df: DataFrame, min_dist: int | None = 0, cols=None,
     if not return_input:
         out = out.select([c for c in ["cluster", "cluster_start", "cluster_end"]
                           if c in out.columns])
-    if cluster_handles:
-        # internal ranged-islands persist rides the result (release_cache
-        # + weakref-finalize lifecycle — see _distinct_islands_ranged)
-        from ..datapipe.dedup import _ride_cache
-        out = _ride_cache(out, cluster_handles)
     return out
 
 
@@ -2315,6 +2289,7 @@ def count_overlaps(df1: DataFrame, df2: DataFrame, suffixes=("", "_"),
     return out if return_input else out.select("count")
 
 
+@owns
 def coverage(df1: DataFrame, df2: DataFrame, suffixes=("", "_"),
              return_input: bool = True, cols1=None, cols2=None,
              strategy: str = "auto") -> DataFrame:
@@ -2390,12 +2365,9 @@ def coverage(df1: DataFrame, df2: DataFrame, suffixes=("", "_"),
         .withColumn("coverage", F.coalesce(F.col("__cov"), F.lit(0)))
         .drop("__cc", "__cs", "__ce", "__cov")
     )
-    out = out if return_input else out.select("coverage")
-    # move merge's internal persist (if any) onto THIS result: left on
-    # m2, its finalizer would unpersist the frames when m2 goes out of
-    # scope at return, before the coverage plan ever runs
-    from ..datapipe.dedup import carry_cache
-    return carry_cache(out, m2)
+    # merge(df2) joins this call's owner, so its persists live as long
+    # as the coverage result, not as long as m2
+    return out if return_input else out.select("coverage")
 
 
 def _complement_infinite(df: DataFrame, ck: str, sk: str, ek: str) -> DataFrame:

@@ -342,39 +342,3 @@ def test_closest_binned_releases_ladder_persists(spark):
     del out
     gc.collect()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-
-
-def test_closest_binned_chained_keeps_ladder_persists(spark):
-    # a transform chained on the result drops the closest frame at once;
-    # carry_cache hands the rung persists to the derived frame, so they
-    # are still cached when it runs and are released with it. Without
-    # the hand-off the derived plan recomputes the ladder: same rows.
-    import gc
-
-    from pyspark.sql import functions as F
-
-    from bioframe_spark.datapipe import dedup
-
-    spark.catalog.clearCache()
-    a = [("chr%d" % (i % 3), 37 * i, 37 * i + 20) for i in range(3000)]
-    b = [("chr%d" % (i % 3), 371 * i + 5, 371 * i + 40) for i in range(300)]
-    d1, d2 = ivals(spark, a), ivals(spark, b)
-    want = sorted(bf.closest(d1, d2, strategy="cogroup")
-                  .filter(F.col("distance") < 100).collect())
-    spark.catalog.clearCache()
-
-    res = bf.closest(d1, d2, strategy="binned")
-    handles = res._bioframe_cache
-    derived = dedup.carry_cache(res.filter(F.col("distance") < 100), res)
-    del res
-    gc.collect()
-    assert handles and all(h.storageLevel.useMemory or h.storageLevel.useDisk
-                           for h in handles)
-    assert sorted(derived.collect()) == want
-    dedup.release_cache(derived)
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-
-    plain = bf.closest(d1, d2, strategy="binned").filter(
-        F.col("distance") < 100)
-    gc.collect()
-    assert sorted(plain.collect()) == want

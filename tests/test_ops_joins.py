@@ -154,21 +154,20 @@ def test_coverage_keeps_merge_persist_alive(spark):
     # createDataFrame inputs estimate at 1<<60 bytes, so the join path's
     # merge(df2) premerges and persists its fused frame; that persist
     # must survive coverage() returning (and merge's own result being
-    # collected) until the coverage result is released
+    # collected) until the coverage result is dropped
     import gc
 
-    from bioframe_spark.datapipe import dedup
-
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
     d1 = ivals(spark, [("chr1", 10 * i, 10 * i + 25) for i in range(40)])
     d2 = ivals(spark, [("chr1", 7 * i, 7 * i + 5) for i in range(60)])
     out = bf.coverage(d1, d2)
     gc.collect()
-    handles = getattr(out, "_bioframe_cache", None)
-    assert handles
-    assert all(h.storageLevel.useMemory for h in handles)
+    assert not cm.isEmpty()
     assert out.count() == 40
-    dedup.release_cache(out)
-    assert not any(h.storageLevel.useMemory for h in handles)
+    del out
+    gc.collect()
+    assert cm.isEmpty()
 
 
 def test_count_overlaps_coverage_return_input_false(spark):

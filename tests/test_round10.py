@@ -1,7 +1,6 @@
 """Round-10 optimization pins: jaccard counts-ride equivalence, hot-list
-InSet/anti-join equivalence, ride-cache lifecycle on the ranged islands
-persist, carry_cache hand-off, and the streaming state-shuffle sizing
-helper."""
+InSet/anti-join equivalence, the ranged islands persist's owner, and the
+streaming state-shuffle sizing helper."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -48,46 +47,15 @@ def test_jaccard_hot_list_inset_vs_antijoin(spark, docs):
     assert inset == anti and len(inset) > 0
 
 
-def test_jaccard_ride_cache_lifecycle(spark, docs):
-    out = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.3)
-    out.count()
-    handles = getattr(out, "_bioframe_cache", None)
-    assert handles and handles[0].storageLevel.useMemory
-    dedup.release_cache(out)
-    assert not handles[0].storageLevel.useMemory
-
-
 def test_ranged_islands_persist_rides_merge_result(spark):
     rows = [("chr1", 10 * i, 10 * i + 15) for i in range(500)]
     df = spark.createDataFrame(rows, "chrom string, start long, end long")
-    out = bf.merge(df, min_dist=0, range_width=100)
-    out.count()
-    handles = getattr(out, "_bioframe_cache", None)
-    assert handles, "ranged merge result should carry the islands persist"
-    assert any(h.storageLevel.useMemory or h.storageLevel.useDisk
-               for h in handles)
-    dedup.release_cache(out)
-    assert not any(h.storageLevel.useMemory for h in handles)
-
-
-def test_carry_cache_moves_handles_and_finalizer(spark, docs):
-    src = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.3)
-    assert getattr(src, "_bioframe_cache", None)
-    derived = dedup.carry_cache(src.select("id1", "id2"), src)
-    handles = derived._bioframe_cache
-    # the source's finalizer was detached: dropping src must NOT
-    # unpersist the handles while the derived frame is alive
-    import gc
-
-    del src
-    gc.collect()
-    derived.count()
-    assert any(h.storageLevel.useMemory for h in handles)
-    dedup.release_cache(derived)
-    assert not any(h.storageLevel.useMemory for h in handles)
-    # no-op on a frame without handles
-    plain = spark.range(3)
-    assert dedup.carry_cache(plain, spark.range(2)) is plain
+    with bf.scope() as held:
+        bf.merge(df, min_dist=0, range_width=100).count()
+        assert held, "ranged merge should persist its islands"
+        assert any(h.storageLevel.useMemory or h.storageLevel.useDisk
+                   for h in held)
+    assert not any(h.storageLevel.useMemory for h in held)
 
 
 def test_sized_state_shuffle_restores_conf(spark):

@@ -319,24 +319,23 @@ def test_jaccard_cache_auto_and_release(spark, tmp_path):
     docs.write.parquet(p)
     docs = spark.read.parquet(p)
 
-    # small input -> auto caches, and the handle rides on the result
-    out = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.1)
-    out.count()
-    handles = getattr(out, "_bioframe_cache", None)
-    assert handles and handles[0].storageLevel.useMemory
-    dedup.release_cache(out)
-    assert not handles[0].storageLevel.useMemory
+    # small input -> auto caches; the scope releases the cache
+    with bf.scope() as held:
+        dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.1).count()
+        assert len(held) == 1 and held[0].storageLevel.useMemory
+    assert not held[0].storageLevel.useMemory
 
-    # forced-off path never attaches a handle
-    out2 = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.1, cache=False)
-    assert getattr(out2, "_bioframe_cache", None) is None
-    dedup.release_cache(out2)  # no-op, must not raise
+    # forced-off path never persists
+    with bf.scope() as held:
+        dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.1, cache=False)
+    assert held == []
 
     # "big input" via a tiny conf bar -> auto resolves to off
     spark.conf.set("spark.bioframe.shingleCacheBytes", "1")
     try:
-        out3 = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.1)
-        assert getattr(out3, "_bioframe_cache", None) is None
+        with bf.scope() as held:
+            dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.1)
+        assert held == []
     finally:
         spark.conf.unset("spark.bioframe.shingleCacheBytes")
 

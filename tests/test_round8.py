@@ -1,7 +1,5 @@
-"""Round-8 additions: cache-handle lifecycle (GC finalizer backstop),
-the explicit ``coarse=`` assignment contract, and score_buckets'
-single-execution / approx-threshold knobs (the four r7 ADVICE items)."""
-import gc
+"""Round-8 additions: the explicit ``coarse=`` assignment contract and
+score_buckets' single-execution / approx-threshold knobs."""
 import logging
 import time
 
@@ -9,6 +7,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+import bioframe_spark as bf
 from bioframe_spark.datapipe import dedup, ranking, similarity
 
 
@@ -24,46 +23,6 @@ def _wait_cached(spark, n, timeout=10.0):
             return True
         time.sleep(0.1)
     return _n_cached(spark) <= n
-
-
-def _docs(spark):
-    base = "the quick brown fox jumps over the lazy dog again and again "
-    return spark.createDataFrame(
-        [(i, base * 3 + f"tail {i % 2}") for i in range(8)],
-        "doc_id long, text string")
-
-
-def test_ride_cache_finalizer_releases_on_gc(spark):
-    """A harness that materializes a cache-carrying result and drops the
-    reference (the oracle gate's loop shape) must not leak a CacheManager
-    entry for the session lifetime: the weakref finalizer unpersists the
-    handles when the result object is collected (ADVICE r7 #1)."""
-    spark.catalog.clearCache()
-    base = _n_cached(spark)
-    out = dedup.duplicate_spans(_docs(spark), k=5, w=4, strategy="join")
-    handles = out._bioframe_cache
-    out.count()
-    assert _n_cached(spark) > base, "join strategy should persist its emission"
-    del out
-    gc.collect()
-    assert _wait_cached(spark, base), \
-        "GC of the result must unpersist the ridden handles"
-    del handles
-
-
-def test_release_cache_then_gc_is_safe(spark):
-    """Explicit release stays the deterministic path; the finalizer
-    firing afterwards (double unpersist) must be a no-op."""
-    spark.catalog.clearCache()
-    base = _n_cached(spark)
-    out = ranking.bigram_lm_scores(_docs(spark))
-    n = out.count()
-    assert n == 8
-    assert getattr(out, "_bioframe_cache", None)
-    dedup.release_cache(out)
-    assert _wait_cached(spark, base)
-    del out
-    gc.collect()  # finalizer double-fire: must not raise
 
 
 def _clustered(spark, n_cent=12, per=5, dim=8, seed=3):
@@ -156,25 +115,26 @@ def test_score_buckets_single_execution_and_release(spark):
     """ADVICE r7 #3: the upstream scoring plan must run once. cache=True
     persists the input before the threshold action; the assignment pass
     reads the cache (InMemoryTableScan in the executed plan), and the
-    handle follows the release_cache lifecycle."""
+    enclosing scope releases it."""
     spark.catalog.clearCache()
     base = _n_cached(spark)
     df = spark.createDataFrame(
         [(i, float(i)) for i in range(9)] + [(99, None)],
         "doc_id long, score double")
-    out = ranking.score_buckets(df)
-    got = {r["doc_id"]: r["bucket"] for r in out.collect()}
-    assert got == {0: 0, 1: 0, 2: 0, 3: 1, 4: 1, 5: 1,
-                   6: 2, 7: 2, 8: 2, 99: None}
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" in plan or "TableCacheQueryStage" in plan
-    assert getattr(out, "_bioframe_cache", None)
-    dedup.release_cache(out)
+    with bf.scope() as held:
+        out = ranking.score_buckets(df)
+        got = {r["doc_id"]: r["bucket"] for r in out.collect()}
+        assert got == {0: 0, 1: 0, 2: 0, 3: 1, 4: 1, 5: 1,
+                       6: 2, 7: 2, 8: 2, 99: None}
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" in plan or "TableCacheQueryStage" in plan
+        assert held
     assert _wait_cached(spark, base)
-    # cache=False: no handle, identical values
-    out2 = ranking.score_buckets(df, cache=False)
-    assert not getattr(out2, "_bioframe_cache", None)
-    assert {r["doc_id"]: r["bucket"] for r in out2.collect()} == got
+    # cache=False: no persist, identical values
+    with bf.scope() as held:
+        out2 = ranking.score_buckets(df, cache=False)
+        assert {r["doc_id"]: r["bucket"] for r in out2.collect()} == got
+    assert held == []
 
 
 def test_score_buckets_approx_thresholds(spark):

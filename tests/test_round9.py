@@ -332,7 +332,6 @@ def test_compact_minhash_index_preserves_probe(spark, tmp_path):
         "doc_id long, text string")
     kept = dedup.incremental_dedup(batch, path, threshold=0.5)
     assert sorted(r["doc_id"] for r in kept.collect()) == [201]
-    dedup.release_cache(kept)
 
 
 def test_minhash_index_writes_are_size_targeted(spark, tmp_path):

@@ -59,6 +59,7 @@ def main():
     only = set(args[1:])
 
     import __spark_entry__ as entrymod
+    import bioframe_spark as bf
     from bioframe_spark.session import get_spark
 
     spark = get_spark("check_oracle", cpus=8, shuffle_partitions=16)
@@ -76,14 +77,10 @@ def main():
             continue
         t0 = time.time()
         try:
-            res = fn(spark, sf_dir)
-            sdf = res.toPandas()
-            # ops that persist internal frames for multi-consumer reuse
-            # ride the handles on the result — free them now that the
-            # query is materialized (ADVICE r7: the harness leaked one
-            # cached dataset per q_dup_spans_join / q_lm_score run)
-            from bioframe_spark.datapipe.dedup import release_cache
-            release_cache(res)
+            # the scope releases the query's internal persists once its
+            # result is materialized
+            with bf.scope():
+                sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:
             results[name] = f"SPARK ERROR: {e}"
             print(f"[{name}] SPARK ERROR: {e}")

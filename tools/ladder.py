@@ -24,10 +24,12 @@ on first use (pin time is kept out of the timer):
   grow k times and semdedup keeps every copy.
 
 Each rep is timed end to end (construction, eager jobs, and
-``bench.force_count``). When a rep leaves CacheManager entries beyond
-the pinned inputs (a leaked persist the next rep would replay), the
-cache is cleared and the inputs re-pinned outside the timer. The report gives the median and row count per rung and the
-exponent log(t_max/t_min)/log(k_max/k_min): ~1 is linear. Queries that
+``bench.force_count``) inside ``bioframe_spark.scope()``, which releases
+the case's internal persists after the timer stops. A rep that still
+leaves CacheManager entries beyond the pinned inputs (a leaked persist
+the next rep would replay) stops the run with an error naming the case.
+The report gives the median and row count per rung and the exponent
+log(t_max/t_min)/log(k_max/k_min): ~1 is linear. Queries that
 read parquet without the registry loaders (semdedup, sample_users)
 run unreplicated.
 
@@ -51,7 +53,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 import __spark_entry__ as em  # noqa: E402
 import bioframe_spark as bf  # noqa: E402
-from bench import force_count  # noqa: E402
+from bench import force_count, n_cached  # noqa: E402
 from bioframe_spark.datapipe import dedup, ranking, similarity, tokenize  # noqa: E402
 from bioframe_spark.session import get_spark  # noqa: E402
 
@@ -142,16 +144,6 @@ class Rung:
             _ORIG["ivals_" + name](self.spark, self.sf_dir)
             .select("chrom", "start", "end"), k))
 
-    def repin(self):
-        self.spark.catalog.clearCache()
-        for df in self.pins.values():
-            df.cache().count()
-
-    def n_cached(self):
-        """CacheManager entries: the only cache a re-run plan can replay."""
-        return (self.spark._jsparkSession.sharedState().cacheManager()
-                .cachedData().size())
-
 
 def _docs(x):
     return x.table(x.spark, x.sf_dir, "documents")
@@ -236,14 +228,16 @@ def run_case(x, registry, name, reps):
     for _ in range(reps):
         x.spark.sparkContext.setJobDescription(f"ladder:{name}@{x.k}x")
         pin_s = x.pin_s
-        t0 = time.time()
-        out = (CASES[name](x) if name in CASES
-               else registry[name](x.spark, x.sf_dir))
-        n = force_count(out) if isinstance(out, DataFrame) else 1
-        samples.append(time.time() - t0 - (x.pin_s - pin_s))
-        del out
-        if x.n_cached() > len(x.pins):
-            x.repin()
+        with bf.scope():  # released outside the timer
+            t0 = time.time()
+            out = (CASES[name](x) if name in CASES
+                   else registry[name](x.spark, x.sf_dir))
+            n = force_count(out) if isinstance(out, DataFrame) else 1
+            samples.append(time.time() - t0 - (x.pin_s - pin_s))
+        if n_cached(x.spark) > len(x.pins):
+            raise RuntimeError(
+                f"{name}@{x.k}x left {n_cached(x.spark) - len(x.pins)} "
+                "cached frames beyond the pinned inputs")
     med = sorted(samples)[len(samples) // 2]
     print(f"k={x.k:<3d} {name:28s} median {med:8.2f}s "
           f"reps {[round(s, 2) for s in samples]} ({n} rows)", flush=True)

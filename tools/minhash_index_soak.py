@@ -27,6 +27,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bioframe_spark as bf  # noqa: E402
 from bioframe_spark.session import get_spark  # noqa: E402
 from bioframe_spark.datapipe import dedup  # noqa: E402
 
@@ -88,9 +89,9 @@ def main():
         t_probe = time.time() - t0
 
         t0 = time.time()
-        kept = dedup.incremental_dedup(batch, path, threshold=0.5)
-        n_kept = kept.count()
-        dedup.release_cache(kept)
+        with bf.scope():
+            n_kept = dedup.incremental_dedup(batch, path,
+                                             threshold=0.5).count()
         t_inc = time.time() - t0
         corpus.extend((r[0], r[1]) for r in rows)
 
