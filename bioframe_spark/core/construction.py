@@ -28,20 +28,37 @@ def _spark() -> SparkSession:
     return SparkSession.active()
 
 
-def local_df(rows: list, schema: T.StructType) -> DataFrame:
-    """Small driver-side rows → DataFrame as a Catalyst **LocalRelation**.
+def local_df(data, schema) -> DataFrame:
+    """Driver-side data → DataFrame as a Catalyst **LocalRelation**.
 
-    ``createDataFrame(list, schema)`` parallelizes through an RDD
-    (LogicalRDD): every downstream action — including each broadcast
-    rebuild — runs a cluster job with Python serialization (~0.6 s
-    measured for an 8-row view). Routing through pandas produces a
-    LocalRelation instead: rows live in the plan, broadcasts build
-    driver-side, and Catalyst can constant-fold into them (~6× faster
-    per action). Every view/chromsizes-shaped helper funnels here."""
-    import pandas as pd
+    The one way package code turns driver data into a frame. ``data``
+    is a list of row tuples, a pandas frame or a pyarrow Table;
+    ``schema`` a ``StructType`` or DDL string. Everything goes through
+    Arrow into the JVM, which keeps the rows in the plan: broadcasts
+    build driver-side, Catalyst can constant-fold into the rows, and no
+    action over the frame runs a Python worker. ``createDataFrame(list)``
+    instead parallelizes a pickled Python RDD (LogicalRDD): every
+    downstream action, including each broadcast rebuild, runs a cluster
+    job with Python serialization (~0.6 s measured for an 8-row view,
+    ~6× a LocalRelation).
 
-    pdf = pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-    return _spark().createDataFrame(pdf, schema)
+    Rows are converted column by column with the schema's Arrow types,
+    so int64 values (INT64_MAX sentinels included) never pass through
+    float64, even next to nulls. A pandas frame takes Spark's own
+    pandas→Arrow conversion."""
+    import pyarrow as pa
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    if not isinstance(data, pa.Table) and not hasattr(data, "iloc"):
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        asch = to_arrow_schema(schema)
+        cols = list(zip(*data)) or [()] * len(asch)
+        data = pa.Table.from_arrays(
+            [pa.array(list(c), type=f.type) for c, f in zip(cols, asch)],
+            schema=asch)
+    return _spark().createDataFrame(data, schema)
 
 
 def from_series(regions, cols=None) -> DataFrame:

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..core.construction import local_df
 from .ranking import _doc_tokens
 
 
@@ -101,7 +102,6 @@ def train_quality_classifier(df: DataFrame, *, label_col: str = "label",
 
     if epochs < 1:
         raise ValueError(f"epochs must be >= 1, got {epochs}")
-    spark = df.sparkSession
     base = _slotted(
         df.filter(F.col(label_col).isNotNull()
                   & F.col(text_col).isNotNull()),
@@ -123,7 +123,7 @@ def train_quality_classifier(df: DataFrame, *, label_col: str = "label",
     history = []
     try:
         for _ in range(int(epochs)):
-            wdf = spark.createDataFrame(
+            wdf = local_df(
                 [(int(s), float(w[s])) for s in np.flatnonzero(w)],
                 "slot long, weight double")
             margin = (base.join(F.broadcast(wdf), "slot", "left")
@@ -210,7 +210,6 @@ def hashed_text_score(df: DataFrame, weights, *, dim: int | None = None,
     broadcast is the point of the hashing trick."""
     import numpy as np
 
-    spark = df.sparkSession
     if isinstance(weights, np.ndarray):
         if dim is not None and dim != len(weights) - 1:
             raise ValueError(f"dim={dim} disagrees with weight vector "
@@ -227,8 +226,7 @@ def hashed_text_score(df: DataFrame, weights, *, dim: int | None = None,
             items = _collect_weight_rows(weights, int(dim))
         else:
             items = [(int(s), float(v)) for s, v in sorted(weights.items())]
-    wdf = spark.createDataFrame(items or [(int(-1), 0.0)],
-                                "slot long, weight double")
+    wdf = local_df(items or [(int(-1), 0.0)], "slot long, weight double")
     slotted = _slotted(df, id_col, text_col, int(dim), hash_fn)
     summed = (slotted.join(F.broadcast(wdf), "slot", "left")
               .groupBy("__id")

@@ -12,6 +12,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..core.construction import local_df
 from ..core.persist import owns, persist
 from .text import tokens
 
@@ -303,7 +304,7 @@ def ngram_jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.5,
             # implausibly many hot keys: keep the lazy formulation
             sh = sh.join(F.broadcast(hot), key == F.col("__k"), "left_anti")
         elif len(hot_pdf) > inset_max:
-            hot_local = df.sparkSession.createDataFrame(hot_pdf)
+            hot_local = local_df(hot_pdf, hot.schema)
             sh = sh.join(F.broadcast(hot_local), key == F.col("__k"),
                          "left_anti")
         elif len(hot_pdf):
@@ -580,8 +581,7 @@ def build_minhash_index(df: DataFrame, path: str, *, num_hashes: int = 32,
                              df, bands)
     out.write.mode("overwrite").partitionBy("band") \
         .parquet(f"{path}/banded")
-    spark = df.sparkSession
-    spark.createDataFrame(
+    local_df(
         [(int(num_hashes), int(bands), int(n), hash_fn)],
         "num_hashes int, bands int, n int, hash_fn string",
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..core.construction import local_df
 from ..core.persist import owns, persist
 
 TOKEN_SPLIT_RE = "[^a-z0-9]+"
@@ -216,8 +217,7 @@ def linear_text_score(df: DataFrame, weights: dict[str, float], *,
     """
     if not weights:
         raise ValueError("linear_text_score: empty weights")
-    spark = df.sparkSession
-    wdf = spark.createDataFrame(
+    wdf = local_df(
         [(t, float(v)) for t, v in sorted(weights.items())],
         "token string, weight double")
     from ..operators.ops import _spread_if_underpartitioned
@@ -269,7 +269,6 @@ def _bigram_structs(text_col: str):
                F.array().cast("array<struct<p:string,c:string>>")))
 
 
-@owns
 def bigram_lm_scores(df: DataFrame, *, ref: DataFrame | None = None,
                      add_k: float = 0.5,
                      id_col: str = "doc_id", text_col: str = "text",
@@ -298,15 +297,12 @@ def bigram_lm_scores(df: DataFrame, *, ref: DataFrame | None = None,
         raise ValueError("add_k must be > 0 (unsmoothed zeros undefined)")
 
     rtoks = _doc_tokens(text_col)
-    # the unigram table is VOCAB-sized (not corpus-sized) and has two
-    # consumers — the V-scalar count and the scoring join; persisting
-    # it makes the count action materialize the cache so the join reads
-    # it back instead of re-running the reference explode+aggregate
-    # (the multi-consumer re-execution hazard, SCALING §12-r06c). It is
-    # released with the result or at the end of an enclosing scope().
-    uni = persist(ref.select(F.explode(rtoks).alias("p"))
-                  .groupBy("p").agg(F.count("*").alias("__uc")),
-                  StorageLevel.MEMORY_AND_DISK_DESER)
+    # the unigram table has two consumers, the V-scalar count and the
+    # scoring join, so the join re-runs its explode+aggregate; a persist
+    # of it did not pay on the ladder (SCALING §19, without/with: 1.03
+    # at 1x, 0.89 at 4x), so there is none
+    uni = (ref.select(F.explode(rtoks).alias("p"))
+           .groupBy("p").agg(F.count("*").alias("__uc")))
     bi = (ref.select(F.explode(_bigram_structs(text_col)).alias("b"))
           .select("b.p", "b.c")
           .groupBy("p", "c").agg(F.count("*").alias("__bc")))
@@ -452,7 +448,7 @@ def bm25_scores_many(df: DataFrame, queries: dict[str, str], *,
     avgdl = float(avgdl or 0.0) or 1.0
 
     dft = tf.groupBy("__tok").agg(F.count("*").alias("__dft"))
-    qmap = df.sparkSession.createDataFrame(
+    qmap = local_df(
         [(q, t) for q, ts in qterms.items() for t in ts],
         "query_id string, __tok string")
     idf = F.log(F.lit(1.0) + (F.lit(float(n_docs)) - F.col("__dft")

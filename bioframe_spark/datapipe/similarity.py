@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..core.construction import local_df
+
 QUANT = 1000
 
 
@@ -409,7 +411,6 @@ def kmeans_centroids(
 
     from pyspark.sql import types as T
 
-    spark = corpus.sparkSession
     id_type = corpus.schema[id_col].dataType
     init = corpus.orderBy(id_col).limit(n_centroids).select(
         F.col(id_col).alias("cent_id"),
@@ -475,9 +476,8 @@ def kmeans_centroids(
              "cvec": [x / r["n"] for x in r["psum"]]}
             for r in combined
         ]
-    return spark.createDataFrame(
-        [(r["cent_id"], r["cvec"]) for r in cent_rows], out_schema
-    )
+    return local_df([(r["cent_id"], r["cvec"]) for r in cent_rows],
+                    out_schema)
 
 
 def ivf_topk(
@@ -801,8 +801,7 @@ def build_ivf_index(corpus: DataFrame, path: str,
     # init) would store centroids that disagree with the postings.
     cent_rows = cents.orderBy("cent_id").collect()
     cid_type = cents.schema["cent_id"].dataType
-    spark = corpus.sparkSession
-    spark.createDataFrame(cent_rows, cents.schema).coalesce(1) \
+    local_df(cent_rows, cents.schema).coalesce(1) \
         .write.mode("overwrite").parquet(f"{path}/centroids")
     postings = _centroid_assign(corpus, cent_rows, cid_type, id_col,
                                 vec_col, "neighbor_id", "cv", "cn", 1,

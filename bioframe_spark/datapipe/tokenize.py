@@ -31,6 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..core.construction import local_df
 from .ranking import _doc_tokens
 
 END_OF_WORD = "</w>"
@@ -179,15 +180,13 @@ def bpe_train(df: DataFrame, n_merges: int = 100, *,
     pdf = _bounded_pdf(wf, int(max_words), probe=False)
     if pdf is None:  # pragma: no cover — limit() makes this unreachable
         raise RuntimeError("word-frequency collect exceeded max_words")
-    spark = df.sparkSession
     schema = "rank int, left string, right string"
     if not len(pdf):
-        return spark.createDataFrame([], schema)
+        return local_df([], schema)
     words = [tuple(w) + (end_of_word,) for w in pdf["word"]]
     freqs = [int(f) for f in pdf["freq"]]
     merges = _bpe_merge_loop(words, freqs, int(n_merges))
-    return spark.createDataFrame(
-        [(i, l, r) for i, (l, r) in enumerate(merges)], schema)
+    return local_df([(i, l, r) for i, (l, r) in enumerate(merges)], schema)
 
 
 # words at/above this many symbols take the heap/linked-list encoder:

@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..core.construction import local_df
 from ..core.persist import owns, persist
 from ..core.specs import _resolve_cols, _verify_columns
 from ..functions.intervals import overlap_predicate
@@ -77,19 +78,24 @@ def _neighbor_candidates(starts1, ends1, starts2_sorted, order2, key2, k, side):
     return ids1, order2[ids2_sorted]
 
 
-def _overlap_pairs(starts1, ends1, starts2, ends2):
-    """All (i1, i2) with s1<e2' and s2<e1' (point-rewritten ends).
+def _overlap_sweep(starts1, ends1, starts2, ends2):
+    """Sweep state for :func:`_sweep_pairs`: ``(sides, idx, match_lo,
+    counts)``. ``counts.sum()`` is the number of candidate pairs the
+    expansion allocates (cross-set and same-set), known before any pair
+    exists, so callers can bound the output first.
 
     Sweep over the union of both sides sorted by start: each interval
-    matches the intervals that start within [its start, its effective end).
-    Output-linear, fully vectorized.
+    matches the intervals that start within [its start, its effective
+    end). Output-linear, fully vectorized.
     """
     # point rewrite WITHOUT ends+1 (a point at INT64_MAX would wrap
     # negative and silently vanish from / corrupt the sweep): rank-
     # compress the coordinates, then key starts as 2·rank and effective
     # ends as 2·rank + is_point — "starts[q] < ends[p] + 1" becomes
-    # "2·rs < 2·re + 1", exact and overflow-free at any int64 value
+    # "2·rs < 2·re + 1", exact and overflow-free at any int64 value. A
+    # point AT INT64_MAX keeps zero width, as effective_end saturates.
     n1, n2 = starts1.shape[0], starts2.shape[0]
+    imax = np.iinfo(np.int64).max
     all_coords = np.unique(np.concatenate([starts1, starts2, ends1, ends2]))
     rs1 = np.searchsorted(all_coords, starts1)
     rs2 = np.searchsorted(all_coords, starts2)
@@ -97,8 +103,9 @@ def _overlap_pairs(starts1, ends1, starts2, ends2):
     re2 = np.searchsorted(all_coords, ends2)
     starts1 = 2 * rs1
     starts2 = 2 * rs2
-    e1 = 2 * re1 + (re1 == rs1)  # rank equality == zero-length (point)
-    e2 = 2 * re2 + (re2 == rs2)
+    # rank equality == zero-length (point)
+    e1 = 2 * re1 + ((re1 == rs1) & (ends1 != imax))
+    e2 = 2 * re2 + ((re2 == rs2) & (ends2 != imax))
     starts = np.concatenate([starts1, starts2])
     ends = np.concatenate([e1, e2])
     sides = np.concatenate([np.zeros(n1, bool), np.ones(n2, bool)])
@@ -108,11 +115,21 @@ def _overlap_pairs(starts1, ends1, starts2, ends2):
     # for each position p, intervals q>p with starts[q] < ends[p] overlap it
     match_hi = np.searchsorted(starts, ends, "left")
     match_lo = np.arange(starts.shape[0]) + 1
-    counts = np.maximum(match_hi - match_lo, 0)
+    return sides, idx, match_lo, np.maximum(match_hi - match_lo, 0)
+
+
+def _overlap_pairs(starts1, ends1, starts2, ends2):
+    """All (i1, i2) with s1<e2' and s2<e1' (point-rewritten ends)."""
+    return _sweep_pairs(_overlap_sweep(starts1, ends1, starts2, ends2))
+
+
+def _sweep_pairs(sweep):
+    """Expand an :func:`_overlap_sweep` into its (i1, i2) pairs."""
+    sides, idx, match_lo, counts = sweep
     total = counts.sum()
     if total == 0:
         return np.array([], dtype=np.int64), np.array([], dtype=np.int64)
-    anchors = np.repeat(np.arange(starts.shape[0]), counts)
+    anchors = np.repeat(np.arange(sides.shape[0]), counts)
     offs = np.arange(total) - np.repeat(np.cumsum(counts) - counts, counts)
     others = np.repeat(match_lo, counts) + offs
     # keep only cross-set pairs, oriented (set1, set2)
@@ -547,7 +564,7 @@ def _closest_binned(
     # riding every rung
     if cap_rows is not None:
         ctype = df2.schema[ck2].dataType
-        caps_df = df1.sparkSession.createDataFrame(
+        caps_df = local_df(
             cap_rows, T.StructType([T.StructField("__cb_c", ctype),
                                     T.StructField("__cb_capc", T.LongType())]))
         d1 = (
@@ -797,7 +814,7 @@ def _closest_broadcast(
     df1: DataFrame, df2: DataFrame, *, k, ignore_overlaps, ignore_upstream,
     ignore_downstream, direction_col, tie_breaking_col, return_input,
     return_distance, return_overlap, suffixes, cols1, cols2,
-    max_rows: int | None = None,
+    max_rows: int | None = None, tiny: bool = False,
 ) -> DataFrame | None:
     """Broadcast-kernel closest for a small df2 (the "nearest gene
     against a huge table" shape): df2 is collected ONCE at
@@ -814,7 +831,13 @@ def _closest_broadcast(
     must not become an unbounded toPandas — over the cap, returns
     ``None`` so the caller falls back (see ``ops._bounded_pdf``; no
     extra probe job for genuinely tiny estimates, which keeps the auto
-    path's fixed cost at ONE driver job)."""
+    path's fixed cost at ONE driver job).
+
+    ``tiny`` (the auto gate, ``ops._tiny(df1)``): df1 is collected too,
+    under the same row cap, and the per-chromosome loop runs on the
+    driver; the rows (at most k per df1 row, plus left-join nulls) hand
+    back as a LocalRelation — no shuffle, no round-robin spread, no
+    Python-worker stage."""
     ck1, sk1, ek1 = _resolve_cols(cols1)
     ck2, sk2, ek2 = _resolve_cols(cols2)
     sfx1, sfx2 = suffixes
@@ -827,10 +850,8 @@ def _closest_broadcast(
             return None
     else:
         ann_pd = df2.toPandas()
-    ann_bc = df1.sparkSession.sparkContext.broadcast({
-        c: grp.reset_index(drop=True)
-        for c, grp in ann_pd.groupby(ck2, sort=False)
-    })
+    per2 = {c: grp.reset_index(drop=True)
+            for c, grp in ann_pd.groupby(ck2, sort=False)}
 
     out_fields = [T.StructField(f.name + sfx1, f.dataType, True)
                   for f in df1.schema.fields]
@@ -847,29 +868,40 @@ def _closest_broadcast(
     out_schema = T.StructType(out_fields)
     out_names = [f.name for f in out_fields]
 
-    def kern(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            outs = []
-            for chrom, p1 in pdf.groupby(ck1, sort=False, dropna=False):
-                p2 = None if pd.isna(chrom) else ann_bc.value.get(chrom)
-                outs.append(_closest_pandas(
-                    p1.reset_index(drop=True), p2,
-                    names1=names1, names2=names2, sfx1=sfx1, sfx2=sfx2,
-                    sk1=sk1, ek1=ek1, sk2=sk2, ek2=ek2, k=k,
-                    ignore_overlaps=ignore_overlaps,
-                    ignore_upstream=ignore_upstream,
-                    ignore_downstream=ignore_downstream,
-                    direction_col=direction_col,
-                    tie_breaking_col=tie_breaking_col,
-                    return_overlap=return_overlap,
-                    return_distance=return_distance,
-                ))
-            yield pd.concat(outs, ignore_index=True)[out_names]
+    def batch(pdf, per2):
+        outs = []
+        for chrom, p1 in pdf.groupby(ck1, sort=False, dropna=False):
+            p2 = None if pd.isna(chrom) else per2.get(chrom)
+            outs.append(_closest_pandas(
+                p1.reset_index(drop=True), p2,
+                names1=names1, names2=names2, sfx1=sfx1, sfx2=sfx2,
+                sk1=sk1, ek1=ek1, sk2=sk2, ek2=ek2, k=k,
+                ignore_overlaps=ignore_overlaps,
+                ignore_upstream=ignore_upstream,
+                ignore_downstream=ignore_downstream,
+                direction_col=direction_col,
+                tie_breaking_col=tie_breaking_col,
+                return_overlap=return_overlap,
+                return_distance=return_distance,
+            ))
+        return pd.concat(outs, ignore_index=True)[out_names]
 
-    from .ops import _spread_if_underpartitioned
-    out = _spread_if_underpartitioned(df1).mapInPandas(kern, out_schema)
+    from .ops import _bounded_arrow, _spread_if_underpartitioned
+    # probe=False: a tiny frame is far under the probe's size bar
+    tbl = _bounded_arrow(df1, max_rows, probe=False) if tiny else None
+    if tbl is not None:
+        # the conversion mapInPandas applies, so rows match it exactly
+        pdf1 = tbl.to_pandas(date_as_object=True)
+        out = local_df(batch(pdf1, per2) if len(pdf1) else [], out_schema)
+    else:
+        ann_bc = df1.sparkSession.sparkContext.broadcast(per2)
+
+        def kern(batches):
+            for pdf in batches:
+                if len(pdf):
+                    yield batch(pdf, ann_bc.value)
+
+        out = _spread_if_underpartitioned(df1).mapInPandas(kern, out_schema)
     if not return_input:
         keep = []
         if return_overlap:
@@ -950,7 +982,7 @@ def closest(
         )
     if strategy == "broadcast" or (strategy == "auto" and not self_mode
                                    and _small_df2(df2)):
-        from .ops import _SMALL_INPUT_MAX_ROWS, _threshold
+        from .ops import _SMALL_INPUT_MAX_ROWS, _threshold, _tiny
         cap = (None if strategy == "broadcast"  # explicit request: trust it
                else _threshold(df2, "smallInputMaxRows", _SMALL_INPUT_MAX_ROWS))
         out = _closest_broadcast(
@@ -960,6 +992,7 @@ def closest(
             return_input=return_input, return_distance=return_distance,
             return_overlap=return_overlap, suffixes=suffixes,
             cols1=cols1, cols2=cols2, max_rows=cap,
+            tiny=strategy == "auto" and _tiny(df1),
         )
         if out is not None:
             return out

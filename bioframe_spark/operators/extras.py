@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..core import construction
 from ..core.persist import owns
@@ -41,11 +42,12 @@ def frac_gene_coverage(df: DataFrame, genes: DataFrame, cols=None) -> DataFrame:
     value-identical to the composition (each kernel is exactly the one
     its operator would build from its own collect of the same frame) but
     one gene-table scan/collect instead of two, and the two pandas UDF
-    columns still evaluate in a single ArrowEvalPython pass over df."""
-    from .ops import (_SMALL_INPUT_BYTES, _broadcast_coverage_col,
-                      _count_overlaps_col, _coverage_lookup,
-                      _plan_size_bytes, _small_coords_pdf, count_overlaps,
-                      coverage)
+    columns still evaluate in a single ArrowEvalPython pass over df
+    (or both on the driver when df is tiny)."""
+    from .ops import (_SMALL_INPUT_BYTES, _count_lookup, _count_values,
+                      _coverage_lookup, _coverage_values, _plan_size_bytes,
+                      _small_coords_pdf, _with_kernel_column,
+                      count_overlaps, coverage)
 
     ck, sk, ek = _resolve_cols(cols)
     g = genes.select(ck, sk, ek)
@@ -53,11 +55,12 @@ def frac_gene_coverage(df: DataFrame, genes: DataFrame, cols=None) -> DataFrame:
         pdf = _small_coords_pdf(g, ck, sk, ek)
         if pdf is not None and (
                 len(pdf) == 0 or bool((pdf["s"] <= pdf["e"]).all())):
-            spark = df.sparkSession
-            out = df.withColumn("coverage", _broadcast_coverage_col(
-                spark, _coverage_lookup(pdf), ck, sk, ek))
-            out = out.withColumn("count", _count_overlaps_col(
-                spark, pdf, ck, sk, ek)).withColumnRenamed("count", "n_genes")
+            out = _with_kernel_column(
+                df, "coverage", T.LongType(), _coverage_values,
+                _coverage_lookup(pdf), ck, sk, ek, fill=0)
+            out = _with_kernel_column(
+                out, "count", T.LongType(), _count_values, _count_lookup(pdf),
+                ck, sk, ek, fill=0).withColumnRenamed("count", "n_genes")
             return out.withColumn(
                 "gene_coverage",
                 F.col("coverage").cast("double") / (F.col(ek) - F.col(sk)),

@@ -18,8 +18,18 @@ Key physical choices:
 - ``merge``/``cluster``/``complement`` are gaps-and-islands window
   aggregations (running max + cumulative sum), i.e. one shuffle by
   (chrom, *on) then map-side work.
-- ``closest`` uses cogrouped ``applyInPandas`` per chromosome with a
-  vectorized sort+searchsorted kernel (no native as-of join in OSS Spark).
+- ``closest`` (``operators/closest.py``; no native as-of join in OSS
+  Spark) runs one vectorized sort+searchsorted kernel three ways: over a
+  collected small df2 as a ``mapInPandas`` over df1, cogrouped per
+  chromosome, or, for large inputs, as a binned cap-escalation ladder.
+- Tiny inputs (``_tiny``: plan size at most ``_TINY_INPUT_BYTES``) finish
+  on the driver under ``strategy="auto"``: one bounded Arrow collect per
+  side, the operator's NumPy kernel, and an Arrow-built LocalRelation
+  hand-back (``construction.local_df``), so no Python-worker stage,
+  shuffle or per-chromosome product runs at execution time. This covers
+  ``merge`` (under its own 32 MB ``local`` gate), the ``coverage``,
+  ``count_overlaps`` and ``assign_view`` kernels, broadcast ``closest``
+  and ``overlap`` when both sides are tiny.
 """
 
 from __future__ import annotations
@@ -130,6 +140,21 @@ def _plan_size_bytes(df: DataFrame) -> int:
         return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:
         return 1 << 60  # unknown → assume large (prefer the scalable path)
+
+
+_TINY_INPUT_BYTES = 1 << 20  # at or below this scan size an operator runs
+# whole on the driver and hands back a LocalRelation: a Python-worker
+# stage (pandas UDF, mapInPandas) costs ~250-300 ms fixed per call on a
+# 4-core host, the NumPy kernel a few ms. Not a knob: a LocalRelation of
+# ~120k rows costs ~440 ms to scan, so local execution loses well below
+# the broadcast sizes clusters raise the other gates to (SCALING §17)
+
+
+def _tiny(df: DataFrame) -> bool:
+    """df is small enough to finish on the driver (``_TINY_INPUT_BYTES``).
+    Unknown sizes read as 1<<60, so they never qualify; streaming frames
+    cannot be collected."""
+    return not df.isStreaming and _plan_size_bytes(df) <= _TINY_INPUT_BYTES
 
 
 def _spread_if_underpartitioned(df: DataFrame) -> DataFrame:
@@ -306,7 +331,7 @@ def select_mask_positional(df: DataFrame, region, cols=None,
     input exactly, and ``np.nonzero`` of it equals :func:`select_indices`).
     Pass ``index_col`` naming a stable id column to get positional parity
     for ANY row order the caller has encoded — e.g. a pandas RangeIndex
-    carried through ``spark.createDataFrame(pdf.reset_index())``.
+    carried through ``bf.from_any(pdf.reset_index())``.
 
     No shuffle when ``index_col`` is given (pure projection); otherwise one
     per-chrom window + broadcast offset join (see ``_with_global_rid``).
@@ -519,6 +544,13 @@ def overlap(
         _verify_columns(df2, [c], "overlap on")
     sfx1, sfx2 = suffixes
     jt = _join_type(how)
+    if (strategy == "auto" and _bin_hint is None and how in ("inner", "left")
+            and not return_index and not keep_order
+            and (return_input or return_overlap)):
+        out = _overlap_local(df1, df2, (ck1, sk1, ek1), (ck2, sk2, ek2), on,
+                             suffixes, how, return_input, return_overlap)
+        if out is not None:
+            return out
 
     d1, d2 = df1, df2
     if return_index:
@@ -578,6 +610,114 @@ def overlap(
             keep += ["overlap_" + sk1, "overlap_" + ek1]
         joined = joined.select(*keep)
     return joined
+
+
+_LOCAL_KEY_TYPES = ("string", "bigint", "int", "smallint", "tinyint")
+
+
+def _overlap_local(df1, df2, cols1, cols2, on, suffixes, how,
+                   return_input, return_overlap):
+    """``overlap`` of two tiny sides on the driver: one bounded Arrow
+    collect per side, the :func:`closest._overlap_sweep` per (chrom,
+    *on) group (exact for points and INT64_MAX), and the matched rows
+    taken from the Arrow tables into a LocalRelation whose schema is the
+    Spark join's.
+
+    Returns None — the caller builds the Spark join — unless both sides
+    are :func:`_tiny`, the keys compare as Python values exactly as
+    Spark's equality does (same string or integral type on both sides),
+    the coordinates are BIGINT and the suffixed names are unambiguous.
+    It also returns None when a side exceeds
+    ``spark.bioframe.smallInputMaxRows``, when the sweep would allocate
+    more candidate pairs than that cap (checked before any pair
+    exists), or when a side holds an inverted row (start > end), which
+    the sweep cannot price. Null keys or coordinates never match; under
+    ``how='left'`` their df1 rows come back with null df2 columns."""
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+
+    from .closest import _overlap_sweep, _sweep_pairs
+
+    (ck1, sk1, ek1), (ck2, sk2, ek2) = cols1, cols2
+    sfx1, sfx2 = suffixes
+    t1, t2 = dict(df1.dtypes), dict(df2.dtypes)
+    names1 = [c + sfx1 for c in df1.columns]
+    names2 = [c + sfx2 for c in df2.columns]
+    ov_cols = ["overlap_" + sk1, "overlap_" + ek1] if return_overlap else []
+    if (any(t1[a] != t2[b] or t1[a] not in _LOCAL_KEY_TYPES
+            for a, b in zip([ck1, *on], [ck2, *on]))
+            or {t1[sk1], t1[ek1], t2[sk2], t2[ek2]} != {"bigint"}
+            or len(set(names1 + names2 + ov_cols))
+            < len(names1) + len(names2) + len(ov_cols)
+            or not (_tiny(df1) and _tiny(df2))):
+        return None
+    cap = _threshold(df1, "smallInputMaxRows", _SMALL_INPUT_MAX_ROWS)
+
+    def side(df, keys, sk, ek):
+        # probe=False: a tiny frame is far under the probe's size bar
+        tbl = _bounded_arrow(df, cap, probe=False)
+        if tbl is None:
+            return None
+        ok = np.ones(tbl.num_rows, dtype=bool)
+        for c in [*keys, sk, ek]:
+            ok &= tbl[c].is_valid().to_numpy(zero_copy_only=False)
+        s, e = (tbl[c].fill_null(0).to_numpy() for c in (sk, ek))
+        if (s[ok] > e[ok]).any():
+            return None
+        pos = np.flatnonzero(ok)
+        kdf = pd.DataFrame({i: tbl[k].to_pandas(types_mapper=pd.ArrowDtype)
+                            for i, k in enumerate(keys)}).iloc[pos]
+        groups = (kdf.groupby(list(range(len(keys))), sort=False).indices
+                  if len(pos) else {})
+        return tbl, s, e, {(k if isinstance(k, tuple) else (k,)): pos[ix]
+                           for k, ix in groups.items()}
+
+    one = side(df1, [ck1, *on], sk1, ek1)
+    two = one and side(df2, [ck2, *on], sk2, ek2)
+    if two is None:
+        return None
+    tbl1, s1, e1, g1 = one
+    tbl2, s2, e2, g2 = two
+    work, total = [], 0
+    for key, r1 in g1.items():
+        r2 = g2.get(key)
+        if r2 is None:
+            continue
+        sweep = _overlap_sweep(s1[r1], e1[r1], s2[r2], e2[r2])
+        total += int(sweep[3].sum())
+        if total > cap:
+            return None
+        work.append((r1, r2, sweep))
+    i1 = [np.zeros(0, dtype=np.int64)]
+    i2 = [np.zeros(0, dtype=np.int64)]
+    for r1, r2, sweep in work:
+        a, b = _sweep_pairs(sweep)
+        i1.append(r1[a])
+        i2.append(r2[b])
+    i1, i2 = np.concatenate(i1), np.concatenate(i2)
+    if how == "left":
+        lonely = np.setdiff1d(np.arange(tbl1.num_rows), i1)
+        i1 = np.concatenate([i1, lonely])
+        i2 = np.concatenate([i2, np.full(lonely.size, -1)])
+    miss = i2 < 0
+    j2 = np.where(miss, 0, i2)
+    fields = ([T.StructField(n, f.dataType, f.nullable)
+               for n, f in zip(names1, df1.schema.fields)]
+              + [T.StructField(n, f.dataType, f.nullable or how == "left")
+                 for n, f in zip(names2, df2.schema.fields)]
+              + [T.StructField(n, T.LongType(), True) for n in ov_cols])
+    cols = ([tbl1.column(i).take(pa.array(i1))
+             for i in range(tbl1.num_columns)]
+            + [tbl2.column(i).take(pa.array(j2, mask=miss))
+               for i in range(tbl2.num_columns)])
+    if return_overlap:
+        cols += [pa.array(np.maximum(s1[i1], s2[j2]), mask=miss),
+                 pa.array(np.minimum(e1[i1], e2[j2]), mask=miss)]
+    if not return_input:
+        fields, cols = fields[-2:], cols[-2:]
+    return construction.local_df(
+        pa.table(cols, names=[f.name for f in fields]), T.StructType(fields))
 
 
 def _outer_path(L, jt, stats, bin_size, lo, hi) -> str:
@@ -1372,7 +1512,10 @@ def _merge_local(df: DataFrame, ck, sk, ek, on, min_dist):
     philosophy applied to merge itself: a frame under the collect caps
     does not deserve a distributed plan (shuffle + two window stages
     cost ~3x the reference's single numpy sweep; this path is one
-    hard-bounded Arrow collect + the sweep — see ``_bounded_pdf``).
+    hard-bounded Arrow collect + the sweep — see ``_bounded_arrow``).
+    The islands are built as Arrow columns (``take`` of each island's
+    first row) and hand back as a LocalRelation
+    (``construction.local_df``): no Python-worker stage runs later.
 
     Exactness: collection goes through Arrow (``toArrow``), so int64
     coordinates — including INT64_MAX sentinels from complement outputs
@@ -1386,23 +1529,32 @@ def _merge_local(df: DataFrame, ck, sk, ek, on, min_dist):
     distributed constructions)."""
     import numpy as np
     import pandas as pd
+    import pyarrow as pa
 
     cap = _threshold(df, "smallInputMaxRows", _SMALL_INPUT_MAX_ROWS)
-    sub = df.select(ck, sk, ek, *on)
-    # the collect is hard-bounded on every path — see _bounded_pdf
-    pdf = _bounded_pdf(sub, cap, arrow=True)
-    if pdf is None:
+    cols = [ck, sk, ek, *on]
+    tbl = _bounded_arrow(df.select(*cols), cap)
+    if tbl is None:
         return None
-    keys = [ck] + on
-    valid = pdf[[ck, sk, ek, *on]].notna().all(axis=1)
-    v = pdf[valid]
-    cols_out = {c: [] for c in [ck, sk, ek, *on, "n_intervals"]}
-    for key, g in (v.groupby(keys, sort=False) if len(v) else ()):
-        key = key if isinstance(key, tuple) else (key,)
-        s = g[sk].to_numpy("int64")
-        e = g[ek].to_numpy("int64")
-        o = np.lexsort((e, s))
-        s, e = s[o], e[o]
+    valid = np.ones(tbl.num_rows, dtype=bool)
+    for c in cols:
+        valid &= tbl[c].is_valid().to_numpy(zero_copy_only=False)
+    s_all = tbl[sk].cast(pa.int64()).fill_null(0).to_numpy()
+    e_all = tbl[ek].cast(pa.int64()).fill_null(0).to_numpy()
+    vpos = np.flatnonzero(valid)
+    keys = pd.DataFrame({c: tbl[c].to_pandas(types_mapper=pd.ArrowDtype)
+                         for c in [ck] + on}).iloc[vpos]
+    # per island: the table row of its first interval (chrom, start and
+    # the on keys come from that row), its end and its interval count
+    first = [np.zeros(0, dtype=np.int64)]
+    ends = [np.zeros(0, dtype=np.int64)]
+    cnts = [np.zeros(0, dtype=np.int64)]
+    groups = keys.groupby([ck] + on, sort=False).indices if len(vpos) else {}
+    for ix in groups.values():
+        rows = vpos[ix]
+        o = np.lexsort((e_all[rows], s_all[rows]))
+        rows = rows[o]
+        s, e = s_all[rows], e_all[rows]
         run = np.maximum.accumulate(e)
         border = np.ones(len(s), dtype=bool)
         if min_dist is None:
@@ -1413,26 +1565,23 @@ def _merge_local(df: DataFrame, ck, sk, ek, on, min_dist):
             safe = run[:-1] <= np.iinfo("int64").max - min_dist
             border[1:] = safe & (s[1:] > run[:-1] + min_dist)
         idx = np.flatnonzero(border)
-        ends = run[np.append(idx[1:] - 1, len(s) - 1)]
-        cnts = np.diff(np.append(idx, len(s)))
-        chrom_v, *on_v = key
-        n_isl = len(idx)
-        cols_out[ck].extend([chrom_v] * n_isl)
-        cols_out[sk].extend(int(x) for x in s[idx])
-        cols_out[ek].extend(int(x) for x in ends)
-        for c, val in zip(on, on_v):
-            cols_out[c].extend([val] * n_isl)
-        cols_out["n_intervals"].extend(int(x) for x in cnts)
-    nn = pdf[~valid]
-    for c in [ck, sk, ek, *on]:
-        cols_out[c].extend(None if pd.isna(x) else x for x in nn[c])
-    cols_out["n_intervals"].extend([None] * len(nn))
+        first.append(rows[idx])
+        ends.append(run[np.append(idx[1:] - 1, len(s) - 1)])
+        cnts.append(np.diff(np.append(idx, len(s))))
+    nulls = np.flatnonzero(~valid)
+    out = tbl.take(pa.array(np.concatenate(first + [nulls])))
+    end_col = pa.concat_arrays([
+        pa.array(np.concatenate(ends)).cast(tbl.schema.field(ek).type),
+        tbl[ek].take(pa.array(nulls)).combine_chunks()])
+    out = out.set_column(cols.index(ek), ek, end_col).append_column(
+        "n_intervals", pa.concat_arrays([
+            pa.array(np.concatenate(cnts), pa.int64()),
+            pa.nulls(len(nulls), pa.int64())]))
     schema = T.StructType(
-        [df.schema[c] for c in [ck, sk, ek, *on]]
+        [df.schema[c] for c in cols]
         + [T.StructField("n_intervals", T.LongType(), True)]
     )
-    rows = list(zip(*[cols_out[c] for c in [ck, sk, ek, *on, "n_intervals"]]))
-    return df.sparkSession.createDataFrame(rows, schema)
+    return construction.local_df(out, schema)
 
 
 @owns
@@ -1750,7 +1899,7 @@ def _cluster_premerged(df: DataFrame, ck, sk, ek, on, min_dist):
     # native key copies drive the ordering (string-cast ordering would
     # misnumber int-coded chroms: "10" < "2"); string casts drive the
     # lookup so the kernel's Arrow-side keys compare exactly (same
-    # discipline as _small_coords_pdf / _count_overlaps_col)
+    # discipline as _small_coords_pdf / _with_kernel_column)
     sel = ([F.col(ck).alias("__nat0")]
            + [F.col(c).alias(f"__nat{i+1}") for i, c in enumerate(on)]
            + [F.col(ck).cast("string").alias("c")]
@@ -1976,8 +2125,7 @@ _SMALL_INPUT_MAX_ROWS = 2_000_000  # hard row cap on the kernel-gate driver
 # of driver pandas — the same order as the broadcast the gate implies.
 
 
-def _bounded_pdf(sub: DataFrame, cap: int, *, arrow: bool = False,
-                 probe: bool | None = None):
+def _bounded_pdf(sub: DataFrame, cap: int, *, probe: bool | None = None):
     """Driver-collect ``sub`` as pandas with a HARD ``cap``-row bound;
     returns ``None`` when ``sub`` exceeds the cap (callers fall back to a
     distributed formulation).
@@ -2009,21 +2157,27 @@ def _bounded_pdf(sub: DataFrame, cap: int, *, arrow: bool = False,
     aggregation twice); the maxResultSize backstop + post-hoc row check
     still bound the collect.
     """
+    return _bounded_collect(sub, cap, probe, lambda d: d.toPandas())
+
+
+def _bounded_arrow(sub: DataFrame, cap: int, *, probe: bool | None = None):
+    """:func:`_bounded_pdf` as a pyarrow Table: int64 values (INT64_MAX
+    sentinels included) stay exact next to nulls."""
+    return _bounded_collect(sub, cap, probe, lambda d: d.toArrow())
+
+
+def _bounded_collect(sub: DataFrame, cap: int, probe, collect):
     do_probe = (probe if probe is not None
                 else _plan_size_bytes(sub) > _SMALL_INPUT_BYTES // 8)
     if do_probe and sub.count() > cap:
         return None
     try:
-        if arrow:
-            import pandas as pd
-            pdf = sub.toArrow().to_pandas(types_mapper=pd.ArrowDtype)
-        else:
-            pdf = sub.toPandas()
+        out = collect(sub)
     except Exception as e:  # noqa: BLE001 — matched below, else re-raised
         if "maxResultSize" in str(e):
             return None
         raise
-    return None if len(pdf) > cap else pdf
+    return None if len(out) > cap else out
 
 
 def _small_coords_pdf(df2: DataFrame, ck: str, sk: str, ek: str,
@@ -2081,67 +2235,61 @@ def _coverage_lookup(pdf) -> dict:
     return per
 
 
-def _broadcast_coverage_col(spark, per: dict, ck: str, sk: str, ek: str) -> Column:
-    """Covered-bp column from a broadcast merged lookup: a vectorized
-    searchsorted Pandas UDF over (chrom,start,end) ONLY — df1 never
-    shuffles, nothing joins back, every batch is independent. The
-    matched merged islands for a query are exactly the slice [i, j)
-    with i = first island end > qs, j = first island start >= qe;
-    clips apply only at the slice boundaries (interior islands are
-    provably contained for any qs/qe, including inverted queries), so
-    coverage = pref[j]-pref[i] - left_clip - right_clip reproduces the
+def _coverage_values(per: dict, c, s, e):
+    """Covered bp per query row (chrom ``c``, start ``s``, end ``e``
+    arrays) from a :func:`_coverage_lookup` table. The matched merged
+    islands for a query are exactly the slice [i, j) with i = first
+    island end > qs, j = first island start >= qe; clips apply only at
+    the slice boundaries (interior islands are provably contained for
+    any qs/qe, including inverted queries), so coverage =
+    pref[j]-pref[i] - left_clip - right_clip reproduces the
     join-and-sum formulation value-for-value."""
+    import numpy as np
     import pandas as pd
 
-    bc = spark.sparkContext.broadcast(per)
-
-    @F.pandas_udf("long")
-    def _cov(c, s, e):
-        import numpy as np
-
-        tbl = bc.value
-        res = np.zeros(len(c), dtype="int64")
-        cs = c.to_numpy(dtype=object)
-        sv = s.to_numpy("int64")
-        ev = e.to_numpy("int64")
-        for chrom in pd.unique(c):
-            ent = tbl.get(chrom)
-            if ent is None:
-                continue
-            m = cs == chrom
-            MS, ME, P = ent
-            qs, qe = sv[m], ev[m]
-            i = np.searchsorted(ME, qs, side="right")
-            j = np.searchsorted(MS, qe, side="left")
-            cov = np.zeros(qs.size, dtype="int64")
-            hit = j > i
-            if hit.any():
-                ii, jj = i[hit], j[hit]
-                cov[hit] = (P[jj] - P[ii]
-                            - np.maximum(0, qs[hit] - MS[ii])
-                            - np.maximum(0, ME[jj - 1] - qe[hit]))
-            res[m] = cov
-        return pd.Series(res)
-
-    # Null-coordinate rows get 0 (parity with the join path's 0-fill);
-    # the coalesced inputs keep the Arrow series integer-exact (a null
-    # in a long column would otherwise arrive as float64 and round
-    # sentinel-sized coordinates).
-    valid = (F.col(ck).isNotNull() & F.col(sk).isNotNull()
-             & F.col(ek).isNotNull())
-    return F.when(
-        valid,
-        _cov(F.coalesce(F.col(ck).cast("string"), F.lit("")),
-             F.coalesce(F.col(sk).cast("long"), F.lit(0)),
-             F.coalesce(F.col(ek).cast("long"), F.lit(0))),
-    ).otherwise(F.lit(0).cast("long"))
+    res = np.zeros(len(c), dtype="int64")
+    for chrom in pd.unique(c):
+        ent = per.get(chrom)
+        if ent is None:
+            continue
+        m = c == chrom
+        MS, ME, P = ent
+        qs, qe = s[m], e[m]
+        i = np.searchsorted(ME, qs, side="right")
+        j = np.searchsorted(MS, qe, side="left")
+        cov = np.zeros(qs.size, dtype="int64")
+        hit = j > i
+        if hit.any():
+            ii, jj = i[hit], j[hit]
+            cov[hit] = (P[jj] - P[ii]
+                        - np.maximum(0, qs[hit] - MS[ii])
+                        - np.maximum(0, ME[jj - 1] - qe[hit]))
+        res[m] = cov
+    return res
 
 
-def _count_overlaps_col(spark, pdf, ck: str, sk: str, ek: str,
-                        on_cols: list | None = None) -> Column:
-    """Overlap-count column from broadcast sorted endpoint arrays, with
-    the point->length-1 rewrite (``effective_end``) applied on BOTH
-    sides to match ``overlap_predicate`` exactly:
+def _count_lookup(pdf, n_on: int = 0) -> dict:
+    """(chrom, *on) -> (sorted starts, sorted effective ends, starts,
+    effective ends) of a :func:`_small_coords_pdf` frame, with the
+    point->length-1 rewrite (``effective_end``) applied."""
+    import numpy as np
+
+    per = {}
+    keycols = ["c"] + [f"o{i}" for i in range(n_on)]
+    for key, g in pdf.groupby(keycols, sort=False):
+        key = key if isinstance(key, tuple) else (key,)
+        sr = g["s"].to_numpy("int64")
+        er = g["e"].to_numpy("int64")
+        # point -> length-1 rewrite, mirroring effective_end()
+        ee = np.where(er == sr, er + 1, er)
+        per[tuple(key)] = (np.sort(sr), np.sort(ee), sr, ee)
+    return per
+
+
+def _count_values(per: dict, c, *rest):
+    """Overlap count per query row (``c``, ``*on``, ``s``, ``e``) from a
+    :func:`_count_lookup` table, matching ``overlap_predicate``
+    exactly:
 
       match iff  start2 < qe'  and  end2' > qs
       count  =  #(start2 < qe') - #(end2' <= qs)
@@ -2152,67 +2300,95 @@ def _count_overlaps_col(spark, pdf, ck: str, sk: str, ek: str,
     (qe < qs) break that inclusion and fall back to an exact per-row
     predicate scan on the raw arrays (rare by contract). Callers must
     pre-check df2 for inverted rows — they invalidate the sorted-array
-    identity — and route them to the join formulation instead.
-
-    ``on_cols``: extra equality keys; the lookup is then keyed by the
-    (chrom, *on) tuple. Null keys (either side) count 0, matching the
-    join formulation's null-never-matches rule."""
+    identity — and route them to the join formulation instead. Null
+    keys count 0, the join formulation's null-never-matches rule."""
     import numpy as np
     import pandas as pd
 
-    on_cols = list(on_cols or [])
-    keycols = ["c"] + [f"o{i}" for i in range(len(on_cols))]
-    per = {}
-    for key, g in pdf.groupby(keycols, sort=False):
+    *ons, s, e = rest
+    keycols = ["c"] + [f"o{i}" for i in range(len(ons))]
+    res = np.zeros(len(c), dtype="int64")
+    keys = pd.DataFrame(dict(zip(keycols, [c, *ons])))
+    # dropna-by-default: rows with a null chrom/on key stay 0
+    for key, idx in keys.groupby(keycols, sort=False).indices.items():
         key = key if isinstance(key, tuple) else (key,)
-        sr = g["s"].to_numpy("int64")
-        er = g["e"].to_numpy("int64")
-        # point -> length-1 rewrite, mirroring effective_end()
-        ee = np.where(er == sr, er + 1, er)
-        per[tuple(key)] = (np.sort(sr), np.sort(ee), sr, ee)
-    bc = spark.sparkContext.broadcast(per)
+        ent = per.get(tuple(key))
+        if ent is None:
+            continue
+        S, E, Sr, Ee = ent
+        qs, qe = s[idx], e[idx]
+        qe_eff = np.where(qe == qs, qe + 1, qe)
+        cnt = (np.searchsorted(S, qe_eff, side="left")
+               - np.searchsorted(E, qs, side="right"))
+        inv = qe < qs
+        if inv.any():
+            for k in np.flatnonzero(inv):
+                cnt[k] = int(np.count_nonzero((Sr < qe[k]) & (Ee > qs[k])))
+        res[idx] = cnt
+    return res
 
-    @F.pandas_udf("long")
-    def _cnt(*args):
-        import numpy as np
 
-        c, *ons, s, e = args
-        tbl = bc.value
-        res = np.zeros(len(c), dtype="int64")
-        sv = s.to_numpy("int64")
-        ev = e.to_numpy("int64")
-        keys = pd.DataFrame({"c": c.reset_index(drop=True),
-                             **{f"o{i}": o.reset_index(drop=True)
-                                for i, o in enumerate(ons)}})
-        # dropna-by-default: rows with a null chrom/on key stay 0, the
-        # join formulation's null-never-matches behavior
-        for key, idx in keys.groupby(keycols, sort=False).indices.items():
-            key = key if isinstance(key, tuple) else (key,)
-            ent = tbl.get(tuple(key))
-            if ent is None:
-                continue
-            S, E, Sr, Ee = ent
-            qs, qe = sv[idx], ev[idx]
-            qe_eff = np.where(qe == qs, qe + 1, qe)
-            cnt = (np.searchsorted(S, qe_eff, side="left")
-                   - np.searchsorted(E, qs, side="right"))
-            inv = qe < qs
-            if inv.any():
-                for k in np.flatnonzero(inv):
-                    cnt[k] = int(np.count_nonzero(
-                        (Sr < qe[k]) & (Ee > qs[k])))
-            res[idx] = cnt
-        return pd.Series(res)
+def _with_kernel_column(df: DataFrame, name: str, dtype: T.DataType,
+                        kernel, table, ck: str, sk: str, ek: str, on=(),
+                        fill=None) -> DataFrame:
+    """``df`` plus column ``name`` = ``kernel(table, c, *on, s, e)`` over
+    df's (chrom, *on, start, end), ``fill`` where chrom/start/end is
+    null. Every key is cast with Spark's own cast (chrom and ``on`` to
+    STRING, coordinates to LONG), so keys compare exactly against a
+    :func:`_small_coords_pdf` lookup; nulls are coalesced before the
+    kernel sees them, keeping its int64 inputs exact.
+
+    A :func:`_tiny` df finishes on the driver: one bounded Arrow collect
+    of df with the cast keys, the kernel, and a LocalRelation
+    hand-back. Otherwise the kernel runs as a pandas UDF over the
+    broadcast table, map-only over df (which may be arbitrarily
+    large): no distinct, no join, no join-back."""
+    import numpy as np
+    import pyarrow as pa
 
     valid = (F.col(ck).isNotNull() & F.col(sk).isNotNull()
              & F.col(ek).isNotNull())
-    return F.when(
-        valid,
-        _cnt(F.coalesce(F.col(ck).cast("string"), F.lit("")),
-             *[F.col(c).cast("string") for c in on_cols],
-             F.coalesce(F.col(sk).cast("long"), F.lit(0)),
-             F.coalesce(F.col(ek).cast("long"), F.lit(0))),
-    ).otherwise(F.lit(0).cast("long"))
+    args = [F.coalesce(F.col(ck).cast("string"), F.lit("")),
+            *[F.col(c).cast("string") for c in on],
+            F.coalesce(F.col(sk).cast("long"), F.lit(0)),
+            F.coalesce(F.col(ek).cast("long"), F.lit(0))]
+    if _tiny(df):
+        keys = [f"__kk{i}" for i in range(len(args))]
+        # probe=False: a tiny frame is far under the probe's size bar
+        tbl = _bounded_arrow(
+            df.select("*", *[a.alias(k) for a, k in zip(args, keys)],
+                      valid.alias("__kv")),
+            _threshold(df, "smallInputMaxRows", _SMALL_INPUT_MAX_ROWS),
+            probe=False)
+        if tbl is not None:
+            res = kernel(table, *[tbl[k].to_numpy(zero_copy_only=False)
+                                  for k in keys])
+            ok = tbl["__kv"].to_numpy(zero_copy_only=False)
+            col = pa.array(np.where(ok, res, fill))
+            # withColumn's schema: replace in place, else append
+            fields = list(df.schema.fields)
+            base = tbl.select(list(range(len(fields))))
+            field = T.StructField(name, dtype, True)
+            if name in df.columns:
+                i = df.columns.index(name)
+                fields[i] = field
+                base = base.set_column(i, name, col)
+            else:
+                fields.append(field)
+                base = base.append_column(name, col)
+            return construction.local_df(base, T.StructType(fields))
+    bc = df.sparkSession.sparkContext.broadcast(table)
+
+    @F.pandas_udf(dtype)
+    def _kern(*cols):
+        import pandas as pd
+
+        return pd.Series(kernel(bc.value, *[
+            x.to_numpy(dtype=object) if x.dtype == object
+            else x.to_numpy("int64") for x in cols]))
+
+    return df.withColumn(name, F.when(valid, _kern(*args)).otherwise(
+        F.lit(fill).cast(dtype)))
 
 
 def count_overlaps(df1: DataFrame, df2: DataFrame, suffixes=("", "_"),
@@ -2260,8 +2436,9 @@ def count_overlaps(df1: DataFrame, df2: DataFrame, suffixes=("", "_"),
             # work saves (A/B: 1.79 s vs 0.96 s on a 3-partition cached
             # 600k-row input). The heavy pandas kernels (closest
             # broadcast, cluster premerge) DO spread.
-            out = df1.withColumn("count", _count_overlaps_col(
-                df1.sparkSession, pdf, ck1, sk1, ek1, on))
+            out = _with_kernel_column(
+                df1, "count", T.LongType(), _count_values,
+                _count_lookup(pdf, len(on)), ck1, sk1, ek1, on, fill=0)
             return out if return_input else out.select("count")
     keys = [ck1, sk1, ek1, *on]
     coords = df1.select(*keys).filter(F.col(ck1).isNotNull()).distinct()
@@ -2333,10 +2510,10 @@ def coverage(df1: DataFrame, df2: DataFrame, suffixes=("", "_"),
         pdf = _small_coords_pdf(df2, ck2, sk2, ek2)
         if pdf is not None and (
                 len(pdf) == 0 or bool((pdf["s"] <= pdf["e"]).all())):
-            cov = _broadcast_coverage_col(
-                df1.sparkSession, _coverage_lookup(pdf), ck1, sk1, ek1)
             # no spread guard — see count_overlaps (light kernel rule)
-            out = df1.withColumn("coverage", cov)
+            out = _with_kernel_column(
+                df1, "coverage", T.LongType(), _coverage_values,
+                _coverage_lookup(pdf), ck1, sk1, ek1, fill=0)
             return out if return_input else out.select("coverage")
     m2 = merge(df2, min_dist=0, cols=cols2)
     merged2 = m2.filter(F.col(ck2).isNotNull())
@@ -2629,63 +2806,43 @@ def _assign_lookup(pdf) -> dict:
     return per
 
 
-def _assign_view_col(spark, per: dict, ck: str, sk: str, ek: str) -> Column:
-    """Best-overlap view-region name from a broadcast arm lookup: a
-    vectorized Pandas UDF over (chrom,start,end) ONLY — df never
-    shuffles, no row ids, no window, nothing joins back. Per chromosome
-    the kernel sweeps its (bounded, see the caller's arms-per-chrom
-    gate) arm list once, vectorized over the batch rows; an arm wins
-    only on STRICTLY greater overlap length, so the (start, name)
-    pre-sort decides ties exactly like the window path's
-    (ovl DESC, __vs ASC, __vn ASC) top-1. Rows matching no arm (or with
-    a null coordinate, guarded outside) yield null."""
+def _assign_values(per: dict, c, s, e):
+    """Best-overlap view-region name per query row (``c``, ``s``, ``e``)
+    from an :func:`_assign_lookup` table. Per chromosome the kernel
+    sweeps its (bounded, see the caller's arms-per-chrom gate) arm list
+    once, vectorized over the rows; an arm wins only on STRICTLY greater
+    overlap length, so the (start, name) pre-sort decides ties exactly
+    like the window path's (ovl DESC, __vs ASC, __vn ASC) top-1. Rows
+    matching no arm yield None."""
+    import numpy as np
     import pandas as pd
 
-    bc = spark.sparkContext.broadcast(per)
-
-    @F.pandas_udf("string")
-    def _asgn(c, s, e):
-        import numpy as np
-
-        tbl = bc.value
-        res = np.full(len(c), None, dtype=object)
-        cs = c.to_numpy(dtype=object)
-        sv = s.to_numpy("int64")
-        ev = e.to_numpy("int64")
-        for chrom in pd.unique(c):
-            ent = tbl.get(chrom)
-            if ent is None:
+    res = np.full(len(c), None, dtype=object)
+    for chrom in pd.unique(c):
+        ent = per.get(chrom)
+        if ent is None:
+            continue
+        m = c == chrom
+        VS, VEe, VE, VN = ent
+        qs, qe = s[m], e[m]
+        # saturating effective_end (see _assign_lookup)
+        qe_eff = np.where(
+            (qe == qs) & (qe != np.iinfo(np.int64).max), qe + 1, qe)
+        best_i = np.full(qs.size, -1, dtype="int64")
+        best_ovl = np.zeros(qs.size, dtype="int64")
+        for a in range(VS.size):
+            hit = (qs < VEe[a]) & (VS[a] < qe_eff)
+            if not hit.any():
                 continue
-            m = cs == chrom
-            VS, VEe, VE, VN = ent
-            qs, qe = sv[m], ev[m]
-            # saturating effective_end (see _assign_lookup)
-            qe_eff = np.where(
-                (qe == qs) & (qe != np.iinfo(np.int64).max), qe + 1, qe)
-            best_i = np.full(qs.size, -1, dtype="int64")
-            best_ovl = np.zeros(qs.size, dtype="int64")
-            for a in range(VS.size):
-                hit = (qs < VEe[a]) & (VS[a] < qe_eff)
-                if not hit.any():
-                    continue
-                ovl = np.minimum(qe, VE[a]) - np.maximum(qs, VS[a])
-                upd = hit & ((best_i < 0) | (ovl > best_ovl))
-                best_ovl[upd] = ovl[upd]
-                best_i[upd] = a
-            got = best_i >= 0
-            sub = np.full(qs.size, None, dtype=object)
-            sub[got] = VN[best_i[got]]
-            res[m] = sub
-        return pd.Series(res)
-
-    valid = (F.col(ck).isNotNull() & F.col(sk).isNotNull()
-             & F.col(ek).isNotNull())
-    return F.when(
-        valid,
-        _asgn(F.coalesce(F.col(ck).cast("string"), F.lit("")),
-              F.coalesce(F.col(sk).cast("long"), F.lit(0)),
-              F.coalesce(F.col(ek).cast("long"), F.lit(0))),
-    ).otherwise(F.lit(None).cast("string"))
+            ovl = np.minimum(qe, VE[a]) - np.maximum(qs, VS[a])
+            upd = hit & ((best_i < 0) | (ovl > best_ovl))
+            best_ovl[upd] = ovl[upd]
+            best_i[upd] = a
+        got = best_i >= 0
+        sub = np.full(qs.size, None, dtype=object)
+        sub[got] = VN[best_i[got]]
+        res[m] = sub
+    return res
 
 
 _ASSIGN_KERNEL_MAX_ARMS = 256  # per-chrom arm bound for the map-only
@@ -2742,8 +2899,9 @@ def assign_view(df: DataFrame, view_df, drop_unassigned: bool = False,
                 or int(vpdf.groupby("c").size().max())
                 <= _threshold(df, "assignKernelMaxArms",
                               _ASSIGN_KERNEL_MAX_ARMS)):
-            out = df.withColumn(df_view_col, _assign_view_col(
-                df.sparkSession, _assign_lookup(vpdf), ck, sk, ek))
+            out = _with_kernel_column(
+                df, df_view_col, T.StringType(), _assign_values,
+                _assign_lookup(vpdf), ck, sk, ek)
             if drop_unassigned:
                 out = out.filter(F.col(df_view_col).isNotNull())
             return out

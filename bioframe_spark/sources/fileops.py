@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..core.construction import local_df
 from .schemas import SCHEMAS, infer_bed_schema
 from ..functions.intervals import natsort_key
 
@@ -223,10 +224,8 @@ def _fetch_by_region(path: str, regions: list[tuple], engine, out_schema: str,
             None if start is None else int(start),
             None if end is None else int(end),
         ))
-    spark = _spark()
-    rdf = spark.createDataFrame(
-        rows, "chrom string, start long, end long"
-    ).repartition(len(rows))
+    rdf = local_df(rows, "chrom string, start long, end long"
+                   ).repartition(len(rows))
     schema_obj = (T.StructType.fromDDL(out_schema)
                   if isinstance(out_schema, str) else out_schema)
     fields = schema_obj.fieldNames()
@@ -457,7 +456,6 @@ def prepare_bedgraph(df: DataFrame, chromsizes: dict,
         value_col = df.columns[3]
     bg = df.select("chrom", "start", "end", F.col(value_col).alias(value_col))
 
-    from ..core.construction import local_df
     from pyspark.sql import types as T
     cs = local_df(
         [(str(c), int(s)) for c, s in chromsizes.items()],

@@ -207,14 +207,12 @@ class UCSCClient:
 
         if path is not None:
             return read_table(path, schema="all_mrna")
-        from pyspark.sql import SparkSession
-
+        from ..core.construction import local_df
         from ._assembly_data import ALIASES, CHROMSIZES
 
         db = ALIASES.get(self._db, self._db)
-        spark = SparkSession.active()
         if not sample or db not in CHROMSIZES:
-            return spark.createDataFrame([], SCHEMAS["all_mrna"])
+            return local_df([], SCHEMAS["all_mrna"])
         rows = []
         i = 0
         for chrom, clen in sorted(CHROMSIZES[db].items()):
@@ -234,4 +232,4 @@ class UCSCClient:
                     1,                      # blockCount
                     f"{size},", "0,", f"{t_start},",
                 ))
-        return spark.createDataFrame(rows, SCHEMAS["all_mrna"])
+        return local_df(rows, SCHEMAS["all_mrna"])

@@ -248,10 +248,9 @@ def test_unscoped_result_releases_on_gc(spark):
 def test_finalizer_after_unpersist_is_safe(spark):
     # the result's finalizer may run after its persists were already
     # unpersisted (here: by clearCache); the second release is a no-op
-    docs = spark.createDataFrame(
-        [(i, "the quick brown fox jumps over the lazy dog " * 2)
-         for i in range(8)], "doc_id long, text string")
-    out = ranking.bigram_lm_scores(docs)
+    docs = spark.createDataFrame([(i, float(i)) for i in range(8)],
+                                 "doc_id long, score double")
+    out = ranking.score_buckets(docs)
     assert out.count() == 8
     spark.catalog.clearCache()
     del out
@@ -291,7 +290,6 @@ OWNED = {
         _txt(s), k=5, w=4, strategy="join"),
     "remove_duplicate_spans": lambda s, d: dedup.remove_duplicate_spans(
         _txt(s), k=5, w=4, strategy="join"),
-    "bigram_lm_scores": lambda s, d: ranking.bigram_lm_scores(_txt(s)),
     "score_buckets": lambda s, d: ranking.score_buckets(
         s.createDataFrame([(i, float(i)) for i in range(9)],
                           "doc_id long, score double")),

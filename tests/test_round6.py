@@ -115,14 +115,16 @@ def test_bounded_pdf_post_hoc_cap_without_probe(spark):
     assert out is not None and len(out) == 1000
 
 
-def test_bounded_pdf_arrow_mode_matches(spark):
-    from bioframe_spark.operators.ops import _bounded_pdf
+def test_bounded_arrow_keeps_int64_exact(spark):
+    from bioframe_spark.operators.ops import _bounded_arrow
 
     df = spark.createDataFrame(
-        [(9223372036854775807,), (5,)], "v long")
-    out = _bounded_pdf(df, 10, arrow=True)
+        [(9223372036854775807,), (5,), (None,)], "v long")
+    out = _bounded_arrow(df, 10)
     # Arrow path: int64 sentinels survive exactly (no float round-trip)
-    assert sorted(int(x) for x in out["v"]) == [5, 9223372036854775807]
+    assert sorted(out["v"].to_pylist(), key=str) == [
+        5, 9223372036854775807, None]
+    assert _bounded_arrow(df, 2) is None
 
 
 def test_cosine_topk_query_cap_clear_error(spark):
