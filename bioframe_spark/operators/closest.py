@@ -78,24 +78,19 @@ def _neighbor_candidates(starts1, ends1, starts2_sorted, order2, key2, k, side):
     return ids1, order2[ids2_sorted]
 
 
-def _overlap_sweep(starts1, ends1, starts2, ends2):
-    """Sweep state for :func:`_sweep_pairs`: ``(sides, idx, match_lo,
-    counts)``. ``counts.sum()`` is the number of candidate pairs the
-    expansion allocates (cross-set and same-set), known before any pair
-    exists, so callers can bound the output first.
+def _overlap_pairs(starts1, ends1, starts2, ends2):
+    """All (i1, i2) with s1<e2' and s2<e1' (point-rewritten ends).
 
     Sweep over the union of both sides sorted by start: each interval
-    matches the intervals that start within [its start, its effective
-    end). Output-linear, fully vectorized.
+    matches the intervals that start within [its start, its effective end).
+    Output-linear, fully vectorized.
     """
     # point rewrite WITHOUT ends+1 (a point at INT64_MAX would wrap
     # negative and silently vanish from / corrupt the sweep): rank-
     # compress the coordinates, then key starts as 2·rank and effective
     # ends as 2·rank + is_point — "starts[q] < ends[p] + 1" becomes
-    # "2·rs < 2·re + 1", exact and overflow-free at any int64 value. A
-    # point AT INT64_MAX keeps zero width, as effective_end saturates.
+    # "2·rs < 2·re + 1", exact and overflow-free at any int64 value
     n1, n2 = starts1.shape[0], starts2.shape[0]
-    imax = np.iinfo(np.int64).max
     all_coords = np.unique(np.concatenate([starts1, starts2, ends1, ends2]))
     rs1 = np.searchsorted(all_coords, starts1)
     rs2 = np.searchsorted(all_coords, starts2)
@@ -103,9 +98,8 @@ def _overlap_sweep(starts1, ends1, starts2, ends2):
     re2 = np.searchsorted(all_coords, ends2)
     starts1 = 2 * rs1
     starts2 = 2 * rs2
-    # rank equality == zero-length (point)
-    e1 = 2 * re1 + ((re1 == rs1) & (ends1 != imax))
-    e2 = 2 * re2 + ((re2 == rs2) & (ends2 != imax))
+    e1 = 2 * re1 + (re1 == rs1)  # rank equality == zero-length (point)
+    e2 = 2 * re2 + (re2 == rs2)
     starts = np.concatenate([starts1, starts2])
     ends = np.concatenate([e1, e2])
     sides = np.concatenate([np.zeros(n1, bool), np.ones(n2, bool)])
@@ -115,21 +109,11 @@ def _overlap_sweep(starts1, ends1, starts2, ends2):
     # for each position p, intervals q>p with starts[q] < ends[p] overlap it
     match_hi = np.searchsorted(starts, ends, "left")
     match_lo = np.arange(starts.shape[0]) + 1
-    return sides, idx, match_lo, np.maximum(match_hi - match_lo, 0)
-
-
-def _overlap_pairs(starts1, ends1, starts2, ends2):
-    """All (i1, i2) with s1<e2' and s2<e1' (point-rewritten ends)."""
-    return _sweep_pairs(_overlap_sweep(starts1, ends1, starts2, ends2))
-
-
-def _sweep_pairs(sweep):
-    """Expand an :func:`_overlap_sweep` into its (i1, i2) pairs."""
-    sides, idx, match_lo, counts = sweep
+    counts = np.maximum(match_hi - match_lo, 0)
     total = counts.sum()
     if total == 0:
         return np.array([], dtype=np.int64), np.array([], dtype=np.int64)
-    anchors = np.repeat(np.arange(sides.shape[0]), counts)
+    anchors = np.repeat(np.arange(starts.shape[0]), counts)
     offs = np.arange(total) - np.repeat(np.cumsum(counts) - counts, counts)
     others = np.repeat(match_lo, counts) + offs
     # keep only cross-set pairs, oriented (set1, set2)

@@ -28,8 +28,9 @@ Key physical choices:
   hand-back (``construction.local_df``), so no Python-worker stage,
   shuffle or per-chromosome product runs at execution time. This covers
   ``merge`` (under its own 32 MB ``local`` gate), the ``coverage``,
-  ``count_overlaps`` and ``assign_view`` kernels, broadcast ``closest``
-  and ``overlap`` when both sides are tiny.
+  ``count_overlaps`` and ``assign_view`` kernels and broadcast
+  ``closest``. ``overlap`` keeps its join: its driver path did not pay
+  end to end (SCALING §17).
 """
 
 from __future__ import annotations
@@ -544,13 +545,6 @@ def overlap(
         _verify_columns(df2, [c], "overlap on")
     sfx1, sfx2 = suffixes
     jt = _join_type(how)
-    if (strategy == "auto" and _bin_hint is None and how in ("inner", "left")
-            and not return_index and not keep_order
-            and (return_input or return_overlap)):
-        out = _overlap_local(df1, df2, (ck1, sk1, ek1), (ck2, sk2, ek2), on,
-                             suffixes, how, return_input, return_overlap)
-        if out is not None:
-            return out
 
     d1, d2 = df1, df2
     if return_index:
@@ -610,114 +604,6 @@ def overlap(
             keep += ["overlap_" + sk1, "overlap_" + ek1]
         joined = joined.select(*keep)
     return joined
-
-
-_LOCAL_KEY_TYPES = ("string", "bigint", "int", "smallint", "tinyint")
-
-
-def _overlap_local(df1, df2, cols1, cols2, on, suffixes, how,
-                   return_input, return_overlap):
-    """``overlap`` of two tiny sides on the driver: one bounded Arrow
-    collect per side, the :func:`closest._overlap_sweep` per (chrom,
-    *on) group (exact for points and INT64_MAX), and the matched rows
-    taken from the Arrow tables into a LocalRelation whose schema is the
-    Spark join's.
-
-    Returns None — the caller builds the Spark join — unless both sides
-    are :func:`_tiny`, the keys compare as Python values exactly as
-    Spark's equality does (same string or integral type on both sides),
-    the coordinates are BIGINT and the suffixed names are unambiguous.
-    It also returns None when a side exceeds
-    ``spark.bioframe.smallInputMaxRows``, when the sweep would allocate
-    more candidate pairs than that cap (checked before any pair
-    exists), or when a side holds an inverted row (start > end), which
-    the sweep cannot price. Null keys or coordinates never match; under
-    ``how='left'`` their df1 rows come back with null df2 columns."""
-    import numpy as np
-    import pandas as pd
-    import pyarrow as pa
-
-    from .closest import _overlap_sweep, _sweep_pairs
-
-    (ck1, sk1, ek1), (ck2, sk2, ek2) = cols1, cols2
-    sfx1, sfx2 = suffixes
-    t1, t2 = dict(df1.dtypes), dict(df2.dtypes)
-    names1 = [c + sfx1 for c in df1.columns]
-    names2 = [c + sfx2 for c in df2.columns]
-    ov_cols = ["overlap_" + sk1, "overlap_" + ek1] if return_overlap else []
-    if (any(t1[a] != t2[b] or t1[a] not in _LOCAL_KEY_TYPES
-            for a, b in zip([ck1, *on], [ck2, *on]))
-            or {t1[sk1], t1[ek1], t2[sk2], t2[ek2]} != {"bigint"}
-            or len(set(names1 + names2 + ov_cols))
-            < len(names1) + len(names2) + len(ov_cols)
-            or not (_tiny(df1) and _tiny(df2))):
-        return None
-    cap = _threshold(df1, "smallInputMaxRows", _SMALL_INPUT_MAX_ROWS)
-
-    def side(df, keys, sk, ek):
-        # probe=False: a tiny frame is far under the probe's size bar
-        tbl = _bounded_arrow(df, cap, probe=False)
-        if tbl is None:
-            return None
-        ok = np.ones(tbl.num_rows, dtype=bool)
-        for c in [*keys, sk, ek]:
-            ok &= tbl[c].is_valid().to_numpy(zero_copy_only=False)
-        s, e = (tbl[c].fill_null(0).to_numpy() for c in (sk, ek))
-        if (s[ok] > e[ok]).any():
-            return None
-        pos = np.flatnonzero(ok)
-        kdf = pd.DataFrame({i: tbl[k].to_pandas(types_mapper=pd.ArrowDtype)
-                            for i, k in enumerate(keys)}).iloc[pos]
-        groups = (kdf.groupby(list(range(len(keys))), sort=False).indices
-                  if len(pos) else {})
-        return tbl, s, e, {(k if isinstance(k, tuple) else (k,)): pos[ix]
-                           for k, ix in groups.items()}
-
-    one = side(df1, [ck1, *on], sk1, ek1)
-    two = one and side(df2, [ck2, *on], sk2, ek2)
-    if two is None:
-        return None
-    tbl1, s1, e1, g1 = one
-    tbl2, s2, e2, g2 = two
-    work, total = [], 0
-    for key, r1 in g1.items():
-        r2 = g2.get(key)
-        if r2 is None:
-            continue
-        sweep = _overlap_sweep(s1[r1], e1[r1], s2[r2], e2[r2])
-        total += int(sweep[3].sum())
-        if total > cap:
-            return None
-        work.append((r1, r2, sweep))
-    i1 = [np.zeros(0, dtype=np.int64)]
-    i2 = [np.zeros(0, dtype=np.int64)]
-    for r1, r2, sweep in work:
-        a, b = _sweep_pairs(sweep)
-        i1.append(r1[a])
-        i2.append(r2[b])
-    i1, i2 = np.concatenate(i1), np.concatenate(i2)
-    if how == "left":
-        lonely = np.setdiff1d(np.arange(tbl1.num_rows), i1)
-        i1 = np.concatenate([i1, lonely])
-        i2 = np.concatenate([i2, np.full(lonely.size, -1)])
-    miss = i2 < 0
-    j2 = np.where(miss, 0, i2)
-    fields = ([T.StructField(n, f.dataType, f.nullable)
-               for n, f in zip(names1, df1.schema.fields)]
-              + [T.StructField(n, f.dataType, f.nullable or how == "left")
-                 for n, f in zip(names2, df2.schema.fields)]
-              + [T.StructField(n, T.LongType(), True) for n in ov_cols])
-    cols = ([tbl1.column(i).take(pa.array(i1))
-             for i in range(tbl1.num_columns)]
-            + [tbl2.column(i).take(pa.array(j2, mask=miss))
-               for i in range(tbl2.num_columns)])
-    if return_overlap:
-        cols += [pa.array(np.maximum(s1[i1], s2[j2]), mask=miss),
-                 pa.array(np.minimum(e1[i1], e2[j2]), mask=miss)]
-    if not return_input:
-        fields, cols = fields[-2:], cols[-2:]
-    return construction.local_df(
-        pa.table(cols, names=[f.name for f in fields]), T.StructType(fields))
 
 
 def _outer_path(L, jt, stats, bin_size, lo, hi) -> str:

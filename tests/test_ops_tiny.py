@@ -13,7 +13,6 @@ from helpers import rows
 
 import bioframe_spark as bf
 from bioframe_spark.core.construction import local_df
-from bioframe_spark.operators import closest as closest_mod
 from bioframe_spark.operators import ops
 
 M = (1 << 63) - 1
@@ -135,23 +134,10 @@ def test_closest_int64_max(a, b, distributed):
           distributed, "MapInPandas")
 
 
-def test_overlap_inner_and_left(a, b, distributed):
-    for how in ("inner", "left"):
-        _same(lambda: bf.overlap(a, b, how=how, suffixes=("", "_b")),
-              distributed)
-    _same(lambda: bf.overlap(a, b, how="left", suffixes=("", "_b"),
-                             return_overlap=True, return_input=False),
-          distributed)
-    _same(lambda: bf.overlap(a, b, how="inner", suffixes=("", "_b"),
-                             on=["name"]), distributed)
-
-
 def test_int_chrom_all_operators(spark, distributed):
     sch = "chrom long, start long, end long"
     x = local_df([(1, 0, 10), (1, 5, 5), (2, 3, 9), (10, 1, 4)], sch)
     y = local_df([(1, 2, 6), (2, 8, 20), (10, 0, 2), (3, 0, 9)], sch)
-    _same(lambda: bf.overlap(x, y, how="left", suffixes=("", "_y")),
-          distributed)
     _same(lambda: ops.coverage(x, y), distributed, "ArrowEvalPython")
     _same(lambda: ops.count_overlaps(x, y), distributed, "ArrowEvalPython")
     _same(lambda: bf.closest(x, y, suffixes=("", "_y")), distributed,
@@ -165,8 +151,6 @@ def test_empty_df1(a, b, distributed):
     _same(lambda: ops.count_overlaps(e, b), distributed)
     _same(lambda: bf.closest(e, b.filter("start < 100"),
                              suffixes=("", "_b")), distributed)
-    _same(lambda: bf.overlap(e, b, how="left", suffixes=("", "_b")),
-          distributed)
     tiny = ops.merge(e.select("chrom", "start", "end"))
     _assert_local(tiny)
     assert tiny.count() == 0
@@ -177,14 +161,10 @@ def test_parquet_input(spark, tmp_path, b, distributed):
     pa_ = spark.read.parquet(str(tmp_path / "a"))
     _same(lambda: ops.coverage(pa_, b.select("chrom", "start", "end")),
           distributed, "ArrowEvalPython")
-    _same(lambda: bf.overlap(pa_, b, how="inner", suffixes=("", "_b")),
-          distributed)
 
 
 def test_inverted_rows_fall_through(a, b):
     inv = local_df([("chr1", 9, 2, "inv")], SCH)
-    out = bf.overlap(a.unionByName(inv), b, how="left", suffixes=("", "_b"))
-    assert "Join" in _plan(out)
     out = ops.coverage(a, b.select("chrom", "start", "end").unionByName(
         inv.select("chrom", "start", "end")))
     assert "Join" in _plan(out)
@@ -194,7 +174,6 @@ def test_explicit_strategy_keeps_its_construction(a, b):
     assert "MapInPandas" in _plan(bf.closest(
         a.filter("start < 100"), b.filter("start < 100"),
         strategy="broadcast"))
-    assert "Join" in _plan(bf.overlap(a, b, strategy="plain"))
 
 
 def test_over_gate_and_unknown_size_keep_python_stage(spark, b):
@@ -209,23 +188,13 @@ def test_streaming_never_tiny(spark):
     assert not ops._tiny(stream)
 
 
-def test_overlap_pair_cap_falls_through_before_pairs(spark, monkeypatch):
-    # 6 x 6 rows under a 6-row cap, but 36 pairs
-    x = local_df([("chr1", i, 100 + i, str(i)) for i in range(6)], SCH)
-    y = local_df([("chr1", 50 + i, 60 + i, str(i)) for i in range(6)], SCH)
-
-    def boom(sweep):
-        raise AssertionError("pairs materialized over the cap")
-
-    monkeypatch.setattr(closest_mod, "_sweep_pairs", boom)
-    spark.conf.set("spark.bioframe.smallInputMaxRows", "6")
+def test_row_cap_falls_through(spark, a, b):
+    # df1's 11 rows exceed a lowered cap that df2's 7 rows fit under
+    cov = lambda: ops.coverage(a, b.select("chrom", "start", "end"))
+    spark.conf.set("spark.bioframe.smallInputMaxRows", "8")
     try:
-        out = bf.overlap(x, y, how="inner", suffixes=("", "_y"))
+        out = cov()
     finally:
         spark.conf.unset("spark.bioframe.smallInputMaxRows")
-    assert "Join" in _plan(out)
-    monkeypatch.undo()
-    ref = bf.overlap(x, y, how="inner", suffixes=("", "_y"))
-    _assert_local(ref)
-    assert out.count() == 36
-    assert rows(out) == rows(ref)
+    assert "ArrowEvalPython" in _plan(out)
+    assert rows(out) == rows(cov())

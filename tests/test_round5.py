@@ -520,17 +520,26 @@ def test_merge_local_cap_fallback(spark):
 def test_closest_sentinel_ends_all_strategies(spark):
     """Pre-r5 bug: binned closest on INT64_MAX sentinel ends crashed
     (span literal past int64; probe pad overflow under ANSI). All three
-    strategies must run and agree."""
+    strategies must run and agree. A point AT INT64_MAX has zero width
+    in every kernel: it overlaps nothing, so with ``ignore_overlaps`` it
+    is still the closest interval to the other point at INT64_MAX."""
     d1 = ivals(spark, [("chr1", 0, 10), ("chr1", 50, INT64_MAX),
-                       ("chr1", 200, 250)])
-    d2 = ivals(spark, [("chr1", 20, 30), ("chr1", 500, 600)])
-    outs = {}
-    for strat in ("cogroup", "broadcast", "binned"):
-        out = bf.closest(d1, d2, strategy=strat, suffixes=("", "_x"))
-        outs[strat] = sorted((r["start"], r["start_x"], r["distance"])
-                             for r in out.collect())
-    assert outs["cogroup"] == outs["broadcast"] == outs["binned"]
-    assert outs["binned"] == [(0, 20, 10), (50, 500, 0), (200, 20, 170)]
+                       ("chr1", 200, 250), ("chr1", INT64_MAX, INT64_MAX)])
+    d2 = ivals(spark, [("chr1", 20, 30), ("chr1", 500, 600),
+                       ("chr1", INT64_MAX, INT64_MAX)])
+    pt = (INT64_MAX, INT64_MAX, 0)
+    expect = {False: [(0, 20, 10), (50, 500, 0), (200, 20, 170), pt],
+              True: [(0, 20, 10), (50, INT64_MAX, 0), (200, 20, 170), pt]}
+    for ignore in (False, True):
+        outs = {}
+        for strat in ("cogroup", "broadcast", "binned"):
+            out = bf.closest(d1, d2, strategy=strat, suffixes=("", "_x"),
+                             ignore_overlaps=ignore)
+            outs[strat], cols = rows(out)
+        assert outs["cogroup"] == outs["broadcast"] == outs["binned"]
+        pick = [cols.index(c) for c in ("start", "start_x", "distance")]
+        assert sorted(tuple(t[i] for i in pick)
+                      for t in outs["binned"]) == expect[ignore]
 
 
 def test_expand_sentinel_saturates(spark):
