@@ -162,6 +162,48 @@ def merge_intervals(starts, ends, min_dist=0):
     return cluster_ids, s[first_of_island], reach[last_of_island]
 
 
+def island_sweep(starts, ends, weights=None, min_dist=0):
+    """The engine's one NumPy gaps-and-islands sweep over ONE group
+    (callers group by chrom/on keys and call it per group).
+
+    Same border rule as :func:`merge_intervals`: sort by (start, end);
+    a row opens an island where start > running max end + ``min_dist``
+    (strict ``>=`` under ``min_dist=None``, so coincident points stay
+    separate islands). Unlike the reference mirror it is exact at the
+    int64 edge: a running max within ``min_dist`` of INT64_MAX (sentinel
+    ends) saturates instead of wrapping, so nothing clears it — the
+    ``try_add`` rule of the Spark border column.
+
+    Returns, per island in start order: the input position of its first
+    row, its start, its end (the running max at its last row) and its
+    summed ``weights`` (row count when None). Island order, spans and
+    counts depend only on the row SET, so merging weighted islands back
+    in with further rows gives the islands of one pass (the invariant
+    the map-side fuse and the streaming state rely on)."""
+    s = np.asarray(starts, dtype=np.int64)
+    e = np.asarray(ends, dtype=np.int64)
+    n = len(s)
+    if n == 0:
+        return (np.zeros(0, dtype=np.int64),) * 4
+    order = np.lexsort((e, s))
+    s, e = s[order], e[order]
+    run = np.maximum.accumulate(e)
+    border = np.ones(n, dtype=bool)
+    if min_dist is None:
+        border[1:] = s[1:] >= run[:-1]
+    else:
+        lim = INT64_MAX - int(min_dist)
+        border[1:] = s[1:] > np.minimum(run[:-1], lim) + np.int64(min_dist)
+    idx = np.flatnonzero(border)
+    nxt = np.append(idx[1:], n)
+    if weights is None:
+        counts = nxt - idx
+    else:
+        w = np.asarray(weights, dtype=np.int64)[order]
+        counts = np.add.reduceat(w, idx)
+    return order[idx], s[idx], run[nxt - 1], counts
+
+
 def complement_intervals(starts, ends, bounds=(0, INT64_MAX)):
     """Gaps left uncovered inside ``bounds`` by the merged intervals."""
     lo, hi = bounds

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..core import construction
+from ..core.arrops import island_sweep
 from ..core.persist import owns, persist
 from ..core.specs import _resolve_cols, _verify_columns
 from ..core.stringops import parse_region
@@ -156,6 +157,13 @@ def _tiny(df: DataFrame) -> bool:
     Unknown sizes read as 1<<60, so they never qualify; streaming frames
     cannot be collected."""
     return not df.isStreaming and _plan_size_bytes(df) <= _TINY_INPUT_BYTES
+
+
+def _atomic(df: DataFrame, c: str) -> bool:
+    """Column ``c`` holds hashable scalars: pandas can group the driver
+    and map-side kernels by it (array/map/struct/binary values cannot)."""
+    return not dict(df.dtypes)[c].startswith(
+        ("array", "map", "struct", "binary"))
 
 
 def _spread_if_underpartitioned(df: DataFrame) -> DataFrame:
@@ -1020,6 +1028,23 @@ def _expand_point_dups(dd: DataFrame, sk: str, ek: str,
     ).withColumnRenamed("__m", "__mult")
 
 
+def _border(start: Column, prev_max: Column, min_dist) -> Column:
+    """The one Spark island-border rule (``arrops.island_sweep`` is its
+    NumPy twin): a row opens an island where ``start > prev_max +
+    min_dist``, or ``start >= prev_max`` under ``min_dist=None``
+    (half-open abutting intervals and coincident points stay separate),
+    and always where ``prev_max`` is null (nothing precedes it).
+    ``try_add``: a running max at INT64_MAX (sentinel ends) plus
+    ``min_dist`` overflows under ANSI; nothing can start beyond it, so
+    the overflow reads as no border (coalesce to false)."""
+    if min_dist is None:
+        border = start >= prev_max
+    else:
+        border = F.coalesce(start > F.try_add(prev_max, F.lit(min_dist)),
+                            F.lit(False))
+    return F.when(prev_max.isNull(), F.lit(True)).otherwise(border)
+
+
 def _distinct_islands(df: DataFrame, ck: str, sk: str, ek: str, on: list,
                       min_dist: int | None) -> DataFrame:
     """Island numbers over DISTINCT (chrom,*on,start,end) intervals with a
@@ -1041,16 +1066,7 @@ def _distinct_islands(df: DataFrame, ck: str, sk: str, ek: str, on: list,
     dd = _expand_point_dups(dd, sk, ek, min_dist)
     w = Window.partitionBy(*keys).orderBy(sk, ek, "__dup")
     prev_max_end = F.max(ek).over(w.rowsBetween(Window.unboundedPreceding, -1))
-    if min_dist is None:
-        border = F.col(sk) >= prev_max_end
-    else:
-        # try_add: a running max at INT64_MAX (complement sentinel ends)
-        # + min_dist overflows under ANSI; overflow means nothing can
-        # start beyond it, so the border is false (coalesce)
-        border = F.coalesce(
-            F.col(sk) > F.try_add(prev_max_end, F.lit(min_dist)),
-            F.lit(False))
-    border = F.when(prev_max_end.isNull(), F.lit(True)).otherwise(border)
+    border = _border(F.col(sk), prev_max_end, min_dist)
     return dd.withColumn(
         "__island",
         F.sum(border.cast("long")).over(w.rowsBetween(Window.unboundedPreceding, 0)),
@@ -1094,19 +1110,16 @@ def _distinct_islands_ranged(df: DataFrame, ck: str, sk: str, ek: str, on: list,
     # fuses coincident points, and islands holding >=2 rows have
     # positive width), so __mult still equals the number of copies.
     mult = F.sum(weight) if weight else F.count(F.lit(1))
-    # ONE input-sized exchange instead of two (r10, guide §2.4): the
-    # historical shape paid the dedup aggregate's own exchange on
-    # (keys, sk, ek) and then a SECOND full exchange to the windows'
-    # (keys, __rng) partitioning. Repartitioning by (keys, __rng) FIRST
-    # satisfies both: hash partitioning on a subset of the grouping
-    # columns clusters the dedup groups (__rng is a function of sk, so
-    # adding it to the groupBy leaves the groups identical), and the
-    # aggregate preserves the partitioning the windows require, so
-    # EnsureRequirements inserts only sorts downstream. Trade-off,
-    # measured: the raw rows cross the one exchange un-deduplicated
-    # (map-side partial aggregation can no longer shrink them first) —
-    # a loss only when within-partition duplicates are heavy, a shape
-    # the premerge path already collapses before this runs.
+    # ONE input-sized exchange (SCALING §2, ranged plan shape):
+    # repartitioning by (keys, __rng) FIRST satisfies both the dedup
+    # aggregate and the windows — hash partitioning on a subset of the
+    # grouping columns clusters the dedup groups (__rng is a function
+    # of sk, so adding it to the groupBy leaves the groups identical),
+    # and the aggregate preserves the partitioning the windows require,
+    # so EnsureRequirements inserts only sorts downstream. Trade-off:
+    # the raw rows cross the exchange un-deduplicated (no map-side
+    # partial aggregation first) — a loss only when within-partition
+    # duplicates are heavy, a shape the premerge path collapses first.
     dd = (df.withColumn("__rng", F.floor(F.col(sk) / F.lit(range_width)))
             .repartition(*keys, "__rng")
             .groupBy(*keys, "__rng", sk, ek)
@@ -1114,25 +1127,13 @@ def _distinct_islands_ranged(df: DataFrame, ck: str, sk: str, ek: str, on: list,
     dd = _expand_point_dups(dd, sk, ek, min_dist)
     w = Window.partitionBy(*keys, "__rng").orderBy(sk, ek, "__dup")
     local_prev = F.max(ek).over(w.rowsBetween(Window.unboundedPreceding, -1))
-    if min_dist is None:
-        local_border = F.col(sk) >= local_prev
-        carry_clear = F.col(sk) >= F.col("__M")
-    else:
-        local_border = F.coalesce(
-            F.col(sk) > F.try_add(local_prev, F.lit(min_dist)),
-            F.lit(False))  # try_add: sentinel-end overflow = no border
-        carry_clear = F.coalesce(
-            F.col(sk) > F.try_add(F.col("__M"), F.lit(min_dist)),
-            F.lit(False))
-    local_border = F.when(local_prev.isNull(), F.lit(True)).otherwise(local_border)
+    local_border = _border(F.col(sk), local_prev, min_dist)
 
-    # r9 (guide §2.3/§2.4): the carry aggregate reads the PRE-dedup input —
-    # per-(keys, range) max end is duplicate-invariant, so this branch is a
-    # column-pruned scan + partial aggregation of a tiny (keys × ranges)
-    # table instead of a second execution of the dedup aggregate + its
-    # exchange (the historical shape re-ran scan→dedup-agg for the carry
-    # AND the offsets branch: 3 scans / 3 dedup aggs per query, visible as
-    # three parquet Scan nodes in plans/r09/merge_ranged_before.txt).
+    # The carry aggregate reads the PRE-dedup input: per-(keys, range)
+    # max end is duplicate-invariant, so this branch is a column-pruned
+    # scan + partial aggregation of a tiny (keys × ranges) table, never a
+    # second execution of the dedup aggregate and its exchange (SCALING
+    # §2, ranged plan shape).
     ragg = df.groupBy(
         *keys, F.floor(F.col(sk) / F.lit(range_width)).alias("__rng")
     ).agg(F.max(ek).alias("__rmax"))
@@ -1150,7 +1151,8 @@ def _distinct_islands_ranged(df: DataFrame, ck: str, sk: str, ek: str, on: list,
     dd = dd.join(F.broadcast(carry), cond, "left").drop(
         *["__c_" + k for k in keys], "__c_rng"
     )
-    border_eff = local_border & (F.col("__M").isNull() | carry_clear)
+    # a null carry (first range of the group) clears by _border's rule
+    border_eff = local_border & _border(F.col(sk), F.col("__M"), min_dist)
     dd = dd.withColumn(
         "__b", border_eff.cast("long")
     ).withColumn(
@@ -1240,149 +1242,136 @@ def _null_key_rows(df, ck, sk, ek, on):
 
 
 _CLUSTER_PREMERGE_BYTES = 8 << 20  # cluster's premerge crossover (see
-# cluster(); measured round 5 — its classic construction is ~3x merge's)
-
-_PREMERGE_BYTES = 32 << 20  # above this scan size merge shrinks its rows
-# MAP-SIDE before any shuffle. Re-measured after the r6 buffered fuse
-# (256k-row windows, ~40x shrink vs the old per-Arrow-batch 1.3x;
-# medians of 3 solo, reproduce with `python tools/ladder.py
-# 'merge(classic)' 'merge(premerge)' 'merge(ranged)'
-# 'merge(premerge+ranged)'`): classic still wins
-# at 14 MB (1.22 s vs 1.62 s — the fuse pass floor), premerge wins
-# 1.6x at 55 MB (1.60 s vs 2.54 s) and 2.5x at 220 MB (3.52 s vs
-# 8.72 s) — the wash moved down from the old ~57 MB to ~30 MB.
+# cluster(); SCALING §9) — its classic construction is ~3x merge's
 
 _PREMERGE_CLASSIC_ROWS = 4_000_000  # after the fuse, if the SHRUNKEN
 # row count (known exactly — the fused frame is persisted and counted)
 # fits comfortably in per-chromosome window tasks, the classic border
 # merge beats the ranged construction (its point-dup expansion + carry
-# join are pure overhead on island-bounded data: 3.52 s vs 5.70 s at
-# the 16x rung). Above it, merge-UNFRIENDLY data (local fuse shrank
-# nothing) keeps the ranged path so no single-chrom window task
-# explodes. Knob: spark.bioframe.premergeClassicRows.
+# join are pure overhead on island-bounded data; SCALING §11-r06).
+# Above it, merge-UNFRIENDLY data (local fuse shrank nothing) keeps the
+# ranged path so no single-chrom window task explodes. Knob:
+# spark.bioframe.premergeClassicRows.
 
 
 def _premerge_local(df: DataFrame, ck: str, sk: str, ek: str, on: list,
                     min_dist) -> DataFrame:
-    """MAP-SIDE island collapse: per Arrow batch, sort locally and fuse
+    """MAP-SIDE island collapse: per buffered run of Arrow batches, fuse
     each run of locally-overlapping intervals into one span carrying its
-    row count ``__cnt`` — no shuffle, pure row reduction before the
-    window/shuffle stages. Exactness: fusing rows that WILL share an
-    island is order-independent (the union span and count are island
-    invariants), and local borders can only under-fuse (cross-partition
-    islands repair downstream), never over-fuse. The strict
-    ``min_dist=None`` border (``>=``) is applied locally too, so
-    coincident points are never fused and every emitted point row has
-    ``__cnt`` 1 (the invariant ``_expand_point_dups`` needs).
+    row count ``__cnt`` (``arrops.island_sweep`` per (chrom, *on) group)
+    — no shuffle, pure row reduction before the window/shuffle stages.
+    Exactness: fusing rows that WILL share an island is order-independent
+    (the union span and count are island invariants), and local borders
+    can only under-fuse (cross-partition islands repair downstream),
+    never over-fuse. The strict ``min_dist=None`` border (``>=``) is
+    applied locally too, so coincident points are never fused and every
+    emitted point row has ``__cnt`` 1 (the invariant
+    ``_expand_point_dups`` needs).
 
     Input must be null-free in (chrom, start, end, *on) — callers split
-    null rows first. Output: (chrom, start, end, *on, __cnt).
+    null rows first — and its key columns atomic (pandas groups by them;
+    ValueError otherwise). Output: (chrom, start, end, *on, __cnt).
     """
     cols_ = [ck, sk, ek] + on
     keys = [ck] + on
+    bad = [c for c in keys if not _atomic(df, c)]
+    if bad:
+        raise ValueError(f"premerge needs atomic key columns; {bad} hold "
+                         "array/map/struct/binary values")
     out_schema = T.StructType(
         [df.schema[c] for c in cols_] + [T.StructField("__cnt", T.LongType())]
     )
     # Fuse over BUFFERED batches, not raw Arrow batches: the shrink
     # ratio is set by how many rows share a fuse window, and the default
-    # 10k-row Arrow batch caps it brutally on wide-span partitions
-    # (measured on the 64x ladder: 38.4M rows -> 29.7M spans at 10k
-    # batches — a 1.3x shrink that cost more than it saved — vs ~60x
-    # when fusing 256k-row windows). Buffering k batches costs O(buffer)
-    # task memory (~10 MB at the default) and is batch-boundary-exact:
-    # under-fusing across buffer edges repairs downstream, same as
-    # across partitions.
+    # 10k-row Arrow batch caps it far below where it saturates (SCALING
+    # §11-r06). Buffering costs O(buffer) task memory (~10 MB at the
+    # default) and is batch-boundary-exact: under-fusing across buffer
+    # edges repairs downstream, same as across partitions.
     buf_rows = _threshold(df, "premergeBatchRows", 262_144)
 
     def gen(batches):
-        import numpy as np
         import pandas as pd
 
         held, held_n = [], 0
-
-        def flush():
-            pdf = (held[0] if len(held) == 1
-                   else pd.concat(held, ignore_index=True))
-            return _fuse(pdf)
-
         for pdf in batches:
-            pdf = pdf[cols_]
             if not len(pdf):
                 continue
-            held.append(pdf)
+            held.append(pdf[cols_])
             held_n += len(pdf)
             if held_n >= buf_rows:
-                yield flush()
+                yield _fuse(pd.concat(held, ignore_index=True))
                 held, held_n = [], 0
         if held:
-            yield flush()
+            yield _fuse(pd.concat(held, ignore_index=True))
 
     def _fuse(pdf):
-            import numpy as np
+        import numpy as np
 
-            vd = pdf.sort_values(keys + [sk, ek], kind="mergesort")
-            # EXACT int64 border arithmetic: a groupby().shift() would
-            # inject NaN and degrade the whole column to float64, which
-            # rounds sentinel ends (INT64_MAX) UP and can OVER-fuse —
-            # an error the global pass cannot repair (under-fusing is
-            # the only safe direction). Group firsts come from key-array
-            # change detection instead.
-            run = vd.groupby(keys, sort=False)[ek].cummax().to_numpy()
-            s_arr = vd[sk].to_numpy()
-            first = np.zeros(len(vd), dtype=bool)
-            first[0] = True
-            for k in keys:
-                kv = vd[k].to_numpy()
-                first[1:] |= kv[1:] != kv[:-1]
-            prev = np.empty_like(run)
-            prev[1:] = run[:-1]
-            prev[0] = 0
-            if min_dist is None:
-                border = s_arr >= prev
-            else:
-                # mask before adding: int64 + min_dist wraps silently
-                safe = prev <= np.iinfo("int64").max - min_dist
-                border = safe & (s_arr > prev + min_dist)
-            border = border | first
-            import pandas as pd
-            isl = pd.Series(border, index=vd.index).cumsum()
-            agg = vd.groupby(isl, sort=False).agg(
-                **{k: (k, "first") for k in keys},
-                **{sk: (sk, "min"), ek: (ek, "max")},
-                __cnt=(sk, "size"),
-            )
-            return agg[cols_ + ["__cnt"]]
+        s_all = pdf[sk].to_numpy("int64")
+        e_all = pdf[ek].to_numpy("int64")
+        take, ends, cnts = [], [], []
+        for ix in pdf.groupby(keys, sort=False).indices.values():
+            f, _, e, c = island_sweep(s_all[ix], e_all[ix], min_dist=min_dist)
+            take.append(ix[f])
+            ends.append(e)
+            cnts.append(c)
+        out = pdf.iloc[np.concatenate(take)].reset_index(drop=True)
+        out[ek] = np.concatenate(ends).astype(pdf[ek].dtype)
+        out["__cnt"] = np.concatenate(cnts)
+        return out
 
     return df.mapInPandas(gen, out_schema)
 
 
 def _border_merge_weighted(d: DataFrame, ck: str, sk: str, ek: str,
-                           on: list, min_dist) -> DataFrame:
-    """The classic border-row merge (see merge() below) over PRE-MERGED
-    rows carrying ``__cnt``: n_intervals comes from count-cumsum
-    differences instead of row-number differences. Null-free input."""
+                           on: list, min_dist, weight: str | None = None
+                           ) -> DataFrame:
+    """merge's distributed tail on the classic per-(chrom, *on) window:
+    union spans + counts straight from the BORDER rows. Null-free input;
+    each row stands for ``weight`` intervals (the fused ``__cnt``
+    column) or for one (``None``: raw rows).
+
+    One Window operator computes, in a single pass over one sort,
+    prev_max (exclusive running max of end), a row number, the
+    exclusive weight cumsum and the whole-group max/total; the border
+    filter (``_border``) shrinks the stream to one row per island, and a
+    second (tiny) window reads each island's end and size from the NEXT
+    border via ``lead()``:
+
+    - island end = lead(prev_max): the exclusive running max at the next
+      border is the max end over every row before it, which equals THIS
+      island's max end (a border implies all earlier ends lie below its
+      start, so the prefix max is attained inside the current island);
+      last island → group max;
+    - island size = lead(cum) - cum: the weight between borders; last
+      island → group total - cum.
+
+    No second full-width window pass and no hash aggregation of data
+    rows (SCALING §2).
+
+    Tie-safety over raw rows: border flags depend only on coordinates
+    (the running max over any permutation of tied rows is identical), so
+    island MEMBERSHIP is order-invariant. The second window orders by
+    the pass-1 row number — a strict total order — because border rows
+    can tie on (start, end) (two identical point intervals under
+    ``min_dist=None`` are each a border) and a coordinate re-sort could
+    transpose them between the two passes, corrupting lead().
+    ``cluster`` needs stable per-row ids and uses ``_distinct_islands``.
+    """
     keys = [ck] + on
+    wt = F.col(weight) if weight else F.lit(1)
     w = Window.partitionBy(*keys).orderBy(sk, ek)
     wfull = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    prev_max = F.max(ek).over(w.rowsBetween(Window.unboundedPreceding, -1))
-    cum_prev = F.coalesce(
-        F.sum("__cnt").over(w.rowsBetween(Window.unboundedPreceding, -1)),
-        F.lit(0))
+    wprev = w.rowsBetween(Window.unboundedPreceding, -1)
     d = d.select(
         ck, sk, ek, *on,
-        prev_max.alias("__pm"),
+        F.max(ek).over(wprev).alias("__pm"),
         F.row_number().over(w).alias("__rn"),
-        cum_prev.alias("__ce"),
+        F.coalesce(F.sum(wt).over(wprev), F.lit(0)).alias("__ce"),
         F.max(ek).over(wfull).alias("__gmax"),
-        F.sum("__cnt").over(wfull).alias("__gtot"),
+        F.sum(wt).over(wfull).alias("__gtot"),
     )
-    if min_dist is None:
-        border = F.col(sk) >= F.col("__pm")
-    else:
-        border = F.coalesce(
-            F.col(sk) > F.try_add(F.col("__pm"), F.lit(min_dist)),
-            F.lit(False))  # try_add: sentinel-end overflow = no border
-    d = d.filter(F.when(F.col("__pm").isNull(), F.lit(True)).otherwise(border))
+    d = d.filter(_border(F.col(sk), F.col("__pm"), min_dist))
     w2 = Window.partitionBy(*keys).orderBy("__rn")
     return d.select(
         ck, sk,
@@ -1405,12 +1394,10 @@ def _merge_local(df: DataFrame, ck, sk, ek, on, min_dist):
 
     Exactness: collection goes through Arrow (``toArrow``), so int64
     coordinates — including INT64_MAX sentinels from complement outputs
-    — never round-trip through float64. The sweep replicates the
-    distributed border rules bit-for-bit: sort by (start, end) per
-    (chrom, *on) group; border where ``start > running_max + min_dist``
-    (strict ``>=`` under ``min_dist=None`` — coincident points stay
-    separate islands). Null-key rows pass through untouched with null
-    ``n_intervals``. Returns None when the input exceeds
+    — never round-trip through float64, and each (chrom, *on) group runs
+    ``arrops.island_sweep``, whose border rule is the distributed
+    ``_border`` bit for bit. Null-key rows pass through untouched with
+    null ``n_intervals``. Returns None when the input exceeds
     ``spark.bioframe.smallInputMaxRows`` (callers fall back to the
     distributed constructions)."""
     import numpy as np
@@ -1438,22 +1425,10 @@ def _merge_local(df: DataFrame, ck, sk, ek, on, min_dist):
     groups = keys.groupby([ck] + on, sort=False).indices if len(vpos) else {}
     for ix in groups.values():
         rows = vpos[ix]
-        o = np.lexsort((e_all[rows], s_all[rows]))
-        rows = rows[o]
-        s, e = s_all[rows], e_all[rows]
-        run = np.maximum.accumulate(e)
-        border = np.ones(len(s), dtype=bool)
-        if min_dist is None:
-            border[1:] = s[1:] >= run[:-1]
-        else:
-            # mask before adding: int64 run + min_dist WRAPS silently in
-            # numpy for sentinel ends (INT64_MAX); overflow = no border
-            safe = run[:-1] <= np.iinfo("int64").max - min_dist
-            border[1:] = safe & (s[1:] > run[:-1] + min_dist)
-        idx = np.flatnonzero(border)
-        first.append(rows[idx])
-        ends.append(run[np.append(idx[1:] - 1, len(s) - 1)])
-        cnts.append(np.diff(np.append(idx, len(s))))
+        f, _, e, c = island_sweep(s_all[rows], e_all[rows], min_dist=min_dist)
+        first.append(rows[f])
+        ends.append(e)
+        cnts.append(c)
     nulls = np.flatnonzero(~valid)
     out = tbl.take(pa.array(np.concatenate(first + [nulls])))
     end_col = pa.concat_arrays([
@@ -1475,61 +1450,59 @@ def merge(df: DataFrame, min_dist: int | None = 0, cols=None,
           on: list | None = None, range_width="auto",
           premerge="auto", local="auto") -> DataFrame:
     """Collapse overlapping/nearby intervals into union spans + count
-    (reference ``ops.py:711-839``). One shuffle by (chrom,*on); the final
-    groupBy reuses the window partitioning, aggregation is partial+final.
+    (reference ``ops.py:711-839``).
 
     Rows with null chrom/start/end/on pass through untouched with null
     ``n_intervals`` (reference ``ops.py:812-831``).
 
-    ``range_width``: the range-partitioned islands construction
-    (``_distinct_islands_ranged``) — identical results, parallelism
-    groups×ranges instead of per-chromosome, for massive few-chromosome
-    inputs. Default ``"auto"`` selects it by input size; ``None`` forces
-    the classic window; an int is explicit.
+    Small inputs take the driver kernel; every other input runs ONE
+    distributed tail: null-key rows split off, the valid rows — raw
+    (weight 1) or map-side fused (weight ``__cnt``) — go through the
+    classic border-row window (``_border_merge_weighted``) or the
+    range-partitioned islands (``_distinct_islands_ranged``), and the
+    null rows union back. Value-identical on every path
+    (equivalence-tested, INT64_MAX ends and point duplicates included).
+
+    ``local``: driver-side numpy kernel (``_merge_local``) for inputs
+    whose plan size is at most ``spark.bioframe.smallInputBytes``
+    (32 MB), with a hard row cap on the collect: one bounded Arrow
+    collect + the sweep instead of a shuffle and two window stages.
+    NOTE it makes plan construction EAGER for gated inputs (same
+    contract as the coverage/count_overlaps broadcast kernels); falls
+    back transparently over the caps.
 
     ``premerge``: MAP-SIDE local island collapse (``_premerge_local``)
     before any shuffle — shrinks shuffle volume by the local merge
     factor (often 10-100× on merge-friendly genomic data) at the price
-    of one Arrow round trip over the input. Crossover re-measured after
-    the r6 buffered fuse (SCALING §11-r06; ``python tools/ladder.py
-    'merge(classic)' 'merge(premerge)'``):
-    classic wins at 14 MB, premerge wins 1.6x at 55 MB and 2.5x at
-    220 MB — default ``"auto"`` turns it on above
-    ``spark.bioframe.premergeBytes`` (32 MB, the measured wash). The
-    fused frame is persisted and counted; under
+    of one Arrow round trip over the input. Default ``"auto"`` turns it
+    on above the same ``smallInputBytes`` bar (the measured wash,
+    SCALING §11-r06) when the key columns are atomic; ``True`` with
+    array/map/struct/binary keys raises ValueError. The fused frame
+    feeding the ranged construction is persisted and counted; under
     ``spark.bioframe.premergeClassicRows`` (4M) the classic border
-    merge finishes it (the ranged machinery is overhead on
-    island-bounded data), else the ranged construction keeps the
-    per-chromosome window bounded. Value-identical on every path
-    (equivalence-tested; the weighted multiplicity preserves the
-    point-duplicate island rule).
+    merge finishes it instead (the ranged machinery is overhead on
+    island-bounded data).
 
-    ``local``: driver-side numpy kernel for SMALL inputs
-    (``_merge_local`` — plan size ≤ ``spark.bioframe.smallInputBytes``
-    with a hard row cap on the collect): one bounded Arrow collect + the
-    sweep instead of a shuffle and two window stages. NOTE it makes
-    plan construction EAGER for gated inputs (same contract as the
-    coverage/count_overlaps broadcast kernels). Value-identical; falls
-    back transparently over the caps.
+    ``range_width``: the range-partitioned islands construction —
+    identical results, parallelism groups×ranges instead of
+    per-chromosome, for massive few-chromosome inputs. Default
+    ``"auto"`` selects it by input size; ``None`` forces the classic
+    window; an int is explicit.
     """
     ck, sk, ek = _resolve_cols(cols)
     _verify_columns(df, [ck, sk, ek], "merge")
     on = list(on) if on else []
     if min_dist is not None and min_dist < 0:
         raise ValueError("min_dist>=0 or None required")
-
-    def _atomic(c):
-        t = dict(df.dtypes)[c]
-        return not t.startswith(("array", "map", "struct", "binary"))
-
+    atomic = all(_atomic(df, c) for c in [ck] + on)
+    small = _plan_size_bytes(df) <= _threshold(df, "smallInputBytes",
+                                               _SMALL_INPUT_BYTES)
     if local == "auto":
         # an EXPLICIT range_width / premerge is a request for that
         # distributed construction (benchmarks and plan tests rely on
         # it) — auto-local only competes with the auto-chosen paths
         local = (range_width == "auto" and premerge == "auto"
-                 and all(_atomic(c) for c in [ck] + on)
-                 and _plan_size_bytes(df) <= _threshold(
-                     df, "smallInputBytes", _SMALL_INPUT_BYTES))
+                 and atomic and small)
     if local:
         # small-input driver kernel (see _merge_local) — None = over the
         # row cap, fall through to the distributed constructions
@@ -1537,141 +1510,41 @@ def merge(df: DataFrame, min_dist: int | None = 0, cols=None,
         if out is not None:
             return out
     if premerge == "auto":
-        premerge = _plan_size_bytes(df) > _threshold(
-            df, "premergeBytes", _PREMERGE_BYTES)
+        premerge = atomic and not small
     range_width_auto = range_width == "auto"
     range_width = _auto_range_width(df, sk, ek, range_width)
+    nulls, valid = _null_key_rows(df, ck, sk, ek, on)
+    rows, weight = valid.select(ck, sk, ek, *on), None
     if premerge:
-        if min_dist is not None and min_dist < 0:
-            raise ValueError("min_dist>=0 or None required")
-        nulls, valid = _null_key_rows(df, ck, sk, ek, on)
-        pm = _premerge_local(valid.select(ck, sk, ek, *on),
-                             ck, sk, ek, on, min_dist)
+        rows = _premerge_local(rows, ck, sk, ek, on, min_dist)
+        weight = "__cnt"
         if range_width is not None:
-            # the ranged-islands plan consumes pm in TWO branches (the
-            # per-range window and the carry aggregate); without a
-            # persist the Arrow fuse executes once per branch (measured
-            # 58 -> 33 s on the 64x ladder). The persisted frame is the
-            # FUSED rows — small by construction when the fuse pays off.
-            pm = persist(pm)
-            if range_width_auto:
-                # adaptive post-fuse construction: the persist makes the
-                # SHRUNKEN row count exact and nearly free — when it
-                # fits per-chromosome window tasks, the classic border
-                # merge beats the ranged machinery (point-dup expansion
-                # + carry join: 3.52 s vs 5.70 s at the 16x rung), and
-                # merge-UNFRIENDLY data (no shrink) keeps the ranged
-                # path. NOTE this makes the auto big-input path
-                # driver-EAGER (one count job) — same contract as the
-                # local kernel and the closest ladder. An EXPLICIT
-                # range_width skips the switch (it is a request for the
-                # ranged construction; plan tests rely on it).
-                n_pm = pm.count()
-                if n_pm <= _threshold(df, "premergeClassicRows",
-                                      _PREMERGE_CLASSIC_ROWS):
-                    range_width = None
-        if range_width is not None:
-            isl = _distinct_islands_ranged(pm, ck, sk, ek, on, min_dist,
-                                           range_width, weight="__cnt")
-            out = isl.groupBy(ck, *on, "__island").agg(
-                F.min(sk).alias(sk),
-                F.max(ek).alias(ek),
-                F.sum("__mult").alias("n_intervals"),
-            ).drop("__island")
-            out = out.select(ck, sk, ek, *on, "n_intervals")
-        else:
-            out = _border_merge_weighted(pm, ck, sk, ek, on, min_dist)
-        nulls_out = nulls.select(
-            ck, sk, ek, *on, F.lit(None).cast("long").alias("n_intervals")
-        )
-        return out.unionByName(nulls_out)
-    if range_width is not None:
-        nulls, valid = _null_key_rows(df, ck, sk, ek, on)
-        isl = _distinct_islands_ranged(valid, ck, sk, ek, on, min_dist, range_width)
+            # the ranged-islands plan consumes the fused rows in TWO
+            # branches (the per-range window and the carry aggregate);
+            # the persist keeps the Arrow fuse to one execution
+            # (SCALING §11-r06). The persisted frame is the FUSED rows —
+            # small by construction when the fuse pays off.
+            rows = persist(rows)
+            # adaptive post-fuse construction: the persist makes the
+            # SHRUNKEN row count exact and nearly free. NOTE this makes
+            # the auto big-input path driver-EAGER (one count job). An
+            # EXPLICIT range_width skips the switch (it is a request for
+            # the ranged construction; plan tests rely on it).
+            if range_width_auto and rows.count() <= _threshold(
+                    df, "premergeClassicRows", _PREMERGE_CLASSIC_ROWS):
+                range_width = None
+    if range_width is None:
+        out = _border_merge_weighted(rows, ck, sk, ek, on, min_dist, weight)
+    else:
+        isl = _distinct_islands_ranged(rows, ck, sk, ek, on, min_dist,
+                                       range_width, weight=weight)
         out = isl.groupBy(ck, *on, "__island").agg(
             F.min(sk).alias(sk),
             F.max(ek).alias(ek),
             F.sum("__mult").alias("n_intervals"),
-        ).drop("__island")
-        out = out.select(ck, sk, ek, *on, "n_intervals")
-        nulls_out = nulls.select(
-            ck, sk, ek, *on, F.lit(None).cast("long").alias("n_intervals")
-        )
-        return out.unionByName(nulls_out)
-    # Single-scan, single-shuffle, border-row path: null-key rows ride the
-    # SAME window pass in their own partition group (flagged), so the
-    # input is read once and no union branch exists.
-    #
-    # Instead of (running-max window → border-cumsum window → hash agg
-    # over ALL rows), emit the merged spans directly from the BORDER rows:
-    # one Window operator computes, in a single pass over one sort,
-    # prev_max (exclusive running max of end), a row number, and the
-    # whole-group max/count; the border filter then shrinks the stream to
-    # one row per island, and a second (tiny) window reads the island end
-    # and size from the NEXT border via lead():
-    #   island end = lead(prev_max)            — the exclusive running max
-    #     at the next border is the max end over every row before it,
-    #     which equals THIS island's max end (a border implies all
-    #     earlier ends lie below its start, so the prefix max is always
-    #     attained inside the current island); last island → group max;
-    #   island size = lead(rn) - rn            — rows between borders;
-    #     last island → group count + 1 - rn.
-    # ~30% less work than the cumsum+agg formulation (no second full-width
-    # window pass, no hash aggregation of data rows).
-    #
-    # Tie-safety over RAW rows: border flags depend only on coordinates
-    # (the running max over any permutation of tied rows is identical), so
-    # island MEMBERSHIP is order-invariant. The second window orders by
-    # the pass-1 row number — a strict total order — because border rows
-    # can tie on (start,end) (two identical point intervals under
-    # min_dist=None are each a border) and a coordinate re-sort could
-    # transpose them between the two passes, corrupting lead().
-    # ``cluster`` needs stable per-row ids and uses ``_distinct_islands``.
-    if min_dist is not None and min_dist < 0:
-        raise ValueError("min_dist>=0 or None required")
-    valid_pred = F.lit(True)
-    for c in [ck, sk, ek] + on:
-        valid_pred = valid_pred & F.col(c).isNotNull()
-    d = df.select(ck, sk, ek, *on).withColumn("__v", valid_pred)
-    w = Window.partitionBy("__v", ck, *on).orderBy(sk, ek)
-    wfull = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    prev_max = F.max(ek).over(w.rowsBetween(Window.unboundedPreceding, -1))
-    d = d.select(
-        "__v", ck, sk, ek, *on,
-        prev_max.alias("__pm"),
-        F.row_number().over(w).alias("__rn"),
-        F.max(ek).over(wfull).alias("__gmax"),
-        F.count(F.lit(1)).over(wfull).alias("__gcnt"),
-    )
-    if min_dist is None:
-        border = F.col(sk) >= F.col("__pm")
-    else:
-        border = F.coalesce(
-            F.col(sk) > F.try_add(F.col("__pm"), F.lit(min_dist)),
-            F.lit(False))  # try_add: sentinel-end overflow = no border
-    border = (
-        F.when(~F.col("__v"), F.lit(True))          # null rows: singleton islands
-        .when(F.col("__pm").isNull(), F.lit(True))
-        .otherwise(border)
-    )
-    d = d.filter(border)
-    w2 = Window.partitionBy("__v", ck, *on).orderBy("__rn")
-    return d.select(
-        ck,
-        sk,
-        # null-key singletons keep their own end (their group's running
-        # max spans OTHER null rows' ends and would be wrong)
-        F.when(
-            F.col("__v"),
-            F.coalesce(F.lead("__pm").over(w2), F.col("__gmax")),
-        ).otherwise(F.col(ek)).alias(ek),
-        *on,
-        F.when(
-            F.col("__v"),
-            F.coalesce(F.lead("__rn").over(w2), F.col("__gcnt") + 1)
-            - F.col("__rn"),
-        ).cast("long").alias("n_intervals"),
-    )
+        ).select(ck, sk, ek, *on, "n_intervals")
+    return out.unionByName(nulls.select(
+        ck, sk, ek, *on, F.lit(None).cast("long").alias("n_intervals")))
 
 
 def _cluster_islands(df: DataFrame, ck, sk, ek, on, min_dist,
@@ -1792,8 +1665,11 @@ def _cluster_premerged(df: DataFrame, ck, sk, ek, on, min_dist):
            + [F.col(c).cast("string").alias(f"o{i}") for i, c in enumerate(on)]
            + [F.col(sk).cast("long").alias("s"),
               F.col(ek).cast("long").alias("e")])
-    cl = spans.select(*sel).limit(cap + 1).toPandas()
-    if len(cl) > cap:
+    # probe=False: the spans are a two-window aggregate that a count
+    # probe would run twice; the maxResultSize backstop and the post-hoc
+    # row check still bound the collect (see _bounded_pdf)
+    cl = _bounded_pdf(spans.select(*sel), cap, probe=False)
+    if cl is None:
         return None
     natcols = [f"__nat{i}" for i in range(len(keys))]
     cl = cl.sort_values(natcols + ["s"], kind="mergesort").reset_index(drop=True)
@@ -1878,28 +1754,22 @@ def cluster(df: DataFrame, min_dist: int | None = 0, cols=None,
     input rows themselves never shuffle). Identical ids and spans to
     the classic construction. Default ``"auto"`` engages it above
     ``spark.bioframe.clusterPremergeBytes`` (8 MB — cluster's classic
-    path is ~3x merge's, so its crossover sits far below merge's 64 MB)
-    when ``min_dist`` is not None and the on-columns are atomic; it
+    path is ~3x merge's, so its crossover sits below merge's 32 MB)
+    when ``min_dist`` is not None and the key columns are atomic
+    (``True`` with array/map/struct/binary keys raises ValueError); it
     falls back transparently if the cluster count exceeds
     ``spark.bioframe.smallInputMaxRows``.
     """
     ck, sk, ek = _resolve_cols(cols)
     _verify_columns(df, [ck, sk, ek], "cluster")
     on = list(on) if on else []
-
-    def _atomic(c):
-        t = dict(df.dtypes)[c]
-        return not t.startswith(("array", "map", "struct", "binary"))
-
     if premerge == "auto":
-        # cluster's crossover sits far below merge's 64 MB: its classic
-        # path pays distinct-islands + join-back + a spans window, so
-        # the premerge shrink + map-only kernel wins from ~10 MB up
-        # (measured: classic 0.97 s vs premerge 1.50 s at 1.4 MB;
-        # premerge ties at 13 MB uniform, 2.1x faster at 14 MB skewed,
-        # 1.7x at 16x scale). Own knob: spark.bioframe.clusterPremergeBytes.
+        # cluster's classic path pays distinct-islands + join-back + a
+        # spans window, so the premerge shrink + map-only kernel pays
+        # from far lower sizes than merge's fuse (crossovers: SCALING
+        # §9). Own knob: spark.bioframe.clusterPremergeBytes.
         premerge = (min_dist is not None
-                    and all(_atomic(c) for c in on)
+                    and all(_atomic(df, c) for c in [ck] + on)
                     and _plan_size_bytes(df) > _threshold(
                         df, "clusterPremergeBytes", _CLUSTER_PREMERGE_BYTES))
     elif premerge and min_dist is None:
@@ -2099,25 +1969,16 @@ def _small_coords_pdf(df2: DataFrame, ck: str, sk: str, ek: str,
 
 def _coverage_lookup(pdf) -> dict:
     """chrom -> (merged_starts, merged_ends, prefix_len) numpy arrays.
-    Local sweep-line merge (min_dist=0 semantics: touching intervals
+    ``arrops.island_sweep`` per chrom (min_dist=0: touching intervals
     join an island) + prefix sums of merged lengths, so per-query
     coverage is two searchsorteds + boundary clips."""
     import numpy as np
 
     per = {}
     for c, g in pdf.groupby("c", sort=False):
-        s = g["s"].to_numpy("int64")
-        e = g["e"].to_numpy("int64")
-        o = np.lexsort((e, s))
-        s, e = s[o], e[o]
-        hi = np.maximum.accumulate(e)
-        first = np.ones(len(s), dtype=bool)
-        first[1:] = s[1:] > hi[:-1]
-        idx = np.flatnonzero(first)
-        ms = s[idx]
-        me = hi[np.append(idx[1:] - 1, len(s) - 1)]
-        pref = np.concatenate(([0], np.cumsum(me - ms)))
-        per[c] = (ms, me, pref)
+        _, ms, me, _ = island_sweep(g["s"].to_numpy("int64"),
+                                    g["e"].to_numpy("int64"), min_dist=0)
+        per[c] = (ms, me, np.concatenate(([0], np.cumsum(me - ms))))
     return per
 
 
@@ -2296,10 +2157,6 @@ def count_overlaps(df1: DataFrame, df2: DataFrame, suffixes=("", "_"),
     ck1, sk1, ek1 = _resolve_cols(cols1)
     ck2, sk2, ek2 = _resolve_cols(cols2)
     on = list(on) if on else []
-    def _atomic(df, c):
-        t = dict(df.dtypes)[c]
-        return not t.startswith(("array", "map", "struct", "binary"))
-
     if (strategy == "auto" and _plan_size_bytes(df2) <= _SMALL_INPUT_BYTES
             and all(_atomic(df1, c) and _atomic(df2, c) for c in on)):
         # Broadcast kernel: df2 fits the broadcast bound, so counts come

@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..core.arrops import island_sweep
 from ..core.specs import _resolve_cols
 from ..functions.intervals import overlap_predicate
 
@@ -195,63 +196,6 @@ def stream_sessionize(events: DataFrame, gap: str = "30 seconds",
     )
 
 
-def _island_merge_arrays(s, e, c, min_dist):
-    """Vectorized weighted island merge over int64 numpy arrays
-    (r9 optimization-round rewrite of the per-tuple Python loop, guide
-    §4.2: the stateful kernels hand whole batches to numpy instead of
-    sorting Python tuple lists — the per-batch cost was the sort +
-    interpreted fuse loop over every input row).
-
-    Semantics identical to the historical sequential loop (the border
-    test against the PREFIX running max equals the test against the
-    current island's max end, because a border is exactly where the
-    prefix max is cleared): sort by (start, end, count); border where
-    start clears prev running max end (+ min_dist; strict ``>=`` when
-    min_dist is None so coincident points never fuse); per-island
-    (min start, max end, sum count) via reduceat. The overflow clamp
-    mirrors batch ``try_add`` semantics: a running max near INT64_MAX
-    (sentinel ends) + min_dist saturates, so nothing can clear it and
-    the border is false.
-    """
-    import numpy as np
-
-    n = len(s)
-    if n == 0:
-        return s, e, c
-    order = np.lexsort((c, e, s))
-    s, e, c = s[order], e[order], c[order]
-    prev = np.empty(n, dtype=np.int64)
-    prev[0] = np.iinfo(np.int64).min
-    if n > 1:
-        np.maximum.accumulate(e[:-1], out=prev[1:])
-    if min_dist is None:
-        border = s >= prev
-    else:
-        lim = np.iinfo(np.int64).max - int(min_dist)
-        border = s > np.minimum(prev, lim) + np.int64(min_dist)
-    border[0] = True
-    idx = np.flatnonzero(border)
-    return s[idx], np.maximum.reduceat(e, idx), np.add.reduceat(c, idx)
-
-
-def _weighted_island_merge(rows, min_dist):
-    """Weighted island merge of (start, end, count) tuples — the
-    reference border rule (strict ``>=`` under min_dist=None, so
-    coincident points never fuse). The core invariant ``stream_merge``
-    relies on: this function is ASSOCIATIVE over row batches — merging
-    any prefix first and feeding its islands (as weighted rows) back in
-    with the rest yields the same islands as one pass (fuzz-tested over
-    random splits in tests/test_round4.py; the fuzz now also covers the
-    vectorized kernel, which this list API delegates to)."""
-    import numpy as np
-
-    if not rows:
-        return []
-    arr = np.asarray(rows, dtype=np.int64)
-    s, e, c = _island_merge_arrays(arr[:, 0], arr[:, 1], arr[:, 2], min_dist)
-    return list(zip(s.tolist(), e.tolist(), c.tolist()))
-
-
 def stream_merge(stream: DataFrame, min_dist: int | None = 0,
                  cols=None) -> DataFrame:
     """Stateful streaming interval merge: per chromosome, state holds the
@@ -264,9 +208,11 @@ def stream_merge(stream: DataFrame, min_dist: int | None = 0,
     SET (union span + count), and weighted island merging is associative
     — merging early islands into later data yields the same islands as
     one batch pass (the same argument that makes the batch pre-merge
-    path exact, ``ops._premerge_local``). The ``min_dist=None`` strict
-    border keeps coincident points as separate islands, so point islands
-    always carry count 1 and re-merge losslessly.
+    path exact, ``ops._premerge_local``; both run the one NumPy sweep,
+    ``arrops.island_sweep``, whose int64 saturation matches the batch
+    ``try_add`` border). The ``min_dist=None`` strict border keeps
+    coincident points as separate islands, so point islands always
+    carry count 1 and re-merge losslessly.
 
     State per chrom = the island arrays — bounded by the OUTPUT size
     (for merge-friendly genomic data, orders of magnitude below the
@@ -293,9 +239,8 @@ def stream_merge(stream: DataFrame, min_dist: int | None = 0,
     def fn(key, pdfs, state):
         import numpy as np
 
-        # array-native end to end (no Python tuple lists): state arrays
-        # + batch columns concatenate into one int64 triple fed to the
-        # vectorized island kernel
+        # state arrays + batch columns concatenate into one int64
+        # triple (state islands weighted by their counts, new rows by 1)
         ss, es, cs = [], [], []
         if state.exists:
             starts, ends, counts = state.get
@@ -309,7 +254,7 @@ def stream_merge(stream: DataFrame, min_dist: int | None = 0,
                 cs.append(np.ones(len(pdf), dtype="int64"))
         if not ss:
             return
-        s, e, c = _island_merge_arrays(
+        _, s, e, c = island_sweep(
             np.concatenate(ss), np.concatenate(es), np.concatenate(cs),
             min_dist)
         state.update((s.tolist(), e.tolist(), c.tolist()))
@@ -389,9 +334,8 @@ def stream_complement(stream: DataFrame, view: dict,
                 es.append(pdf[ek].to_numpy("int64"))
         if not ss or length is None:
             return
-        sarr = np.concatenate(ss)
-        isl_s, isl_e, _ = _island_merge_arrays(
-            sarr, np.concatenate(es), np.ones(len(sarr), dtype="int64"), 0)
+        _, isl_s, isl_e, _ = island_sweep(
+            np.concatenate(ss), np.concatenate(es), min_dist=0)
         state.update((isl_s.tolist(), isl_e.tolist()))
         # the gap sweep stays a Python loop — islands are output-sized
         # (disjoint spans), orders of magnitude below the row count
@@ -512,9 +456,9 @@ def stream_cluster(stream: DataFrame, min_dist: int = 0,
             [int(x) for x in rows["e"]],
             [int(x) for x in rows["c"]],
         ))
-        isl_s, isl_e, _ = _island_merge_arrays(
+        _, isl_s, isl_e, _ = island_sweep(
             rows["s"].to_numpy("int64"), rows["e"].to_numpy("int64"),
-            rows["c"].to_numpy("int64"), min_dist)
+            min_dist=min_dist)
         idx = np.searchsorted(isl_s, rows["s"].to_numpy("int64"),
                               side="right") - 1
         yield pd.DataFrame({

@@ -103,6 +103,61 @@ def test_merge_intervals(ref_arrops, seed, min_dist):
         np.testing.assert_array_equal(g, w)
 
 
+def _sequential_islands(s, e, w, min_dist):
+    """One interval at a time in (start, end) order, with Python ints
+    (no wrap): the island sweep's rule, written out."""
+    out = []
+    for i in sorted(range(len(s)), key=lambda i: (s[i], e[i])):
+        si, ei, wi = int(s[i]), int(e[i]), int(w[i])
+        if out:
+            run = out[-1][2]
+            joins = (si < run if min_dist is None
+                     else si <= min(run + min_dist, ours.INT64_MAX))
+            if joins:
+                out[-1][2] = max(run, ei)
+                out[-1][3] += wi
+                continue
+        out.append([i, si, ei, wi])
+    return [list(col) for col in zip(*out)] if out else [[], [], [], []]
+
+
+@pytest.mark.parametrize("seed", SEEDS)
+@pytest.mark.parametrize("min_dist", [None, 0, 5])
+def test_island_sweep(seed, min_dist):
+    """``island_sweep`` (the engine's per-group kernel) against the
+    reference mirror ``merge_intervals`` where nothing overflows, and
+    against a sequential loop on INT64_MAX ends, where ``merge_intervals``
+    wraps and the sweep saturates; weighted counts are island sums."""
+    rng = np.random.default_rng(seed)
+    for _ in range(40):
+        s, e = _rand_ivals(rng, int(rng.integers(0, 40)), span=80, max_len=8)
+        w = rng.integers(1, 5, len(s))
+        first, gs, ge, gc = ours.island_sweep(s, e, w, min_dist=min_dist)
+        if len(s):
+            ids, ms, me = ours.merge_intervals(s, e, min_dist=min_dist)
+            np.testing.assert_array_equal(gs, ms)
+            np.testing.assert_array_equal(ge, me)
+            np.testing.assert_array_equal(gc, np.bincount(ids, weights=w))
+            np.testing.assert_array_equal(ids[first], np.arange(len(ms)))
+        else:
+            assert len(first) == len(gs) == len(ge) == len(gc) == 0
+        unweighted = ours.island_sweep(s, e, min_dist=min_dist)[3]
+        np.testing.assert_array_equal(
+            unweighted, ours.island_sweep(s, e, np.ones(len(s)),
+                                          min_dist=min_dist)[3])
+        # sentinel ends: an interval reaching INT64_MAX swallows every
+        # later start, and points at INT64_MAX stay exact
+        m = ours.INT64_MAX
+        s2 = np.concatenate([s, [m - 3, m, m, 40]]).astype(np.int64)
+        e2 = np.concatenate([e, [m, m, m, m]]).astype(np.int64)
+        w2 = np.concatenate([w, [1, 2, 3, 4]])
+        got = [list(a) for a in ours.island_sweep(s2, e2, w2, min_dist)]
+        assert got[1:] == _sequential_islands(s2, e2, w2, min_dist)[1:]
+        assert [(s2[i], e2[i]) for i in got[0]] == [
+            (s2[i], e2[i]) for i in _sequential_islands(s2, e2, w2,
+                                                        min_dist)[0]]
+
+
 @pytest.mark.parametrize("seed", SEEDS)
 def test_complement_intervals(ref_arrops, seed):
     rng = np.random.default_rng(seed)

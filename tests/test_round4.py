@@ -138,19 +138,30 @@ def test_merge_premerge_value_identical(spark, min_dist):
 
 
 def test_merge_premerge_auto_gate(spark, tmp_path):
-    """auto premerge stays OFF for small scans and flips ON above the
-    conf bar (and stays value-identical when it does)."""
-    df = ivals(spark, [("chr1", i, i + 5) for i in range(0, 300, 10)])
+    """auto premerge reads merge's smallInputBytes bar: at or under it
+    the driver kernel runs (no fuse in the plan); with the bar lowered
+    below the scan size the auto path fuses map-side (MapInPandas in
+    the plan) and the values stay the same."""
+    df = ivals(spark, [("chr1", i, i + 5) for i in range(0, 300, 10)]
+               + [("chr2", 7, 7), ("chr2", 7, 7), ("chr2", 3, 9)])
     p = str(tmp_path / "m")
     df.write.parquet(p)
     df = spark.read.parquet(p)
-    want = rows(bf.merge(df, premerge=False))
-    assert rows(bf.merge(df)) == want  # auto -> off at this size
-    spark.conf.set("spark.bioframe.premergeBytes", "1")
+
+    def plan(out):
+        return out._jdf.queryExecution().executedPlan().toString()
+
+    want = rows(bf.merge(df, premerge=False, local=False))
+    small = bf.merge(df)
+    assert "MapInPandas" not in plan(small)  # auto -> driver kernel
+    assert rows(small) == want
+    spark.conf.set("spark.bioframe.smallInputBytes", "1")
     try:
-        assert rows(bf.merge(df)) == want  # auto -> on, same values
+        fused = bf.merge(df)
+        assert "MapInPandas" in plan(fused)  # auto -> fuse
+        assert rows(fused) == want
     finally:
-        spark.conf.unset("spark.bioframe.premergeBytes")
+        spark.conf.unset("spark.bioframe.smallInputBytes")
 
 
 # --------------------------------------------------------------------------
@@ -284,7 +295,16 @@ def test_weighted_island_merge_associative():
     splits, and min_dist values including the strict None rule."""
     import random
 
-    from bioframe_spark.streaming.stream_ops import _weighted_island_merge
+    import numpy as np
+
+    from bioframe_spark.core.arrops import island_sweep
+
+    def _weighted_island_merge(rows, md):
+        if not rows:
+            return []
+        a = np.asarray(rows, dtype=np.int64)
+        _, s, e, c = island_sweep(a[:, 0], a[:, 1], a[:, 2], md)
+        return list(zip(s.tolist(), e.tolist(), c.tolist()))
 
     rng = random.Random(20260814)
     for trial in range(300):

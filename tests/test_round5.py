@@ -488,8 +488,34 @@ def test_merge_local_kernel_equivalence(spark, min_dist):
         bf.merge(df, min_dist=min_dist, local=False, premerge=True,
                  range_width=None)) == base
     assert _canon_cols(
+        bf.merge(df, min_dist=min_dist, local=False, premerge=True,
+                 range_width=7)) == base
+    assert _canon_cols(
         bf.merge(df, min_dist=min_dist, local=False, premerge=False,
                  range_width=7)) == base
+
+
+@pytest.mark.parametrize("min_dist", [0, None])
+def test_merge_array_on_keys(spark, min_dist):
+    """Array-typed ``on`` keys: the default plan (no size estimate, so
+    the auto fuse would engage) skips the map-side fuse, whose pandas
+    grouping cannot hash arrays, and equals raw classic and raw ranged;
+    an explicit premerge raises, for merge and for cluster."""
+    data = [("chr1", 0, 10, [1]), ("chr1", 8, 20, [1]), ("chr1", 9, 12, [2]),
+            ("chr1", 5, 5, [1]), ("chr1", 5, 5, [1]),
+            ("chr2", 0, INT64_MAX, [1]), ("chr2", 50, INT64_MAX, [1]),
+            ("chr1", 3, 4, None)]
+    df = ivals(spark, data, extra=[("tag", "array<int>")])
+    base = _canon_cols(bf.merge(df, min_dist=min_dist, on=["tag"],
+                                premerge=False, range_width=None))
+    assert len(base[0]) == 4
+    assert _canon_cols(bf.merge(df, min_dist=min_dist, on=["tag"])) == base
+    assert _canon_cols(bf.merge(df, min_dist=min_dist, on=["tag"],
+                                premerge=False, range_width=7)) == base
+    with pytest.raises(ValueError, match="atomic"):
+        bf.merge(df, min_dist=min_dist, on=["tag"], premerge=True)
+    with pytest.raises(ValueError, match="atomic"):
+        bf.cluster(df, min_dist=0, on=["tag"], premerge=True)
 
 
 def test_merge_sentinel_min_dist_no_ansi_overflow(spark):
