@@ -1247,8 +1247,8 @@ def q_stream_coverage(spark, sf_dir):
 
 def q_stream_closest(spark, sf_dir):
     """STREAMING nearest-annotation tagging driven to completion:
-    stateless ``stream_closest_static`` (per-chromosome collected
-    annotation frames + the batch cogroup kernel inside mapInPandas), so
+    stateless ``stream_closest_static`` (the collected annotation table
+    broadcast to the batch closest body inside mapInArrow), so
     the union of all micro-batch emissions equals batch
     ``closest(a, b, k=1)`` — the oracle is the ranked-candidate SQL on
     the distinct stream triples joined back to every streamed copy."""

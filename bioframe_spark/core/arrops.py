@@ -14,6 +14,11 @@ per function).
 
 Scope note: these are in-memory, single-machine kernels by design.  Do
 not feed them unbounded collected data — use the DataFrame operators.
+
+The engine's own NumPy kernels live here too (``closest_kernel``,
+``island_sweep``, ``group_rows``): the operators run them per Arrow
+batch on executors and over one bounded Arrow collect on the driver.
+This module imports nothing from ``operators/``.
 """
 
 from __future__ import annotations
@@ -115,10 +120,8 @@ def overlap_intervals(starts1, ends1, starts2, ends2, closed=False,
     if closed:
         e1 = e1 + 1
         e2 = e2 + 1
-    from ..operators.closest import _overlap_pairs
-
-    # the sweep kernel re-applies the point rewrite internally; inputs
-    # are already rewritten so it is a no-op there
+    # the sweep re-applies the point rewrite internally; inputs are
+    # already rewritten so it is a no-op there
     i1, i2 = _overlap_pairs(
         s1.astype(np.int64), e1.astype(np.int64),
         s2.astype(np.int64), e2.astype(np.int64))
@@ -216,54 +219,235 @@ def complement_intervals(starts, ends, bounds=(0, INT64_MAX)):
     return gap_starts[nonempty], gap_ends[nonempty]
 
 
+def group_rows(table, keys):
+    """Rows of a pyarrow ``table`` grouped by its ``keys`` columns: a
+    table of the distinct keys and, per key, the ascending int64 row
+    indices that hold it, in order of first appearance. A null key is a
+    group of its own; each caller decides what it means. Arrow hash
+    grouping (``Table.group_by``), so string keys never pay a NumPy
+    object sort — the engine's one row-grouping primitive for driver
+    and executor kernels."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    keys = list(keys)
+    rows = pa.array(np.arange(table.num_rows, dtype=np.int64))
+    g = (table.select(keys).append_column("__row", rows)
+         .group_by(keys, use_threads=False).aggregate([("__row", "list")]))
+    lists = g["__row_list"].combine_chunks()
+    flat = pc.list_flatten(lists).to_numpy()
+    lens = pc.list_value_length(lists).to_numpy()
+    ends = np.cumsum(lens)
+    return g.select(keys), [flat[b - n:b] for n, b in zip(lens.tolist(),
+                                                          ends.tolist())]
+
+
+def key_tuples(keys):
+    """The rows of a :func:`group_rows` key table as tuples of Python
+    values (None for a null)."""
+    return zip(*(c.to_pylist() for c in keys.columns))
+
+
+def _neighbor_candidates(starts1, ends1, order2, key2, k, side):
+    """ids (i1, pos-in-sorted2) of ≤k nearest non-overlapping set-2
+    neighbors on one side. side='left': set-2 end <= start1, nearest =
+    largest end. side='right': set-2 start >= end1, nearest = smallest
+    start. key2 is set 2's end (left) or start (right), sorted
+    ascending by ``order2``."""
+    n1 = starts1.shape[0]
+    if side == "left":
+        hi = np.searchsorted(key2, starts1, "right")
+        lo = np.maximum(hi - k, 0)
+    else:
+        lo = np.searchsorted(key2, ends1, "left")
+        hi = np.minimum(lo + k, key2.shape[0])
+    counts = hi - lo
+    ids1 = np.repeat(np.arange(n1), counts)
+    if counts.sum() == 0:
+        return ids1, np.array([], dtype=np.int64)
+    return ids1, order2[arange_multi(lo, lengths=counts)]
+
+
+def _overlap_pairs(starts1, ends1, starts2, ends2):
+    """All (i1, i2) with s1<e2' and s2<e1' (point-rewritten ends).
+
+    Sweep over the union of both sides sorted by start: each interval
+    matches the intervals that start within [its start, its effective end).
+    Output-linear, fully vectorized.
+    """
+    # point rewrite WITHOUT ends+1 (a point at INT64_MAX would wrap
+    # negative and silently vanish from / corrupt the sweep): rank-
+    # compress the coordinates, then key starts as 2·rank and effective
+    # ends as 2·rank + is_point — "starts[q] < ends[p] + 1" becomes
+    # "2·rs < 2·re + 1", exact and overflow-free at any int64 value
+    n1, n2 = starts1.shape[0], starts2.shape[0]
+    all_coords = np.unique(np.concatenate([starts1, starts2, ends1, ends2]))
+    rs1 = np.searchsorted(all_coords, starts1)
+    rs2 = np.searchsorted(all_coords, starts2)
+    re1 = np.searchsorted(all_coords, ends1)
+    re2 = np.searchsorted(all_coords, ends2)
+    starts1 = 2 * rs1
+    starts2 = 2 * rs2
+    e1 = 2 * re1 + (re1 == rs1)  # rank equality == zero-length (point)
+    e2 = 2 * re2 + (re2 == rs2)
+    starts = np.concatenate([starts1, starts2])
+    ends = np.concatenate([e1, e2])
+    sides = np.concatenate([np.zeros(n1, bool), np.ones(n2, bool)])
+    idx = np.concatenate([np.arange(n1), np.arange(n2)])
+    order = np.lexsort([ends, starts])
+    starts, ends, sides, idx = starts[order], ends[order], sides[order], idx[order]
+    # for each position p, intervals q>p with starts[q] < ends[p] overlap it
+    match_hi = np.searchsorted(starts, ends, "left")
+    match_lo = np.arange(starts.shape[0]) + 1
+    counts = np.maximum(match_hi - match_lo, 0)
+    total = counts.sum()
+    if total == 0:
+        return np.array([], dtype=np.int64), np.array([], dtype=np.int64)
+    anchors = np.repeat(np.arange(starts.shape[0]), counts)
+    others = arange_multi(match_lo, lengths=counts)
+    # keep only cross-set pairs, oriented (set1, set2)
+    a_side, o_side = sides[anchors], sides[others]
+    cross = a_side != o_side
+    anchors, others = anchors[cross], others[cross]
+    a_side = a_side[cross]
+    i1 = np.where(a_side, idx[others], idx[anchors])
+    i2 = np.where(a_side, idx[anchors], idx[others])
+    return i1.astype(np.int64), i2.astype(np.int64)
+
+
+def closest_kernel(s1, e1, s2, e2, k=1, tie=None, along=None,
+                   ignore_overlaps=False, ignore_upstream=False,
+                   ignore_downstream=False, self_mode=False):
+    """The engine's one closest kernel, over ONE chromosome's int64
+    arrays: for each set-1 interval the ≤k closest set-2 intervals
+    (overlapping ⇒ distance 0). Returns (ids1, ids2, dist); a set-1 row
+    with no candidate appears once with ids2 = -1 and dist 0.
+
+    Ranking: (distance, overlap before abutting neighbor, ``tie``
+    ascending, set-2 (start, end), set-2 position), so callers that hand
+    set 2 over in one deterministic order get deterministic ties.
+    ``tie`` is numeric (smaller wins; callers rank nulls last);
+    ``along`` is the per-row strand flag (False = '-': upstream and
+    downstream swap sides). ``self_mode``: both sets are the same rows
+    in the same order, and a row never matches its own position (exact
+    duplicates still match each other at distance 0)."""
+    s1 = np.asarray(s1, dtype=np.int64)
+    e1 = np.asarray(e1, dtype=np.int64)
+    o2 = np.lexsort((np.asarray(e2, dtype=np.int64),
+                     np.asarray(s2, dtype=np.int64)))
+    s2 = np.asarray(s2, dtype=np.int64)[o2]
+    e2 = np.asarray(e2, dtype=np.int64)[o2]
+    n1, n2 = s1.shape[0], s2.shape[0]
+    tie = np.zeros(n2) if tie is None else np.asarray(tie)[o2]
+    along = np.ones(n1, bool) if along is None else np.asarray(along, bool)
+
+    # overlap candidates (distance 0)
+    if ignore_overlaps or n2 == 0:
+        ov1 = ov2 = np.array([], dtype=np.int64)
+    else:
+        ov1, ov2 = _overlap_pairs(s1, e1, s2, e2)
+        if self_mode:
+            m = ov1 != o2[ov2]
+            ov1, ov2 = ov1[m], ov2[m]
+
+    # non-overlapping neighbors, strand-aware sides
+    # Left-side candidates are consumed from the TAIL of order_e
+    # (_neighbor_candidates keeps the k largest ends), so order within equal
+    # (end, tie) must be canonical-index DESC: read backwards that is
+    # (end desc, tie asc, idx asc) — the same preference the final
+    # (distance, tie, ids2) lexsort ranks by, keeping k-truncation
+    # consistent with the binned strategy's (dist, tie, start2, end2) window.
+    order_e = np.lexsort([-np.arange(n2), tie * -1, e2])
+    order_s = np.lexsort([tie, s2])
+    # flags rank overlap entries (0) before neighbor entries (1) at
+    # equal distance — the old encoding (neighbor dd = dist + 1, output
+    # dd - 1) wrapped at dist = INT64_MAX (a point at the int64 edge
+    # reported distance 0 and outranked real overlaps; hypothesis
+    # falsified it at r8)
+    cand1 = [ov1]
+    cand2 = [ov2]
+    dists = [np.zeros(ov1.shape[0], dtype=np.int64)]
+    flags = [np.zeros(ov1.shape[0], dtype=np.int8)]
+    # in self mode a point is its own neighbour on both sides; fetch one
+    # extra per side so excluding it still leaves k
+    kn = k + 1 if self_mode else k
+    for strand_mask, up_side in ((along, "left"), (~along, "right")):
+        ids = np.flatnonzero(strand_mask)
+        if ids.size == 0:
+            continue
+        # upstream = up_side; downstream = the other side
+        for side, ignored in ((up_side, ignore_upstream),
+                              ("right" if up_side == "left" else "left",
+                               ignore_downstream)):
+            if ignored or n2 == 0:
+                continue
+            if side == "left":
+                c1, c2 = _neighbor_candidates(
+                    s1[ids], e1[ids], order_e, e2[order_e], kn, "left")
+                d = s1[ids][c1] - e2[c2]
+            else:
+                c1, c2 = _neighbor_candidates(
+                    s1[ids], e1[ids], order_s, s2[order_s], kn, "right")
+                d = s2[c2] - e1[ids][c1]
+            if self_mode:
+                m = ids[c1] != o2[c2]
+                c1, c2, d = c1[m], c2[m], d[m]
+            cand1.append(ids[c1])
+            cand2.append(c2)
+            dists.append(np.maximum(d, 0))
+            flags.append(np.ones(c1.shape[0], dtype=np.int8))
+
+    ids1 = np.concatenate(cand1)
+    ids2 = np.concatenate(cand2)
+    dd = np.concatenate(dists)
+    fl = np.concatenate(flags)
+    if ids1.shape[0]:
+        order = np.lexsort([ids2, tie[ids2], fl, dd, ids1])
+        ids1, ids2, dd = ids1[order], ids2[order], dd[order]
+        # dedupe (a candidate can appear via both the overlap and a neighbor
+        # path, e.g. a zero-length set-2 interval exactly at start1, with
+        # overlap (dd=0, flag=0) and abutting (dd=0, flag=1) entries) —
+        # global first-occurrence per pair; the array is sorted by
+        # (ids1, dd, flag, ...) so first = min (dd, flag)
+        _, first = np.unique(ids1 * (n2 + 1) + ids2, return_index=True)
+        keep = np.sort(first)
+        ids1, ids2, dd = ids1[keep], ids2[keep], dd[keep]
+        borders = np.r_[True, ids1[1:] != ids1[:-1]]
+        rank = np.arange(ids1.shape[0]) - np.maximum.accumulate(
+            np.where(borders, np.arange(ids1.shape[0]), -1))
+        m = rank < k
+        ids1, ids2, dd = ids1[m], o2[ids2[m]], dd[m]
+
+    # left-join semantics: set-1 rows with no candidate get a -1 row
+    matched = np.zeros(n1, bool)
+    matched[ids1] = True
+    miss = np.flatnonzero(~matched)
+    return (np.concatenate([ids1, miss]),
+            np.concatenate([ids2, np.full(miss.shape[0], -1, np.int64)]),
+            np.concatenate([dd, np.zeros(miss.shape[0], np.int64)]))
+
+
 def closest_intervals(starts1, ends1, starts2=None, ends2=None, k=1,
                       tie_arr=None, ignore_overlaps=False,
                       ignore_upstream=False, ignore_downstream=False,
                       along=None):
     """Index pairs (ids1, ids2) of the ≤k closest set-2 intervals per
     set-1 interval (self-mode when set 2 is omitted, positional
-    self-exclusion).  Runs the SAME vectorized kernel the distributed
-    ``closest`` operator uses, so ties follow this engine's documented
-    (distance, tie_arr, canonical (start, end)) rule — not the
-    reference kernel's emergent positional order (see
-    operators/closest.py module docstring for the deviation list)."""
-    import pandas as pd
-
-    from ..operators.closest import _closest_kernel
-
+    self-exclusion).  Runs :func:`closest_kernel`, the kernel every
+    strategy of the distributed ``closest`` operator uses, so ties
+    follow this engine's documented (distance, tie_arr, canonical
+    (start, end)) rule — not the reference kernel's emergent positional
+    order (see operators/closest.py module docstring for the deviation
+    list)."""
     self_mode = starts2 is None and ends2 is None
-    pdf1 = pd.DataFrame({
-        "s": np.asarray(starts1), "e": np.asarray(ends1),
-        "__pos": np.arange(len(np.asarray(starts1))),
-    })
-    if along is not None:
-        pdf1["__along"] = np.where(np.asarray(along, dtype=bool), "+", "-")
     if self_mode:
-        # the kernel's positional self-exclusion requires BOTH frames to
-        # share one column set and one canonical order — hand it the
-        # same frame twice
-        if tie_arr is not None:
-            pdf1["__tie"] = np.asarray(tie_arr)
-        pdf2 = pdf1.copy()
-    else:
-        pdf2 = pd.DataFrame({
-            "s": np.asarray(starts2), "e": np.asarray(ends2),
-            "__pos": np.arange(len(np.asarray(starts2))),
-        })
-        if tie_arr is not None:
-            pdf2["__tie"] = np.asarray(tie_arr)
-    i1, i2, _dist, pdf1s, pdf2s = _closest_kernel(
-        pdf1, pdf2, sk1="s", ek1="e", sk2="s", ek2="e", k=k,
+        starts2, ends2 = starts1, ends1
+    ids1, ids2, _ = closest_kernel(
+        starts1, ends1, starts2, ends2, k=k, tie=tie_arr, along=along,
         ignore_overlaps=ignore_overlaps, ignore_upstream=ignore_upstream,
-        ignore_downstream=ignore_downstream,
-        direction_col="__along" if along is not None else None,
-        tie_breaking_col="__tie" if tie_arr is not None else None,
-        self_mode=self_mode,
-    )
-    matched = i2 >= 0
-    ids1 = pdf1s["__pos"].to_numpy()[i1[matched]]
-    ids2 = pdf2s["__pos"].to_numpy()[i2[matched]]
-    return ids1, ids2
+        ignore_downstream=ignore_downstream, self_mode=self_mode)
+    hit = ids2 >= 0
+    return ids1[hit], ids2[hit]
 
 
 def coverage_intervals_rle(starts, ends, weights=None):

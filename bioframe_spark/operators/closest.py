@@ -6,15 +6,18 @@ Semantics parity with reference ``ops.py:1043-1240`` + kernels
 (strand-aware via ``direction_col``); ties broken by (distance,
 tie_breaking_col, canonical df2 order).
 
-Physical design: OSS Spark has no as-of/kNN join, so this is a cogrouped
-``applyInPandas`` per (chromosome) group — both sides shuffle once on
-chrom, then a vectorized numpy sort+searchsorted kernel runs per group
-(Arrow-batched, no per-row Python). This parallelizes across chromosomes;
-for single-chrom skew the group is one task — acceptable because the
-kernel is O(n log n) vectorized, and k-NN is not separable by genomic bin
-without a distance cap. (Escape hatch when one chromosome exceeds
-executor memory: a distance-capped pure-DataFrame formulation — binned
-join within a cap + window rank, doubling the cap until k found.)
+Physical design: OSS Spark has no as-of/kNN join. The kernel strategies
+run one vectorized sort+searchsorted kernel (``arrops.closest_kernel``)
+per chromosome through one Arrow-in/Arrow-out body (:class:`_ClosestBody`):
+cogrouped per chromosome (``applyInArrow`` — both sides shuffle once on
+chrom), over a collected small df2 broadcast as an Arrow table
+(``mapInArrow`` over df1), or on the driver for tiny inputs. This
+parallelizes across chromosomes; for single-chrom skew the cogroup
+group is one task — acceptable because the kernel is O(n log n)
+vectorized, and k-NN is not separable by genomic bin without a distance
+cap. Large inputs take the binned strategy: a distance-capped
+pure-DataFrame plan (binned join within a cap + window rank, escalating
+the cap until k found).
 
 Deviations from the reference (documented, pinned in
 ``tests/test_reference_parity_ab.py``):
@@ -30,7 +33,7 @@ Deviations from the reference (documented, pinned in
 - The reference's ``tie_breaking_col`` crashes outright in this snapshot
   (``arrops.py:740`` lexsorts a len(df2) tie array against event-shaped
   arrays); this engine implements the documented semantics (ascending
-  tie value among equidistant candidates).
+  tie value among equidistant candidates, nulls last).
 - Zero-width intervals: the reference's kernel classifies a point
   touching another interval's boundary as a distance-0 *neighbor* (it
   has no point-rewrite in the closest path), reports a point as its own
@@ -43,289 +46,189 @@ Deviations from the reference (documented, pinned in
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..core.arrops import closest_kernel, group_rows
 from ..core.construction import local_df
 from ..core.persist import owns, persist
 from ..core.specs import _resolve_cols, _verify_columns
 from ..functions.intervals import overlap_predicate
 
 
-def _neighbor_candidates(starts1, ends1, starts2_sorted, order2, key2, k, side):
-    """ids (i1, pos-in-sorted2) of ≤k nearest non-overlapping df2 neighbors
-    on one side. side='left': df2 end <= df1 start, nearest = largest end.
-    side='right': df2 start >= df1 end, nearest = smallest start.
-    key2 is df2's end (left) or start (right), sorted ascending."""
-    n1 = starts1.shape[0]
-    if side == "left":
-        hi = np.searchsorted(key2, starts1, "right")
-        lo = np.maximum(hi - k, 0)
-    else:
-        lo = np.searchsorted(key2, ends1, "left")
-        hi = np.minimum(lo + k, key2.shape[0])
-    counts = hi - lo
-    ids1 = np.repeat(np.arange(n1), counts)
-    # multi-range arange
-    if counts.sum() == 0:
-        return ids1, np.array([], dtype=np.int64)
-    starts_flat = np.repeat(lo, counts)
-    within = np.arange(counts.sum()) - np.repeat(np.cumsum(counts) - counts, counts)
-    ids2_sorted = starts_flat + within
-    return ids1, order2[ids2_sorted]
+def _tie_rank(col) -> np.ndarray:
+    """Dense ascending rank of tie-breaking values, nulls last (the
+    binned window's ``asc_nulls_last``)."""
+    return pc.rank(col, sort_keys="ascending", null_placement="at_end",
+                   tiebreaker="dense").to_numpy()
 
 
-def _overlap_pairs(starts1, ends1, starts2, ends2):
-    """All (i1, i2) with s1<e2' and s2<e1' (point-rewritten ends).
-
-    Sweep over the union of both sides sorted by start: each interval
-    matches the intervals that start within [its start, its effective end).
-    Output-linear, fully vectorized.
-    """
-    # point rewrite WITHOUT ends+1 (a point at INT64_MAX would wrap
-    # negative and silently vanish from / corrupt the sweep): rank-
-    # compress the coordinates, then key starts as 2·rank and effective
-    # ends as 2·rank + is_point — "starts[q] < ends[p] + 1" becomes
-    # "2·rs < 2·re + 1", exact and overflow-free at any int64 value
-    n1, n2 = starts1.shape[0], starts2.shape[0]
-    all_coords = np.unique(np.concatenate([starts1, starts2, ends1, ends2]))
-    rs1 = np.searchsorted(all_coords, starts1)
-    rs2 = np.searchsorted(all_coords, starts2)
-    re1 = np.searchsorted(all_coords, ends1)
-    re2 = np.searchsorted(all_coords, ends2)
-    starts1 = 2 * rs1
-    starts2 = 2 * rs2
-    e1 = 2 * re1 + (re1 == rs1)  # rank equality == zero-length (point)
-    e2 = 2 * re2 + (re2 == rs2)
-    starts = np.concatenate([starts1, starts2])
-    ends = np.concatenate([e1, e2])
-    sides = np.concatenate([np.zeros(n1, bool), np.ones(n2, bool)])
-    idx = np.concatenate([np.arange(n1), np.arange(n2)])
-    order = np.lexsort([ends, starts])
-    starts, ends, sides, idx = starts[order], ends[order], sides[order], idx[order]
-    # for each position p, intervals q>p with starts[q] < ends[p] overlap it
-    match_hi = np.searchsorted(starts, ends, "left")
-    match_lo = np.arange(starts.shape[0]) + 1
-    counts = np.maximum(match_hi - match_lo, 0)
-    total = counts.sum()
-    if total == 0:
-        return np.array([], dtype=np.int64), np.array([], dtype=np.int64)
-    anchors = np.repeat(np.arange(starts.shape[0]), counts)
-    offs = np.arange(total) - np.repeat(np.cumsum(counts) - counts, counts)
-    others = np.repeat(match_lo, counts) + offs
-    # keep only cross-set pairs, oriented (set1, set2)
-    a_side, o_side = sides[anchors], sides[others]
-    cross = a_side != o_side
-    anchors, others = anchors[cross], others[cross]
-    a_side = a_side[cross]
-    i1 = np.where(a_side, idx[others], idx[anchors])
-    i2 = np.where(a_side, idx[anchors], idx[others])
-    return i1.astype(np.int64), i2.astype(np.int64)
+def _canonical(t: pa.Table, sk: str, ek: str) -> pa.Table:
+    """``t`` sorted by (start, end, every other column): self-mode's
+    positional exclusion needs both cogroup sides, which Spark delivers
+    in arbitrary and possibly different orders, in ONE order.
+    Coordinate duplicates with equal payloads are interchangeable, so
+    positional identity stays valid (exact dups remain each other's
+    distance-0 closest, matching reference ops.py self-closest).
+    Nested payloads (list/struct/map) cannot be sorted and are ordered
+    by their string form, which still gives both sides one total
+    order."""
+    names = [sk, ek] + [c for c in t.column_names if c not in (sk, ek)]
+    keys = pa.table({
+        c: (pa.array([None if v is None else str(v)
+                      for v in t[c].to_pylist()], pa.string())
+            if pa.types.is_nested(t[c].type) else t[c])
+        for c in names})
+    return t.take(pc.sort_indices(
+        keys, [(c, "ascending") for c in names], null_placement="at_end"))
 
 
-def _closest_kernel(
-    pdf1: pd.DataFrame, pdf2: pd.DataFrame, *,
-    sk1, ek1, sk2, ek2, k, ignore_overlaps, ignore_upstream, ignore_downstream,
-    direction_col, tie_breaking_col, self_mode,
-):
-    """Per-chromosome kernel: returns (ids1, ids2(-1 for none), distances)."""
-    # canonical df2 order for deterministic ties
-    sort_cols = [c for c in (sk2, ek2) if c in pdf2.columns]
+def _valid_coords(t: pa.Table, ck: str, sk: str, ek: str):
+    """(rows with non-null chrom, start and end as a bool mask, start and
+    end as int64 arrays with nulls read as 0)."""
+    ok = pc.and_(pc.and_(pc.is_valid(t[ck]), pc.is_valid(t[sk])),
+                 pc.is_valid(t[ek]))
+    return (ok.to_numpy(zero_copy_only=False),
+            t[sk].cast(pa.int64()).fill_null(0).to_numpy(),
+            t[ek].cast(pa.int64()).fill_null(0).to_numpy())
 
-    def _csort(pdf):
-        try:
-            return pdf.sort_values(sort_cols, kind="mergesort", ignore_index=True)
-        except TypeError:
-            # unsortable payload dtype: string-cast object columns so both
-            # frames still share ONE deterministic total order (a
-            # coords-only fallback would let rows with duplicate
-            # coordinates but differing payloads land at different
-            # positions in the two cogroup copies, breaking positional
-            # self-exclusion)
-            return pdf.sort_values(
-                sort_cols, kind="mergesort", ignore_index=True,
-                key=lambda s: s.astype(str) if s.dtype == object else s,
-            )
 
-    if self_mode:
-        # Self-exclusion below is POSITIONAL (ov1 != ov2, ids[c1] != c2), so
-        # both frames must share one ordering. Spark's two cogroup shuffles
-        # deliver the same rows in arbitrary, possibly different orders —
-        # sort BOTH by a full-column canonical key. Coordinate-duplicates
-        # with equal payloads are interchangeable under any stable order, so
-        # positional identity stays valid (exact dups remain each other's
-        # distance-0 closest, matching reference ops.py self-closest).
-        sort_cols = sort_cols + [c for c in pdf2.columns if c not in (sk2, ek2)]
-        pdf1 = _csort(pdf1)
-    pdf2 = _csort(pdf2)
-    s1 = pdf1[sk1].to_numpy(np.int64, na_value=0)
-    e1 = pdf1[ek1].to_numpy(np.int64, na_value=0)
-    s2 = pdf2[sk2].to_numpy(np.int64, na_value=0)
-    e2 = pdf2[ek2].to_numpy(np.int64, na_value=0)
-    n1, n2 = s1.shape[0], s2.shape[0]
-    if tie_breaking_col is None:
-        tie = np.zeros(n2)
-    elif callable(tie_breaking_col):
-        # reference surface: tie_breaking_col may be f(DataFrame) -> Series
-        # (ops.py:972-980) — evaluated per chrom group on the pandas frame
-        tie = np.asarray(tie_breaking_col(pdf2), dtype=float)
-    else:
-        tie = pdf2[tie_breaking_col].to_numpy(float)
-    if direction_col is not None:
-        along = (pdf1[direction_col].astype(str) != "-").to_numpy()
-    else:
-        along = np.ones(n1, bool)
+class _ClosestBody:
+    """The one closest body, Arrow in and Arrow out:
+    ``body(t1, t2) -> pa.Table`` of the suffixed df1 + df2 columns (plus
+    overlap / distance columns when asked), for tables that may hold
+    any number of chromosomes. The cogroup path (``applyInArrow``), the
+    broadcast path (``mapInArrow``, which ``stream_closest_static``
+    uses too) and the tiny driver path all call it, so every strategy
+    emits the same rows.
 
-    # overlap candidates (distance 0)
-    if ignore_overlaps or n2 == 0:
-        ov1 = ov2 = np.array([], dtype=np.int64)
-    else:
-        ov1, ov2 = _overlap_pairs(s1, e1, s2, e2)
-        if self_mode:
-            m = ov1 != ov2
-            ov1, ov2 = ov1[m], ov2[m]
+    Rows are grouped per chromosome with ``arrops.group_rows`` and each
+    group runs ``arrops.closest_kernel``. Output columns are built with
+    ``take``, so int64 values stay exact next to nulls. Null rules (the
+    binned strategy's, from its join predicate): a df1 row with a null
+    chrom, start or end matches nothing and gets the left-join null row;
+    a df2 row with one is dropped. The reference rejects such input
+    outright (``is_bedframe(raise_errors=True)``, reference
+    ``ops.py:1162``), so this is a documented relaxation.
 
-    # non-overlapping neighbors, strand-aware sides
-    # Left-side candidates are consumed from the TAIL of order_e
-    # (_neighbor_candidates keeps the k largest ends), so order within equal
-    # (end, tie) must be canonical-index DESC: read backwards that is
-    # (end desc, tie asc, idx asc) — the same preference the final
-    # (distance, tie, ids2) lexsort ranks by, keeping k-truncation
-    # consistent with the binned strategy's (dist, tie, start2, end2) window.
-    order_e = np.lexsort([-np.arange(n2), tie * -1, e2])
-    order_s = np.lexsort([tie, s2])
-    # flags rank overlap entries (0) before neighbor entries (1) at
-    # equal distance — the old encoding (neighbor dd = dist + 1, output
-    # dd - 1) wrapped at dist = INT64_MAX (a point at the int64 edge
-    # reported distance 0 and outranked real overlaps; hypothesis
-    # falsified it at r8)
-    cand1 = [ov1]
-    cand2 = [ov2]
-    dists = [np.zeros(ov1.shape[0], dtype=np.int64)]
-    flags = [np.zeros(ov1.shape[0], dtype=np.int8)]
-    for strand_mask, up_side in ((along, "left"), (~along, "right")):
-        ids = np.where(strand_mask)[0]
-        if ids.size == 0:
-            continue
-        # upstream = up_side; downstream = the other side
-        for side, ignored in ((up_side, ignore_upstream),
-                              ("right" if up_side == "left" else "left", ignore_downstream)):
-            if ignored or n2 == 0:
-                continue
-            if side == "left":
-                c1, c2 = _neighbor_candidates(
-                    s1[ids], e1[ids], None, order_e, e2[order_e], k, "left")
-                d = s1[ids][c1] - e2[c2]
+    A callable ``tie_breaking_col`` (reference surface: f(DataFrame) ->
+    Series, ``ops.py:972-980``) receives each chromosome's df2 rows as
+    pandas — the body's only pandas conversion."""
+
+    def __init__(self, *, cols1, cols2, suffixes, k, ignore_overlaps,
+                 ignore_upstream, ignore_downstream, direction_col,
+                 tie_breaking_col, return_overlap, return_distance,
+                 self_mode=False):
+        self.c1 = _resolve_cols(cols1)
+        self.c2 = _resolve_cols(cols2)
+        self.sfx1, self.sfx2 = suffixes
+        self.kw = dict(k=k, ignore_overlaps=ignore_overlaps,
+                       ignore_upstream=ignore_upstream,
+                       ignore_downstream=ignore_downstream,
+                       self_mode=self_mode)
+        self.direction_col = direction_col
+        self.tie = tie_breaking_col
+        self.return_overlap = return_overlap
+        self.return_distance = return_distance
+        self._side2 = (None, None)
+
+    def side2(self, t2: pa.Table):
+        """df2's valid rows grouped per chromosome, with int64
+        coordinates and tie ranks; kept for the last table seen, so a
+        broadcast df2 is prepared once per task, not once per batch."""
+        if self._side2[0] is not t2:
+            ok, s2, e2 = _valid_coords(t2, *self.c2)
+            keys, groups = group_rows(t2, [self.c2[0]])
+            per = {c: ix[ok[ix]] for c, ix in zip(keys[0].to_pylist(), groups)
+                   if c is not None}
+            tie = (_tie_rank(t2[self.tie])
+                   if isinstance(self.tie, str) else None)
+            self._side2 = (t2, (per, s2, e2, tie))
+        return self._side2[1]
+
+    def __call__(self, t1: pa.Table, t2: pa.Table) -> pa.Table:
+        ck1, sk1, ek1 = self.c1
+        if self.kw["self_mode"]:
+            t1 = _canonical(t1, sk1, ek1)
+            t2 = _canonical(t2, *self.c2[1:])
+        per, s2, e2, tie = self.side2(t2)
+        ok1, s1, e1 = _valid_coords(t1, ck1, sk1, ek1)
+        along = np.ones(t1.num_rows, bool)
+        if self.direction_col is not None:
+            along = pc.fill_null(pc.not_equal(
+                t1[self.direction_col].cast(pa.string()), "-"), True
+            ).to_numpy(zero_copy_only=False)
+        take1 = [np.flatnonzero(~ok1)]
+        take2 = [np.full(take1[0].shape[0], -1, np.int64)]
+        dist = [np.zeros(take1[0].shape[0], np.int64)]
+        keys, groups = group_rows(t1, [ck1])
+        for c, ix in zip(keys[0].to_pylist(), groups):
+            r1 = ix[ok1[ix]]
+            r2 = per.get(c, np.zeros(0, np.int64))
+            if callable(self.tie):
+                t = _tie_rank(pa.array(self.tie(t2.take(r2).to_pandas()),
+                                       from_pandas=True))
             else:
-                c1, c2 = _neighbor_candidates(
-                    s1[ids], e1[ids], None, order_s, s2[order_s], k, "right")
-                d = s2[c2] - e1[ids][c1]
-            if self_mode:
-                m = ids[c1] != c2
-                c1, c2, d = c1[m], c2[m], d[m]
-            cand1.append(ids[c1])
-            cand2.append(c2)
-            dists.append(np.maximum(d, 0))
-            flags.append(np.ones(c1.shape[0], dtype=np.int8))
-
-    ids1 = np.concatenate(cand1)
-    ids2 = np.concatenate(cand2)
-    dd = np.concatenate(dists)
-    fl = np.concatenate(flags)
-    if ids1.shape[0] == 0:
-        sel1 = np.array([], dtype=np.int64)
-        sel2 = np.array([], dtype=np.int64)
-        seld = np.array([], dtype=np.int64)
-    else:
-        order = np.lexsort([ids2, tie[ids2], fl, dd, ids1])
-        ids1, ids2, dd = ids1[order], ids2[order], dd[order]
-        # dedupe (a candidate can appear via both the overlap and a neighbor
-        # path, e.g. a zero-length df2 interval exactly at start1, with
-        # overlap (dd=0, flag=0) and abutting (dd=0, flag=1) entries) —
-        # global first-occurrence per pair; the array is sorted by
-        # (ids1, dd, flag, ...) so first = min (dd, flag)
-        pair_key = ids1 * (n2 + 1) + ids2
-        _, first = np.unique(pair_key, return_index=True)
-        keep = np.sort(first)
-        ids1, ids2, dd = ids1[keep], ids2[keep], dd[keep]
-        borders = np.r_[True, ids1[1:] != ids1[:-1]]
-        rank = np.arange(ids1.shape[0]) - np.maximum.accumulate(
-            np.where(borders, np.arange(ids1.shape[0]), -1))
-        m = rank < k
-        sel1, sel2, seld = ids1[m], ids2[m], dd[m]
-
-    # left-join semantics: df1 rows with no candidate get a null row
-    matched = np.zeros(n1, bool)
-    matched[sel1] = True
-    miss = np.where(~matched)[0]
-    out1 = np.concatenate([sel1, miss])
-    out2 = np.concatenate([sel2, np.full(miss.shape[0], -1, dtype=np.int64)])
-    outd = np.concatenate([seld,
-                           np.zeros(miss.shape[0], dtype=np.int64)])
-    return out1, out2, outd, pdf1, pdf2
+                t = None if tie is None else tie[r2]
+            i1, i2, d = closest_kernel(s1[r1], e1[r1], s2[r2], e2[r2],
+                                       tie=t, along=along[r1], **self.kw)
+            take1.append(r1[i1])
+            take2.append(np.append(r2, -1)[i2])  # a miss (-1) stays -1
+            dist.append(d)
+        take1, take2, dist = map(np.concatenate, (take1, take2, dist))
+        miss = take2 < 0
+        cols = (t1.take(pa.array(take1)).columns
+                + t2.take(pa.array(take2, mask=miss)).columns)
+        names = ([c + self.sfx1 for c in t1.column_names]
+                 + [c + self.sfx2 for c in t2.column_names])
+        if self.return_overlap:
+            # index -1 (a miss) reads the appended 0; masked below
+            osv = np.maximum(s1[take1], np.append(s2, 0)[take2])
+            oev = np.minimum(e1[take1], np.append(e2, 0)[take2])
+            hov = osv < oev
+            cols += [pa.array(hov, mask=miss),
+                     pa.array(osv, mask=miss | ~hov),
+                     pa.array(oev, mask=miss | ~hov)]
+            names += ["have_overlap", "overlap_start", "overlap_end"]
+        if self.return_distance:
+            cols.append(pa.array(dist, mask=miss))
+            names.append("distance")
+        return pa.Table.from_arrays(cols, names=names)
 
 
-def _closest_pandas(pdf1, pdf2, *, names1, names2, sfx1, sfx2,
-                    sk1, ek1, sk2, ek2, k,
-                    ignore_overlaps=False, ignore_upstream=False,
-                    ignore_downstream=False, direction_col=None,
-                    tie_breaking_col=None, self_mode=False,
-                    return_overlap=False, return_distance=True):
-    """One chromosome's closest output as a pandas frame: runs
-    :func:`_closest_kernel` and assembles the suffixed left+right
-    columns (left-join null row when ``pdf2`` is None/empty).  Shared by
-    the batch cogroup path, the broadcast strategy, and the streaming
-    static-annotation kernel so all emit byte-identical rows.
-
-    Null-coordinate pdf2 rows are dropped here — the engine-wide
-    null contract (null rows never match; the binned strategy gets this
-    from its join predicate). The reference rejects such input outright
-    (``is_bedframe(raise_errors=True)``, reference ``ops.py:1162``), so
-    filtering is a documented relaxation, not a semantics change."""
-    if pdf2 is not None and len(pdf2):
-        ok = pdf2[[sk2, ek2]].notna().all(axis=1)
-        if not ok.all():
-            pdf2 = pdf2[ok].reset_index(drop=True)
-    if pdf2 is None or len(pdf2) == 0:
-        left = pdf1.copy()
-        left.columns = [c + sfx1 for c in names1]
-        for c in names2:
-            left[c + sfx2] = None
-        if return_overlap:
-            left["have_overlap"] = None
-            left["overlap_start"] = None
-            left["overlap_end"] = None
-        if return_distance:
-            left["distance"] = None
-        return left
-    i1, i2, dist, pdf1s, pdf2s = _closest_kernel(
-        pdf1, pdf2, sk1=sk1, ek1=ek1, sk2=sk2, ek2=ek2, k=k,
-        ignore_overlaps=ignore_overlaps, ignore_upstream=ignore_upstream,
-        ignore_downstream=ignore_downstream, direction_col=direction_col,
-        tie_breaking_col=tie_breaking_col, self_mode=self_mode,
-    )
-    left = pdf1s.iloc[i1].reset_index(drop=True)
-    left.columns = [c + sfx1 for c in names1]
-    na = i2 < 0
-    right = pdf2s.iloc[np.where(na, 0, i2)].reset_index(drop=True)
-    right.columns = [c + sfx2 for c in names2]
-    right[na] = None
-    out = pd.concat([left, right], axis=1)
+def _out_schema(df1, df2, suffixes, return_overlap, return_distance):
+    """The kernel strategies' output schema: suffixed df1 and df2
+    fields, then the optional overlap and distance columns."""
+    sfx1, sfx2 = suffixes
+    fields = [T.StructField(f.name + sfx1, f.dataType, True)
+              for f in df1.schema.fields]
+    fields += [T.StructField(f.name + sfx2, f.dataType, True)
+               for f in df2.schema.fields]
     if return_overlap:
-        osv = np.maximum(left[sk1 + sfx1].to_numpy(np.int64, na_value=0),
-                         right[sk2 + sfx2].to_numpy(np.int64, na_value=0))
-        oev = np.minimum(left[ek1 + sfx1].to_numpy(np.int64, na_value=0),
-                         right[ek2 + sfx2].to_numpy(np.int64, na_value=0))
-        hov = osv < oev
-        out["have_overlap"] = np.where(na, None, hov)
-        out["overlap_start"] = np.where(hov & ~na, osv, None)
-        out["overlap_end"] = np.where(hov & ~na, oev, None)
+        fields += [
+            T.StructField("have_overlap", T.BooleanType(), True),
+            T.StructField("overlap_start", T.LongType(), True),
+            T.StructField("overlap_end", T.LongType(), True),
+        ]
     if return_distance:
-        out["distance"] = np.where(na, None, dist)
-    return out
+        fields.append(T.StructField("distance", T.LongType(), True))
+    return T.StructType(fields)
+
+
+def _outputs(out, return_input, return_overlap, return_distance):
+    """``return_input=False``: keep only the overlap/distance columns."""
+    if return_input:
+        return out
+    keep = []
+    if return_overlap:
+        keep += ["have_overlap", "overlap_start", "overlap_end"]
+    if return_distance:
+        keep.append("distance")
+    return out.select(*keep)
 
 
 def closest_within(
@@ -441,7 +344,7 @@ def _closest_binned(
     escalations re-scan the cache instead of re-deriving stats.
     """
     from .ops import overlap
-    from ..functions.intervals import effective_end, genomic_distance
+    from ..functions.intervals import genomic_distance
 
     ck1, sk1, ek1 = _resolve_cols(cols1)
     ck2, sk2, ek2 = _resolve_cols(cols2)
@@ -672,26 +575,34 @@ def _closest_binned(
             pairs = pairs.withColumn(sk2 + sfx2,
                                      F.col("__cb_os" + sfx2)) \
                          .drop("__cb_os" + sfx2)
-        is_ov = overlap_predicate(s1o, e1o, s2c, e2c)
-        ee1 = effective_end(s1o, e1o)
-        ee2 = effective_end(s2c, e2c)
-        left_side = ~is_ov & (ee2 <= s1o)
-        right_side = ~is_ov & (s2c >= ee1)
+        # the kernel's candidate sets: overlaps, and neighbours on each
+        # side by RAW coordinates (left: end2 <= start1, right: start2 >=
+        # end1), so a pair with a point can sit in several; it is kept
+        # when any set that is not ignored holds it. Coincident points
+        # overlap even at INT64_MAX, where the saturating point rewrite
+        # alone would say they do not.
+        is_ov = overlap_predicate(s1o, e1o, s2c, e2c) | (
+            (s1o == e1o) & (s2c == e2c) & (s1o == s2c))
+        left, right = e2c <= s1o, s2c >= e1o
+        # a null strand reads as '+', as in the kernel
         along = (F.lit(True) if direction_col is None
-                 else F.col(direction_col + sfx1) != F.lit("-"))
+                 else F.coalesce(F.col(direction_col + sfx1) != F.lit("-"),
+                                 F.lit(True)))
+        found_in = F.lit(False)
+        if not ignore_overlaps:
+            found_in |= is_ov
+        if not ignore_upstream:
+            found_in |= F.when(along, left).otherwise(right)
+        if not ignore_downstream:
+            found_in |= F.when(along, right).otherwise(left)
         dist = genomic_distance(s1o, e1o, s2c, e2c)
-        keep = dist <= F.col("__cb_cap" + sfx1)
-        if ignore_overlaps:
-            keep &= ~is_ov
-        if ignore_upstream:
-            keep &= ~((along & left_side) | (~along & right_side))
-        if ignore_downstream:
-            keep &= ~((along & right_side) | (~along & left_side))
-        idist = F.when(is_ov, F.lit(0)).otherwise(
+        keep = found_in & (dist <= F.col("__cb_cap" + sfx1))
+        # overlaps rank before abutting neighbours at distance 0
+        idist = F.when(is_ov & F.lit(not ignore_overlaps), F.lit(0)).otherwise(
             F.coalesce(F.try_add(dist, F.lit(1)), dist))  # saturating
         order = [F.asc("__idist")]
         if tie_breaking_col is not None:
-            order.append(F.asc(tie_breaking_col + sfx2))
+            order.append(F.asc_nulls_last(tie_breaking_col + sfx2))
         order += [F.asc(sk2 + sfx2), F.asc(ek2 + sfx2)]
         wk = Window.partitionBy(rid1).orderBy(*order)
         wc = Window.partitionBy(rid1)
@@ -784,116 +695,54 @@ def _closest_binned(
     out = out.drop(rid1)
     if not return_distance:
         out = out.drop("distance")
-    if not return_input:
-        keep_cols = []
-        if return_overlap:
-            keep_cols += ["have_overlap", "overlap_start", "overlap_end"]
-        if return_distance:
-            keep_cols.append("distance")
-        out = out.select(*keep_cols)
-    return out
+    return _outputs(out, return_input, return_overlap, return_distance)
 
 
-def _closest_broadcast(
-    df1: DataFrame, df2: DataFrame, *, k, ignore_overlaps, ignore_upstream,
-    ignore_downstream, direction_col, tie_breaking_col, return_input,
-    return_distance, return_overlap, suffixes, cols1, cols2,
-    max_rows: int | None = None, tiny: bool = False,
-) -> DataFrame | None:
+def _closest_broadcast(df1: DataFrame, df2: DataFrame, body: _ClosestBody,
+                       out_schema: T.StructType, max_rows: int | None = None,
+                       tiny: bool = False) -> DataFrame | None:
     """Broadcast-kernel closest for a small df2 (the "nearest gene
     against a huge table" shape): df2 is collected ONCE at
-    plan-construction time into per-chromosome pandas frames and shipped
-    as a Spark broadcast; a ``mapInPandas`` over df1 runs the SAME
-    per-chromosome kernel and row assembly as the cogroup path
-    (:func:`_closest_pandas`), so every row is byte-identical — but df1
-    never shuffles and parallelism is scan partitions, not chromosome
-    count. Same collected-dim contract (and kernel reuse) as
-    ``streaming.stream_closest_static``.
+    plan-construction time as an Arrow table and shipped as a Spark
+    broadcast; a ``mapInArrow`` over df1 runs the same body as the
+    cogroup path, so every row is identical — but df1 never shuffles
+    and parallelism is scan partitions, not chromosome count.
+    ``mapInArrow`` composes with streaming frames unchanged, so
+    ``streaming.stream_closest_static`` is this path.
 
     ``max_rows`` (the auto-gate path) hard-bounds the driver collect:
     Catalyst's size estimate alone admits df2 here, and a bad estimate
-    must not become an unbounded toPandas — over the cap, returns
-    ``None`` so the caller falls back (see ``ops._bounded_pdf``; no
+    must not become an unbounded collect — over the cap, returns
+    ``None`` so the caller falls back (see ``ops._bounded_arrow``; no
     extra probe job for genuinely tiny estimates, which keeps the auto
     path's fixed cost at ONE driver job).
 
     ``tiny`` (the auto gate, ``ops._tiny(df1)``): df1 is collected too,
-    under the same row cap, and the per-chromosome loop runs on the
-    driver; the rows (at most k per df1 row, plus left-join nulls) hand
-    back as a LocalRelation — no shuffle, no round-robin spread, no
-    Python-worker stage."""
-    ck1, sk1, ek1 = _resolve_cols(cols1)
-    ck2, sk2, ek2 = _resolve_cols(cols2)
-    sfx1, sfx2 = suffixes
-    names1 = list(df1.columns)
-    names2 = list(df2.columns)
-    if max_rows is not None:
-        from .ops import _bounded_pdf
-        ann_pd = _bounded_pdf(df2, max_rows)
-        if ann_pd is None:
-            return None
-    else:
-        ann_pd = df2.toPandas()
-    per2 = {c: grp.reset_index(drop=True)
-            for c, grp in ann_pd.groupby(ck2, sort=False)}
-
-    out_fields = [T.StructField(f.name + sfx1, f.dataType, True)
-                  for f in df1.schema.fields]
-    out_fields += [T.StructField(f.name + sfx2, f.dataType, True)
-                   for f in df2.schema.fields]
-    if return_overlap:
-        out_fields += [
-            T.StructField("have_overlap", T.BooleanType(), True),
-            T.StructField("overlap_start", T.LongType(), True),
-            T.StructField("overlap_end", T.LongType(), True),
-        ]
-    if return_distance:
-        out_fields.append(T.StructField("distance", T.LongType(), True))
-    out_schema = T.StructType(out_fields)
-    out_names = [f.name for f in out_fields]
-
-    def batch(pdf, per2):
-        outs = []
-        for chrom, p1 in pdf.groupby(ck1, sort=False, dropna=False):
-            p2 = None if pd.isna(chrom) else per2.get(chrom)
-            outs.append(_closest_pandas(
-                p1.reset_index(drop=True), p2,
-                names1=names1, names2=names2, sfx1=sfx1, sfx2=sfx2,
-                sk1=sk1, ek1=ek1, sk2=sk2, ek2=ek2, k=k,
-                ignore_overlaps=ignore_overlaps,
-                ignore_upstream=ignore_upstream,
-                ignore_downstream=ignore_downstream,
-                direction_col=direction_col,
-                tie_breaking_col=tie_breaking_col,
-                return_overlap=return_overlap,
-                return_distance=return_distance,
-            ))
-        return pd.concat(outs, ignore_index=True)[out_names]
-
+    under the same row cap, and the body runs on the driver; the rows
+    (at most k per df1 row, plus left-join nulls) hand back as a
+    LocalRelation — no shuffle, no round-robin spread, no Python-worker
+    stage."""
     from .ops import _bounded_arrow, _spread_if_underpartitioned
-    # probe=False: a tiny frame is far under the probe's size bar
-    tbl = _bounded_arrow(df1, max_rows, probe=False) if tiny else None
-    if tbl is not None:
-        # the conversion mapInPandas applies, so rows match it exactly
-        pdf1 = tbl.to_pandas(date_as_object=True)
-        out = local_df(batch(pdf1, per2) if len(pdf1) else [], out_schema)
+
+    if max_rows is None:
+        t2 = df2.toArrow()
     else:
-        ann_bc = df1.sparkSession.sparkContext.broadcast(per2)
+        t2 = _bounded_arrow(df2, max_rows)
+        if t2 is None:
+            return None
+    # probe=False: a tiny frame is far under the probe's size bar
+    t1 = _bounded_arrow(df1, max_rows, probe=False) if tiny else None
+    if t1 is not None:
+        return local_df(body(t1, t2), out_schema)
+    t2_bc = df1.sparkSession.sparkContext.broadcast(t2)
 
-        def kern(batches):
-            for pdf in batches:
-                if len(pdf):
-                    yield batch(pdf, ann_bc.value)
+    def kern(batches):
+        for b in batches:
+            if b.num_rows:
+                yield from body(pa.Table.from_batches([b]),
+                                t2_bc.value).to_batches()
 
-        out = _spread_if_underpartitioned(df1).mapInPandas(kern, out_schema)
-    if not return_input:
-        keep = []
-        if return_overlap:
-            keep += ["have_overlap", "overlap_start", "overlap_end"]
-        if return_distance:
-            keep.append("distance")
-        out = out.select(*keep)
-    return out
+    return _spread_if_underpartitioned(df1).mapInArrow(kern, out_schema)
 
 
 @owns
@@ -917,14 +766,15 @@ def closest(
     """For every df1 interval, the k closest df2 intervals (see module doc).
 
     ``strategy``: 'cogroup' = per-chrom vectorized kernel (fast, one task
-    per chromosome); 'binned' = pure-DataFrame cap-escalation plan
-    (parallel within chromosomes — the huge-single-chrom path);
-    'broadcast' = df2 collected once + per-chromosome pandas frames
-    shipped to a ``mapInPandas`` over df1 — zero shuffle of df1,
-    parallelism = scan partitions (the small-annotation / huge-df1
-    shape; same per-chrom kernel, byte-identical rows). 'auto' picks
-    broadcast when df2's scan size fits the broadcast bound (non-self
-    mode), else binned when the combined input scan size exceeds
+    per chromosome; ``applyInArrow``); 'binned' = pure-DataFrame
+    cap-escalation plan (parallel within chromosomes — the
+    huge-single-chrom path); 'broadcast' = df2 collected once as an
+    Arrow table and broadcast to a ``mapInArrow`` over df1 — zero
+    shuffle of df1, parallelism = scan partitions (the
+    small-annotation / huge-df1 shape; same body, identical rows).
+    'auto' picks broadcast when df2's scan size fits the broadcast
+    bound (non-self mode; tiny inputs then finish on the driver), else
+    binned when the combined input scan size exceeds
     ``_CLOSEST_COGROUP_BYTES`` and the feature set allows it (self-mode
     and callable tie-breakers need a kernel strategy).
 
@@ -948,7 +798,6 @@ def closest(
     ck2, sk2, ek2 = _resolve_cols(cols2)
     _verify_columns(df1, [ck1, sk1, ek1], "closest df1")
     _verify_columns(df2, [ck2, sk2, ek2], "closest df2")
-    sfx1, sfx2 = suffixes
 
     if strategy not in ("auto", "cogroup", "binned", "broadcast"):
         raise ValueError(
@@ -964,62 +813,33 @@ def closest(
             "strategy='broadcast' does not support self-mode (df2 would "
             "be df1 itself — unbounded); use strategy='cogroup'"
         )
+    opts = dict(k=k, ignore_overlaps=ignore_overlaps,
+                ignore_upstream=ignore_upstream,
+                ignore_downstream=ignore_downstream,
+                direction_col=direction_col,
+                tie_breaking_col=tie_breaking_col,
+                return_overlap=return_overlap,
+                return_distance=return_distance)
+    body = _ClosestBody(cols1=cols1, cols2=cols2, suffixes=suffixes,
+                        self_mode=self_mode, **opts)
+    out_schema = _out_schema(df1, df2, suffixes, return_overlap,
+                             return_distance)
     if strategy == "broadcast" or (strategy == "auto" and not self_mode
                                    and _small_df2(df2)):
         from .ops import _SMALL_INPUT_MAX_ROWS, _threshold, _tiny
         cap = (None if strategy == "broadcast"  # explicit request: trust it
                else _threshold(df2, "smallInputMaxRows", _SMALL_INPUT_MAX_ROWS))
-        out = _closest_broadcast(
-            df1, df2, k=k, ignore_overlaps=ignore_overlaps,
-            ignore_upstream=ignore_upstream, ignore_downstream=ignore_downstream,
-            direction_col=direction_col, tie_breaking_col=tie_breaking_col,
-            return_input=return_input, return_distance=return_distance,
-            return_overlap=return_overlap, suffixes=suffixes,
-            cols1=cols1, cols2=cols2, max_rows=cap,
-            tiny=strategy == "auto" and _tiny(df1),
-        )
+        out = _closest_broadcast(df1, df2, body, out_schema, max_rows=cap,
+                                 tiny=strategy == "auto" and _tiny(df1))
         if out is not None:
-            return out
+            return _outputs(out, return_input, return_overlap,
+                            return_distance)
         # auto-gate mis-estimate: df2 exceeded the hard row cap — fall
         # through to the distributed strategies
     if strategy == "binned" or (strategy == "auto" and binned_ok and _big_inputs(df1, df2)):
         return _closest_binned(
-            df1, df2, k=k, ignore_overlaps=ignore_overlaps,
-            ignore_upstream=ignore_upstream, ignore_downstream=ignore_downstream,
-            direction_col=direction_col, tie_breaking_col=tie_breaking_col,
-            return_input=return_input, return_distance=return_distance,
-            return_overlap=return_overlap, suffixes=suffixes,
-            cols1=cols1, cols2=cols2,
-        )
-
-    out_fields = [T.StructField(f.name + sfx1, f.dataType, True) for f in df1.schema.fields]
-    out_fields += [T.StructField(f.name + sfx2, f.dataType, True) for f in df2.schema.fields]
-    if return_overlap:
-        out_fields += [
-            T.StructField("have_overlap", T.BooleanType(), True),
-            T.StructField("overlap_start", T.LongType(), True),
-            T.StructField("overlap_end", T.LongType(), True),
-        ]
-    if return_distance:
-        out_fields.append(T.StructField("distance", T.LongType(), True))
-    out_schema = T.StructType(out_fields)
-    names1 = [f.name for f in df1.schema.fields]
-    names2 = [f.name for f in df2.schema.fields]
-
-    def fn(key, pdf1: pd.DataFrame, pdf2: pd.DataFrame) -> pd.DataFrame:
-        # undo the cogroup-side rename (see below)
-        pdf2 = pdf2.set_axis(names2, axis=1)
-        if len(pdf1) == 0:
-            return pd.DataFrame(columns=[f.name for f in out_fields])
-        return _closest_pandas(
-            pdf1, None if key[0] is None else pdf2,
-            names1=names1, names2=names2, sfx1=sfx1, sfx2=sfx2,
-            sk1=sk1, ek1=ek1, sk2=sk2, ek2=ek2, k=k,
-            ignore_overlaps=ignore_overlaps, ignore_upstream=ignore_upstream,
-            ignore_downstream=ignore_downstream, direction_col=direction_col,
-            tie_breaking_col=tie_breaking_col, self_mode=self_mode,
-            return_overlap=return_overlap, return_distance=return_distance,
-        )
+            df1, df2, return_input=return_input, suffixes=suffixes,
+            cols1=cols1, cols2=cols2, **opts)
 
     # Rename df2's columns before the cogroup. When df2 shares attribute
     # lineage with df1 (self-mode, or df2 derived from df1) AND the output
@@ -1027,15 +847,14 @@ def closest(
     # dedup can truncate the right-side frame to just the grouping column
     # (observed on Spark 4.1: right frame arrives as ['chrom'] only).
     # Unique right-side names make the plan collision-free; ``fn`` renames
-    # them back before the kernel runs.
-    df2r = df2.toDF(*["__r__" + c for c in df2.columns])
-    grouped = df1.groupBy(F.col(ck1)).cogroup(df2r.groupBy(F.col("__r__" + ck2)))
-    out = grouped.applyInPandas(fn, out_schema)
-    if not return_input:
-        keep = []
-        if return_overlap:
-            keep += ["have_overlap", "overlap_start", "overlap_end"]
-        if return_distance:
-            keep.append("distance")
-        out = out.select(*keep)
-    return out
+    # them back before the body runs.
+    names2 = df2.columns
+
+    def fn(t1: pa.Table, t2: pa.Table) -> pa.Table:
+        return body(t1, t2.rename_columns(names2))
+
+    df2r = df2.toDF(*["__r__" + c for c in names2])
+    out = (df1.groupBy(F.col(ck1))
+           .cogroup(df2r.groupBy(F.col("__r__" + ck2)))
+           .applyInArrow(fn, out_schema))
+    return _outputs(out, return_input, return_overlap, return_distance)

@@ -41,25 +41,24 @@ def frac_gene_coverage(df: DataFrame, genes: DataFrame, cols=None) -> DataFrame:
     inverted rows), it is collected ONCE and fed to both kernels —
     value-identical to the composition (each kernel is exactly the one
     its operator would build from its own collect of the same frame) but
-    one gene-table scan/collect instead of two, and the two pandas UDF
+    one gene-table scan/collect instead of two, and the two Arrow UDF
     columns still evaluate in a single ArrowEvalPython pass over df
     (or both on the driver when df is tiny)."""
     from .ops import (_SMALL_INPUT_BYTES, _count_lookup, _count_values,
-                      _coverage_lookup, _coverage_values, _plan_size_bytes,
-                      _small_coords_pdf, _with_kernel_column,
+                      _coverage_lookup, _coverage_values, _no_inverted,
+                      _plan_size_bytes, _small_coords, _with_kernel_column,
                       count_overlaps, coverage)
 
     ck, sk, ek = _resolve_cols(cols)
     g = genes.select(ck, sk, ek)
     if _plan_size_bytes(g) <= _SMALL_INPUT_BYTES:
-        pdf = _small_coords_pdf(g, ck, sk, ek)
-        if pdf is not None and (
-                len(pdf) == 0 or bool((pdf["s"] <= pdf["e"]).all())):
+        t = _small_coords(g, ck, sk, ek)
+        if t is not None and _no_inverted(t):
             out = _with_kernel_column(
                 df, "coverage", T.LongType(), _coverage_values,
-                _coverage_lookup(pdf), ck, sk, ek, fill=0)
+                _coverage_lookup(t), ck, sk, ek, fill=0)
             out = _with_kernel_column(
-                out, "count", T.LongType(), _count_values, _count_lookup(pdf),
+                out, "count", T.LongType(), _count_values, _count_lookup(t),
                 ck, sk, ek, fill=0).withColumnRenamed("count", "n_genes")
             return out.withColumn(
                 "gene_coverage",

@@ -19,9 +19,14 @@ Key physical choices:
   aggregations (running max + cumulative sum), i.e. one shuffle by
   (chrom, *on) then map-side work.
 - ``closest`` (``operators/closest.py``; no native as-of join in OSS
-  Spark) runs one vectorized sort+searchsorted kernel three ways: over a
-  collected small df2 as a ``mapInPandas`` over df1, cogrouped per
-  chromosome, or, for large inputs, as a binned cap-escalation ladder.
+  Spark) runs one Arrow body around a vectorized sort+searchsorted
+  kernel: over a collected small df2 as a ``mapInArrow`` over df1,
+  cogrouped per chromosome (``applyInArrow``), or on the driver; large
+  inputs take a binned cap-escalation ladder.
+- Python kernels take and return Arrow (``mapInArrow``, ``arrow_udf``,
+  or the driver's ``_bounded_arrow`` table) and group rows with
+  ``arrops.group_rows``, so int64 columns holding nulls never pass
+  through pandas' float64.
 - Tiny inputs (``_tiny``: plan size at most ``_TINY_INPUT_BYTES``) finish
   on the driver under ``strategy="auto"``: one bounded Arrow collect per
   side, the operator's NumPy kernel, and an Arrow-built LocalRelation
@@ -41,8 +46,12 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+
 from ..core import construction
-from ..core.arrops import island_sweep
+from ..core.arrops import group_rows, island_sweep, key_tuples
 from ..core.persist import owns, persist
 from ..core.specs import _resolve_cols, _verify_columns
 from ..core.stringops import parse_region
@@ -146,7 +155,7 @@ def _plan_size_bytes(df: DataFrame) -> int:
 
 _TINY_INPUT_BYTES = 1 << 20  # at or below this scan size an operator runs
 # whole on the driver and hands back a LocalRelation: a Python-worker
-# stage (pandas UDF, mapInPandas) costs ~250-300 ms fixed per call on a
+# stage (Arrow UDF, mapInArrow) costs ~250-300 ms fixed per call on a
 # 4-core host, the NumPy kernel a few ms. Not a knob: a LocalRelation of
 # ~120k rows costs ~440 ms to scan, so local execution loses well below
 # the broadcast sizes clusters raise the other gates to (SCALING §17)
@@ -160,8 +169,9 @@ def _tiny(df: DataFrame) -> bool:
 
 
 def _atomic(df: DataFrame, c: str) -> bool:
-    """Column ``c`` holds hashable scalars: pandas can group the driver
-    and map-side kernels by it (array/map/struct/binary values cannot)."""
+    """Column ``c`` holds hashable scalars: the driver and map-side
+    kernels can group by it and key a lookup with it (array/map/struct/
+    binary values cannot)."""
     return not dict(df.dtypes)[c].startswith(
         ("array", "map", "struct", "binary"))
 
@@ -186,14 +196,19 @@ def _spread_if_underpartitioned(df: DataFrame) -> DataFrame:
 
 
 def _threshold(df: DataFrame, key: str, default: int) -> int:
-    """Deployment knob: ``spark.bioframe.<key>`` (bytes) overrides a
+    """Deployment knob: ``spark.bioframe.<key>`` (an integer) overrides a
     built-in strategy threshold — lets a cluster tune the plain/binned
-    and classic/ranged cutovers without code changes."""
-    try:
-        v = df.sparkSession.conf.get("spark.bioframe." + key, None)
-        return default if v is None else int(v)
-    except Exception:
+    and classic/ranged cutovers without code changes. Unset reads as
+    ``default``; a value that is not an integer raises, so a mistyped
+    knob cannot silently do nothing."""
+    v = df.sparkSession.conf.get("spark.bioframe." + key, None)
+    if v is None:
         return default
+    try:
+        return int(v)
+    except ValueError:
+        raise ValueError(
+            f"spark.bioframe.{key} must be an integer, got {v!r}") from None
 
 
 class _BinStats(tuple):
@@ -1268,9 +1283,13 @@ def _premerge_local(df: DataFrame, ck: str, sk: str, ek: str, on: list,
     emitted point row has ``__cnt`` 1 (the invariant
     ``_expand_point_dups`` needs).
 
+    Runs as ``mapInArrow``: RecordBatches are buffered up to
+    ``premergeBatchRows`` rows, grouped with ``arrops.group_rows`` and
+    the output built with ``take``, so no pandas conversion runs.
+
     Input must be null-free in (chrom, start, end, *on) — callers split
-    null rows first — and its key columns atomic (pandas groups by them;
-    ValueError otherwise). Output: (chrom, start, end, *on, __cnt).
+    null rows first — and its key columns atomic (ValueError otherwise).
+    Output: (chrom, start, end, *on, __cnt).
     """
     cols_ = [ck, sk, ek] + on
     keys = [ck] + on
@@ -1290,37 +1309,33 @@ def _premerge_local(df: DataFrame, ck: str, sk: str, ek: str, on: list,
     buf_rows = _threshold(df, "premergeBatchRows", 262_144)
 
     def gen(batches):
-        import pandas as pd
-
         held, held_n = [], 0
-        for pdf in batches:
-            if not len(pdf):
+        for b in batches:
+            if not b.num_rows:
                 continue
-            held.append(pdf[cols_])
-            held_n += len(pdf)
+            held.append(b.select(cols_))
+            held_n += b.num_rows
             if held_n >= buf_rows:
-                yield _fuse(pd.concat(held, ignore_index=True))
+                yield from _fuse(pa.Table.from_batches(held)).to_batches()
                 held, held_n = [], 0
         if held:
-            yield _fuse(pd.concat(held, ignore_index=True))
+            yield from _fuse(pa.Table.from_batches(held)).to_batches()
 
-    def _fuse(pdf):
-        import numpy as np
-
-        s_all = pdf[sk].to_numpy("int64")
-        e_all = pdf[ek].to_numpy("int64")
+    def _fuse(t):
+        s_all = t[sk].cast(pa.int64()).to_numpy()
+        e_all = t[ek].cast(pa.int64()).to_numpy()
         take, ends, cnts = [], [], []
-        for ix in pdf.groupby(keys, sort=False).indices.values():
+        for ix in group_rows(t, keys)[1]:
             f, _, e, c = island_sweep(s_all[ix], e_all[ix], min_dist=min_dist)
             take.append(ix[f])
             ends.append(e)
             cnts.append(c)
-        out = pdf.iloc[np.concatenate(take)].reset_index(drop=True)
-        out[ek] = np.concatenate(ends).astype(pdf[ek].dtype)
-        out["__cnt"] = np.concatenate(cnts)
-        return out
+        out = t.take(pa.array(np.concatenate(take)))
+        end = pa.array(np.concatenate(ends)).cast(t.schema.field(ek).type)
+        return out.set_column(cols_.index(ek), ek, end).append_column(
+            "__cnt", pa.array(np.concatenate(cnts), pa.int64()))
 
-    return df.mapInPandas(gen, out_schema)
+    return df.mapInArrow(gen, out_schema)
 
 
 def _border_merge_weighted(d: DataFrame, ck: str, sk: str, ek: str,
@@ -1400,10 +1415,6 @@ def _merge_local(df: DataFrame, ck, sk, ek, on, min_dist):
     null ``n_intervals``. Returns None when the input exceeds
     ``spark.bioframe.smallInputMaxRows`` (callers fall back to the
     distributed constructions)."""
-    import numpy as np
-    import pandas as pd
-    import pyarrow as pa
-
     cap = _threshold(df, "smallInputMaxRows", _SMALL_INPUT_MAX_ROWS)
     cols = [ck, sk, ek, *on]
     tbl = _bounded_arrow(df.select(*cols), cap)
@@ -1415,15 +1426,12 @@ def _merge_local(df: DataFrame, ck, sk, ek, on, min_dist):
     s_all = tbl[sk].cast(pa.int64()).fill_null(0).to_numpy()
     e_all = tbl[ek].cast(pa.int64()).fill_null(0).to_numpy()
     vpos = np.flatnonzero(valid)
-    keys = pd.DataFrame({c: tbl[c].to_pandas(types_mapper=pd.ArrowDtype)
-                         for c in [ck] + on}).iloc[vpos]
     # per island: the table row of its first interval (chrom, start and
     # the on keys come from that row), its end and its interval count
     first = [np.zeros(0, dtype=np.int64)]
     ends = [np.zeros(0, dtype=np.int64)]
     cnts = [np.zeros(0, dtype=np.int64)]
-    groups = keys.groupby([ck] + on, sort=False).indices if len(vpos) else {}
-    for ix in groups.values():
+    for ix in group_rows(tbl.take(pa.array(vpos)), [ck] + on)[1]:
         rows = vpos[ix]
         f, _, e, c = island_sweep(s_all[rows], e_all[rows], min_dist=min_dist)
         first.append(rows[f])
@@ -1624,11 +1632,12 @@ def _cluster_premerged(df: DataFrame, ck, sk, ek, on, min_dist):
        before anything shuffles.
     2. ``_border_merge_weighted`` over the shrunken rows: the global
        island SPANS (small — one row per cluster).
-    3. The spans table is collected (hard row cap; over the cap returns
-       None and the caller falls back), sorted driver-side in
-       (group-keys asc, start asc) order — exactly the classic path's
-       dense numbering — and broadcast as per-key sorted arrays.
-    4. A vectorized searchsorted Pandas UDF assigns (cluster,
+    3. The spans table is collected as Arrow (hard row cap; over the
+       cap returns None and the caller falls back), sorted driver-side
+       in (group-keys asc, start asc) order on the native key types —
+       exactly the classic path's dense numbering — and broadcast as
+       per-key sorted arrays.
+    4. A vectorized searchsorted Arrow UDF assigns (cluster,
        cluster_start, cluster_end) per input row: under ``min_dist >= 0``
        island spans within a group are strictly separated, so the owning
        cluster is uniquely ``#(starts <= row_start) - 1``. The input
@@ -1644,9 +1653,6 @@ def _cluster_premerged(df: DataFrame, ck, sk, ek, on, min_dist):
     Returns (assigned DataFrame with df's columns + cluster_start,
     cluster_end, cluster; total number of real clusters) or None.
     """
-    import numpy as np
-    import pandas as pd
-
     assert min_dist is not None
     keys = [ck] + on
     # both map passes (premerge shrink, kernel assignment) inherit scan
@@ -1658,7 +1664,7 @@ def _cluster_premerged(df: DataFrame, ck, sk, ek, on, min_dist):
     # native key copies drive the ordering (string-cast ordering would
     # misnumber int-coded chroms: "10" < "2"); string casts drive the
     # lookup so the kernel's Arrow-side keys compare exactly (same
-    # discipline as _small_coords_pdf / _with_kernel_column)
+    # discipline as _small_coords / _with_kernel_column)
     sel = ([F.col(ck).alias("__nat0")]
            + [F.col(c).alias(f"__nat{i+1}") for i, c in enumerate(on)]
            + [F.col(ck).cast("string").alias("c")]
@@ -1668,20 +1674,17 @@ def _cluster_premerged(df: DataFrame, ck, sk, ek, on, min_dist):
     # probe=False: the spans are a two-window aggregate that a count
     # probe would run twice; the maxResultSize backstop and the post-hoc
     # row check still bound the collect (see _bounded_pdf)
-    cl = _bounded_pdf(spans.select(*sel), cap, probe=False)
+    cl = _bounded_arrow(spans.select(*sel), cap, probe=False)
     if cl is None:
         return None
-    natcols = [f"__nat{i}" for i in range(len(keys))]
-    cl = cl.sort_values(natcols + ["s"], kind="mergesort").reset_index(drop=True)
+    cl = cl.sort_by([(f"__nat{i}", "ascending") for i in range(len(keys))]
+                    + [("s", "ascending")])
     keycols = ["c"] + [f"o{i}" for i in range(len(on))]
-    ids = np.arange(len(cl), dtype="int64")
-    per = {}
-    for key, idx in cl.groupby(keycols, sort=False).indices.items():
-        key = key if isinstance(key, tuple) else (key,)
-        per[tuple(key)] = (cl["s"].to_numpy("int64")[idx],
-                           cl["e"].to_numpy("int64")[idx], ids[idx])
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(per)
+    s_all, e_all = cl["s"].to_numpy(), cl["e"].to_numpy()
+    kt, groups = group_rows(cl, keycols)
+    per = {key: (s_all[ix], e_all[ix], ix)
+           for key, ix in zip(key_tuples(kt), groups)}
+    bc = df.sparkSession.sparkContext.broadcast(per)
 
     ret = T.StructType([
         T.StructField("cluster", T.LongType()),
@@ -1689,23 +1692,21 @@ def _cluster_premerged(df: DataFrame, ck, sk, ek, on, min_dist):
         T.StructField("cluster_end", T.LongType()),
     ])
 
-    @F.pandas_udf(ret)
+    @F.arrow_udf(ret)
     def _asg(*args):
-        c, *ons, s = args
+        *kargs, s = args
         tbl = bc.value
-        n = len(c)
+        n = len(s)
         out_id = np.full(n, -1, dtype="int64")
         out_s = np.zeros(n, dtype="int64")
         out_e = np.zeros(n, dtype="int64")
-        sv = s.to_numpy("int64")
-        kdf = pd.DataFrame({"c": c.reset_index(drop=True),
-                            **{f"o{i}": o.reset_index(drop=True)
-                               for i, o in enumerate(ons)}})
-        for key, idx in kdf.groupby(keycols, sort=False).indices.items():
-            key = key if isinstance(key, tuple) else (key,)
+        sv = s.to_numpy()
+        kt, groups = group_rows(pa.table(dict(zip(keycols, kargs))),
+                                keycols)
+        for key, idx in zip(key_tuples(kt), groups):
             # every valid input row premerged into some island, so a
             # miss means a dtype/lookup bug — fail the task loudly
-            S, E, I = tbl[tuple(key)]
+            S, E, I = tbl[key]
             pos = np.searchsorted(S, sv[idx], side="right") - 1
             if (pos < 0).any():
                 raise RuntimeError("cluster premerge kernel: row before "
@@ -1713,8 +1714,9 @@ def _cluster_premerged(df: DataFrame, ck, sk, ek, on, min_dist):
             out_id[idx] = I[pos]
             out_s[idx] = S[pos]
             out_e[idx] = E[pos]
-        return pd.DataFrame({"cluster": out_id, "cluster_start": out_s,
-                             "cluster_end": out_e})
+        return pa.StructArray.from_arrays(
+            [pa.array(out_id), pa.array(out_s), pa.array(out_e)],
+            names=["cluster", "cluster_start", "cluster_end"])
 
     st, et = df.schema[sk].dataType, df.schema[ek].dataType
     # classic path's equi-join reorders output to (keys, start, end, rest);
@@ -1877,8 +1879,8 @@ def setdiff(df1: DataFrame, df2: DataFrame, cols1=None, cols2=None,
 _SMALL_INPUT_MAX_ROWS = 2_000_000  # hard row cap on the kernel-gate driver
 # collect: Catalyst's size estimate alone decides eligibility, and a bad
 # estimate (selective-looking filter over a large scan) must not turn a
-# lazy plan call into an unbounded toPandas. 2M coordinate rows ≈ 50 MB
-# of driver pandas — the same order as the broadcast the gate implies.
+# lazy plan call into an unbounded collect. 2M coordinate rows ≈ 50 MB
+# on the driver — the same order as the broadcast the gate implies.
 
 
 def _bounded_pdf(sub: DataFrame, cap: int, *, probe: bool | None = None):
@@ -1936,23 +1938,22 @@ def _bounded_collect(sub: DataFrame, cap: int, probe, collect):
     return None if len(out) > cap else out
 
 
-def _small_coords_pdf(df2: DataFrame, ck: str, sk: str, ek: str,
-                      on: list | None = None):
-    """Driver-side pandas frame of df2's valid (chrom,[on...],start,end)
-    rows, or ``None`` when df2 turns out to exceed the hard row cap
-    (``spark.bioframe.smallInputMaxRows``) despite Catalyst's size
-    estimate passing the ``_SMALL_INPUT_BYTES`` gate — callers treat
-    None as "fall back to the join formulation". The collect is bounded
-    on every path (see :func:`_bounded_pdf`), so a mis-estimated large
-    df2 never becomes an unbounded driver materialization.
+def _small_coords(df2: DataFrame, ck: str, sk: str, ek: str,
+                  on: list | None = None):
+    """Driver-side Arrow table (c, o0.., s, e) of df2's valid
+    (chrom, [on...], start, end) rows, or ``None`` when df2 turns out to
+    exceed the hard row cap (``spark.bioframe.smallInputMaxRows``)
+    despite Catalyst's size estimate passing the ``_SMALL_INPUT_BYTES``
+    gate — callers treat None as "fall back to the join formulation".
+    The collect is bounded on every path (see :func:`_bounded_pdf`), so
+    a mis-estimated large df2 never becomes an unbounded driver
+    materialization.
 
     All key columns — chrom AND ``on`` — are cast to STRING with
-    Spark's own cast, and the kernel UDFs cast df1's key columns the
-    same way, so keys compare exactly across dtypes (an int-coded
-    chrom column would otherwise never match the string the UDF
-    receives, silently zeroing every count) and even for values a
-    pandas nullable column would degrade (a null in an int64 Arrow
-    batch turns the series float64, rounding keys above 2^53)."""
+    Spark's own cast, and :func:`_with_kernel_column` casts df1's key
+    columns the same way, so keys compare exactly across dtypes (an
+    int-coded chrom column would otherwise never match the string the
+    kernel receives, silently zeroing every count)."""
     on = on or []
     sel = [F.col(ck).cast("string").alias("c"),
            *[F.col(c).cast("string").alias(f"o{i}")
@@ -1964,42 +1965,46 @@ def _small_coords_pdf(df2: DataFrame, ck: str, sk: str, ek: str,
         cond = cond & F.col(c).isNotNull()
     cap = _threshold(df2, "smallInputMaxRows", _SMALL_INPUT_MAX_ROWS)
     sub = df2.select(*sel).filter(cond)
-    return _bounded_pdf(sub, cap)
+    return _bounded_arrow(sub, cap)
 
 
-def _coverage_lookup(pdf) -> dict:
+def _no_inverted(t) -> bool:
+    """No row of a :func:`_small_coords` table has end < start: inverted
+    rows break the kernels' sorted-array identities, so callers route
+    them to the join formulation."""
+    return t.num_rows == 0 or pc.all(pc.less_equal(t["s"], t["e"])).as_py()
+
+
+def _coverage_lookup(t) -> dict:
     """chrom -> (merged_starts, merged_ends, prefix_len) numpy arrays.
     ``arrops.island_sweep`` per chrom (min_dist=0: touching intervals
     join an island) + prefix sums of merged lengths, so per-query
     coverage is two searchsorteds + boundary clips."""
-    import numpy as np
-
+    s, e = t["s"].to_numpy(), t["e"].to_numpy()
     per = {}
-    for c, g in pdf.groupby("c", sort=False):
-        _, ms, me, _ = island_sweep(g["s"].to_numpy("int64"),
-                                    g["e"].to_numpy("int64"), min_dist=0)
+    keys, groups = group_rows(t, ["c"])
+    for c, ix in zip(keys["c"].to_pylist(), groups):
+        _, ms, me, _ = island_sweep(s[ix], e[ix], min_dist=0)
         per[c] = (ms, me, np.concatenate(([0], np.cumsum(me - ms))))
     return per
 
 
 def _coverage_values(per: dict, c, s, e):
     """Covered bp per query row (chrom ``c``, start ``s``, end ``e``
-    arrays) from a :func:`_coverage_lookup` table. The matched merged
+    Arrow arrays) from a :func:`_coverage_lookup` table. The matched merged
     islands for a query are exactly the slice [i, j) with i = first
     island end > qs, j = first island start >= qe; clips apply only at
     the slice boundaries (interior islands are provably contained for
     any qs/qe, including inverted queries), so coverage =
     pref[j]-pref[i] - left_clip - right_clip reproduces the
     join-and-sum formulation value-for-value."""
-    import numpy as np
-    import pandas as pd
-
+    s, e = s.to_numpy(), e.to_numpy()
     res = np.zeros(len(c), dtype="int64")
-    for chrom in pd.unique(c):
+    keys, groups = group_rows(pa.table({"c": c}), ["c"])
+    for chrom, m in zip(keys["c"].to_pylist(), groups):
         ent = per.get(chrom)
         if ent is None:
             continue
-        m = c == chrom
         MS, ME, P = ent
         qs, qe = s[m], e[m]
         i = np.searchsorted(ME, qs, side="right")
@@ -2015,28 +2020,25 @@ def _coverage_values(per: dict, c, s, e):
     return res
 
 
-def _count_lookup(pdf, n_on: int = 0) -> dict:
+def _count_lookup(t, n_on: int = 0) -> dict:
     """(chrom, *on) -> (sorted starts, sorted effective ends, starts,
-    effective ends) of a :func:`_small_coords_pdf` frame, with the
+    effective ends) of a :func:`_small_coords` table, with the
     point->length-1 rewrite (``effective_end``) applied."""
-    import numpy as np
-
+    s, e = t["s"].to_numpy(), t["e"].to_numpy()
     per = {}
-    keycols = ["c"] + [f"o{i}" for i in range(n_on)]
-    for key, g in pdf.groupby(keycols, sort=False):
-        key = key if isinstance(key, tuple) else (key,)
-        sr = g["s"].to_numpy("int64")
-        er = g["e"].to_numpy("int64")
+    keys, groups = group_rows(t, ["c"] + [f"o{i}" for i in range(n_on)])
+    for key, ix in zip(key_tuples(keys), groups):
+        sr, er = s[ix], e[ix]
         # point -> length-1 rewrite, mirroring effective_end()
         ee = np.where(er == sr, er + 1, er)
-        per[tuple(key)] = (np.sort(sr), np.sort(ee), sr, ee)
+        per[key] = (np.sort(sr), np.sort(ee), sr, ee)
     return per
 
 
 def _count_values(per: dict, c, *rest):
-    """Overlap count per query row (``c``, ``*on``, ``s``, ``e``) from a
-    :func:`_count_lookup` table, matching ``overlap_predicate``
-    exactly:
+    """Overlap count per query row (``c``, ``*on``, ``s``, ``e`` Arrow
+    arrays) from a :func:`_count_lookup` table, matching
+    ``overlap_predicate`` exactly:
 
       match iff  start2 < qe'  and  end2' > qs
       count  =  #(start2 < qe') - #(end2' <= qs)
@@ -2049,17 +2051,15 @@ def _count_values(per: dict, c, *rest):
     pre-check df2 for inverted rows — they invalidate the sorted-array
     identity — and route them to the join formulation instead. Null
     keys count 0, the join formulation's null-never-matches rule."""
-    import numpy as np
-    import pandas as pd
-
     *ons, s, e = rest
+    s, e = s.to_numpy(), e.to_numpy()
     keycols = ["c"] + [f"o{i}" for i in range(len(ons))]
     res = np.zeros(len(c), dtype="int64")
-    keys = pd.DataFrame(dict(zip(keycols, [c, *ons])))
-    # dropna-by-default: rows with a null chrom/on key stay 0
-    for key, idx in keys.groupby(keycols, sort=False).indices.items():
-        key = key if isinstance(key, tuple) else (key,)
-        ent = per.get(tuple(key))
+    # a null key is never in the lookup, so its rows stay 0
+    keys, groups = group_rows(pa.table(dict(zip(keycols, [c, *ons]))),
+                              keycols)
+    for key, idx in zip(key_tuples(keys), groups):
+        ent = per.get(key)
         if ent is None:
             continue
         S, E, Sr, Ee = ent
@@ -2082,17 +2082,19 @@ def _with_kernel_column(df: DataFrame, name: str, dtype: T.DataType,
     df's (chrom, *on, start, end), ``fill`` where chrom/start/end is
     null. Every key is cast with Spark's own cast (chrom and ``on`` to
     STRING, coordinates to LONG), so keys compare exactly against a
-    :func:`_small_coords_pdf` lookup; nulls are coalesced before the
-    kernel sees them, keeping its int64 inputs exact.
+    :func:`_small_coords` lookup; nulls are coalesced before the
+    kernel sees them, keeping its int64 inputs exact. The kernel takes
+    those columns as Arrow arrays and returns a NumPy array.
 
     A :func:`_tiny` df finishes on the driver: one bounded Arrow collect
     of df with the cast keys, the kernel, and a LocalRelation
-    hand-back. Otherwise the kernel runs as a pandas UDF over the
+    hand-back. Otherwise the kernel runs as an Arrow UDF over the
     broadcast table, map-only over df (which may be arbitrarily
-    large): no distinct, no join, no join-back."""
-    import numpy as np
-    import pyarrow as pa
+    large): no distinct, no join, no join-back. Both paths hand the
+    kernel the same Arrow arrays."""
+    from pyspark.sql.pandas.types import to_arrow_type
 
+    atype = to_arrow_type(dtype)
     valid = (F.col(ck).isNotNull() & F.col(sk).isNotNull()
              & F.col(ek).isNotNull())
     args = [F.coalesce(F.col(ck).cast("string"), F.lit("")),
@@ -2108,10 +2110,9 @@ def _with_kernel_column(df: DataFrame, name: str, dtype: T.DataType,
             _threshold(df, "smallInputMaxRows", _SMALL_INPUT_MAX_ROWS),
             probe=False)
         if tbl is not None:
-            res = kernel(table, *[tbl[k].to_numpy(zero_copy_only=False)
-                                  for k in keys])
+            res = kernel(table, *[tbl[k].combine_chunks() for k in keys])
             ok = tbl["__kv"].to_numpy(zero_copy_only=False)
-            col = pa.array(np.where(ok, res, fill))
+            col = pa.array(np.where(ok, res, fill), atype)
             # withColumn's schema: replace in place, else append
             fields = list(df.schema.fields)
             base = tbl.select(list(range(len(fields))))
@@ -2126,13 +2127,9 @@ def _with_kernel_column(df: DataFrame, name: str, dtype: T.DataType,
             return construction.local_df(base, T.StructType(fields))
     bc = df.sparkSession.sparkContext.broadcast(table)
 
-    @F.pandas_udf(dtype)
+    @F.arrow_udf(dtype)
     def _kern(*cols):
-        import pandas as pd
-
-        return pd.Series(kernel(bc.value, *[
-            x.to_numpy(dtype=object) if x.dtype == object
-            else x.to_numpy("int64") for x in cols]))
+        return pa.array(kernel(bc.value, *cols), atype)
 
     return df.withColumn(name, F.when(valid, _kern(*args)).otherwise(
         F.lit(fill).cast(dtype)))
@@ -2170,18 +2167,17 @@ def count_overlaps(df1: DataFrame, df2: DataFrame, suffixes=("", "_"),
         # Inverted df2 rows invalidate the sorted-array counting
         # identity and fall through to the join formulation (which
         # prices them via the overlap predicate row by row).
-        pdf = _small_coords_pdf(df2, ck2, sk2, ek2, on)
-        if pdf is not None and (
-                len(pdf) == 0 or bool((pdf["s"] <= pdf["e"]).all())):
+        t2 = _small_coords(df2, ck2, sk2, ek2, on)
+        if t2 is not None and _no_inverted(t2):
             # no spread guard here: the searchsorted kernel is tens of
             # ns/row, so on under-partitioned (small/cached) inputs the
             # round-robin shuffle costs more than single-task vectorized
             # work saves (A/B: 1.79 s vs 0.96 s on a 3-partition cached
-            # 600k-row input). The heavy pandas kernels (closest
+            # 600k-row input). The heavy kernels (closest
             # broadcast, cluster premerge) DO spread.
             out = _with_kernel_column(
                 df1, "count", T.LongType(), _count_values,
-                _count_lookup(pdf, len(on)), ck1, sk1, ek1, on, fill=0)
+                _count_lookup(t2, len(on)), ck1, sk1, ek1, on, fill=0)
             return out if return_input else out.select("count")
     keys = [ck1, sk1, ek1, *on]
     coords = df1.select(*keys).filter(F.col(ck1).isNotNull()).distinct()
@@ -2230,7 +2226,7 @@ def coverage(df1: DataFrame, df2: DataFrame, suffixes=("", "_"),
     "coverage against an annotation track" shape), a broadcast kernel:
     df2 is collected, merged locally (numpy sweep), and covered bp per
     df1 row comes from broadcast prefix-sum arrays via a vectorized
-    searchsorted Pandas UDF — map-only over df1, which may be arbitrarily
+    searchsorted Arrow UDF — map-only over df1, which may be arbitrarily
     large; no distinct, no join, no join-back. NOTE the kernel gate makes
     plan construction EAGER for small df2 (one driver-side collect per
     call, same bytes the broadcast would ship); if the collected frame
@@ -2250,13 +2246,12 @@ def coverage(df1: DataFrame, df2: DataFrame, suffixes=("", "_"),
         # large): no distinct, no join, no join-back. Falls through to
         # the join formulation if df2 contains inverted intervals, whose
         # local-merge semantics would diverge from merge()'s islands.
-        pdf = _small_coords_pdf(df2, ck2, sk2, ek2)
-        if pdf is not None and (
-                len(pdf) == 0 or bool((pdf["s"] <= pdf["e"]).all())):
+        t2 = _small_coords(df2, ck2, sk2, ek2)
+        if t2 is not None and _no_inverted(t2):
             # no spread guard — see count_overlaps (light kernel rule)
             out = _with_kernel_column(
                 df1, "coverage", T.LongType(), _coverage_values,
-                _coverage_lookup(pdf), ck1, sk1, ek1, fill=0)
+                _coverage_lookup(t2), ck1, sk1, ek1, fill=0)
             return out if return_input else out.select("coverage")
     m2 = merge(df2, min_dist=0, cols=cols2)
     merged2 = m2.filter(F.col(ck2).isNotNull())
@@ -2523,54 +2518,47 @@ def complement(df: DataFrame, view_df=None, view_name_col: str = "name",
     return out.filter(F.col(sk) < F.col(ek))
 
 
-def _assign_lookup(pdf) -> dict:
+def _assign_lookup(t) -> dict:
     """chrom -> (starts, effective_ends, raw_ends, names) arrays, arms
     sorted by (start, name) ascending — the top-1 window's tie order, so
     a first-strict-max scan reproduces ``row_number() over (ovl DESC,
     __vs ASC, __vn ASC) = 1`` exactly. Effective ends carry the same
     point->length-1 rewrite as ``overlap_predicate``. Null names sort
     first (SQL ASC NULLS FIRST)."""
-    import numpy as np
-
+    t = t.sort_by([("s", "ascending"), ("n", "ascending")],
+                  null_placement="at_start")
+    s, e = t["s"].to_numpy(), t["e"].to_numpy()
+    n = t["n"].to_numpy(zero_copy_only=False)
     per = {}
-    for c, g in pdf.groupby("c", sort=False):
-        rows = sorted(
-            zip(g["s"].tolist(), g["e"].tolist(), g["n"].tolist()),
-            key=lambda r: (r[0], r[2] is not None, r[2]),
-        )
-        vs = np.array([r[0] for r in rows], dtype="int64")
-        ve = np.array([r[1] for r in rows], dtype="int64")
-        vn = np.array([r[2] for r in rows], dtype=object)
+    keys, groups = group_rows(t, ["c"])
+    for c, ix in zip(keys["c"].to_pylist(), groups):
+        vs, ve = s[ix], e[ix]
         # saturating point->length-1 rewrite (effective_end: a point AT
         # INT64_MAX keeps INT64_MAX; numpy's +1 would wrap negative)
-        imax = np.iinfo(np.int64).max
-        ve_eff = np.where((ve == vs) & (ve != imax), ve + 1, ve)
-        per[c] = (vs, ve_eff, ve, vn)
+        ve_eff = np.where((ve == vs) & (ve != INT64_MAX), ve + 1, ve)
+        per[c] = (vs, ve_eff, ve, n[ix])
     return per
 
 
 def _assign_values(per: dict, c, s, e):
-    """Best-overlap view-region name per query row (``c``, ``s``, ``e``)
-    from an :func:`_assign_lookup` table. Per chromosome the kernel
-    sweeps its (bounded, see the caller's arms-per-chrom gate) arm list
-    once, vectorized over the rows; an arm wins only on STRICTLY greater
-    overlap length, so the (start, name) pre-sort decides ties exactly
-    like the window path's (ovl DESC, __vs ASC, __vn ASC) top-1. Rows
-    matching no arm yield None."""
-    import numpy as np
-    import pandas as pd
-
+    """Best-overlap view-region name per query row (``c``, ``s``, ``e``
+    Arrow arrays) from an :func:`_assign_lookup` table. Per chromosome
+    the kernel sweeps its (bounded, see the caller's arms-per-chrom
+    gate) arm list once, vectorized over the rows; an arm wins only on
+    STRICTLY greater overlap length, so the (start, name) pre-sort
+    decides ties exactly like the window path's (ovl DESC, __vs ASC,
+    __vn ASC) top-1. Rows matching no arm yield None."""
+    s, e = s.to_numpy(), e.to_numpy()
     res = np.full(len(c), None, dtype=object)
-    for chrom in pd.unique(c):
+    keys, groups = group_rows(pa.table({"c": c}), ["c"])
+    for chrom, m in zip(keys["c"].to_pylist(), groups):
         ent = per.get(chrom)
         if ent is None:
             continue
-        m = c == chrom
         VS, VEe, VE, VN = ent
         qs, qe = s[m], e[m]
         # saturating effective_end (see _assign_lookup)
-        qe_eff = np.where(
-            (qe == qs) & (qe != np.iinfo(np.int64).max), qe + 1, qe)
+        qe_eff = np.where((qe == qs) & (qe != INT64_MAX), qe + 1, qe)
         best_i = np.full(qs.size, -1, dtype="int64")
         best_ovl = np.zeros(qs.size, dtype="int64")
         for a in range(VS.size):
@@ -2603,7 +2591,7 @@ def assign_view(df: DataFrame, view_df, drop_unassigned: bool = False,
 
     Three plans. A view is small by construction (a genome partition),
     so the PRIMARY plan is a broadcast kernel: collect the view (bounded
-    — ``_bounded_pdf``), broadcast per-chrom arm arrays, and compute the
+    — ``_bounded_arrow``), broadcast per-chrom arm arrays, and compute the
     best-overlap name as one vectorized map-only column over df —
     no shuffle of df at ANY df size (this is also the 100 TB plan).
     Falls back when the view exceeds the small-input/arms-per-chrom
@@ -2635,16 +2623,14 @@ def assign_view(df: DataFrame, view_df, drop_unassigned: bool = False,
             & F.col("__ve").isNotNull()
         ).select(F.col("__vc").alias("c"), F.col("__vs").alias("s"),
                  F.col("__ve").alias("e"), F.col("__vn").alias("n"))
-        vpdf = _bounded_pdf(vsub, _threshold(df, "smallInputMaxRows",
+        vt = _bounded_arrow(vsub, _threshold(df, "smallInputMaxRows",
                                              _SMALL_INPUT_MAX_ROWS))
-        if vpdf is not None and (
-                len(vpdf) == 0
-                or int(vpdf.groupby("c").size().max())
-                <= _threshold(df, "assignKernelMaxArms",
-                              _ASSIGN_KERNEL_MAX_ARMS)):
+        if vt is not None and max(
+                map(len, group_rows(vt, ["c"])[1]), default=0
+        ) <= _threshold(df, "assignKernelMaxArms", _ASSIGN_KERNEL_MAX_ARMS):
             out = _with_kernel_column(
                 df, df_view_col, T.StringType(), _assign_values,
-                _assign_lookup(vpdf), ck, sk, ek)
+                _assign_lookup(vt), ck, sk, ek)
             if drop_unassigned:
                 out = out.filter(F.col(df_view_col).isNotNull())
             return out

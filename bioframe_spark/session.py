@@ -12,7 +12,9 @@ def get_spark(app: str = "bioframe_spark", cpus: int | None = None,
     """Build (or reuse) a session with the configs this engine expects.
 
     AQE on (runtime coalesce + skew-join splitting — chrom keys are few and
-    skewed, AQE matters); Arrow on (closest & datapipe use pandas UDFs);
+    skewed, AQE matters); Arrow on (the interval kernels exchange Arrow
+    batches; the datapipe's pandas UDFs and driver collects convert
+    through it);
     shuffle partitions sized to cores locally (on a real cluster, leave the
     default 200+ or set to 2-3× total executor cores).
     """
@@ -60,7 +62,7 @@ def get_spark(app: str = "bioframe_spark", cpus: int | None = None,
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         # hard JVM-side bound on ANY driver collect: the kernel-gate
-        # collects (ops._bounded_pdf) skip their count probe on small
+        # collects (ops._bounded_arrow / _bounded_pdf) skip their count probe on small
         # plan estimates and rely on this to kill a catastrophically
         # mis-estimated collect before it materializes (they catch the
         # resulting SparkException and fall back to a distributed plan)

@@ -14,9 +14,9 @@ Streaming analogs of the batch operators that are order-insensitive:
   time-axis analog of ``cluster(min_dist=gap)``.
 
 - ``stream_closest_static``: nearest static annotation(s) per arriving
-  interval — stateless mapInPandas over per-chromosome collected
-  annotation frames, running the batch cogroup kernel, so stream rows
-  are byte-identical to batch ``closest`` on replay.
+  interval — stateless mapInArrow over the collected annotation table,
+  running the batch closest body, so stream rows are identical to
+  batch ``closest`` on replay.
 - ``stream_count_overlaps_static``: running per-annotation overlap
   counts (incremental streaming aggregation over the stream-static
   join) — the streaming analog of ``count_overlaps``; final emissions
@@ -517,30 +517,22 @@ def stream_closest_static(stream: DataFrame, annotations: DataFrame,
 
     STATELESS: the annotation table is bounded (the same broadcast-dim
     contract as :func:`stream_overlap_static`); it is collected ONCE at
-    plan-construction time into per-chromosome pandas frames captured by
-    a ``mapInPandas`` kernel — the SAME vectorized searchsorted kernel
-    and row-assembly the batch cogroup path runs
-    (``operators/closest.py::_closest_pandas``), so every emitted row is
-    byte-identical to the batch operator on a replay of the stream.
-    Stateless map ops are append-legal; each micro-batch's rows emit
-    immediately.  Chromosomes with no annotation produce the batch
-    path's left-join null row.  k-NN against a MUTABLE or unbounded
-    right side is not offered as a stream (it would need total
-    per-chromosome order); re-plan on annotation refresh instead.
+    plan-construction time as an Arrow table and broadcast to a
+    ``mapInArrow`` kernel — the batch ``closest`` broadcast strategy
+    (``operators/closest.py::_closest_broadcast``), whose body every
+    kernel strategy shares, so every emitted row is identical to the
+    batch operator on a replay of the stream. ``mapInArrow`` composes
+    with streaming DataFrames unchanged. Stateless map ops are
+    append-legal; each micro-batch's rows emit immediately.
+    Chromosomes with no annotation produce the batch path's left-join
+    null row. k-NN against a MUTABLE or unbounded right side is not
+    offered as a stream (it would need total per-chromosome order);
+    re-plan on annotation refresh instead."""
+    from ..operators.closest import closest
 
-    Delegates to the batch ``closest`` broadcast strategy
-    (``operators/closest.py::_closest_broadcast``) — ONE copy of the
-    collect/broadcast/mapInPandas machinery; ``mapInPandas`` composes
-    with streaming DataFrames unchanged."""
-    from ..operators.closest import _closest_broadcast
-
-    return _closest_broadcast(
-        stream, annotations, k=k, ignore_overlaps=False,
-        ignore_upstream=False, ignore_downstream=False, direction_col=None,
-        tie_breaking_col=None, return_input=True,
-        return_distance=return_distance, return_overlap=False,
-        suffixes=suffixes, cols1=cols1, cols2=cols2,
-    )
+    return closest(stream, annotations, k=k, suffixes=suffixes,
+                   cols1=cols1, cols2=cols2,
+                   return_distance=return_distance, strategy="broadcast")
 
 
 def stream_count_overlaps_static(stream: DataFrame, annotations: DataFrame,

@@ -178,45 +178,51 @@ def test_closest_within_cap_excludes(spark):
 
 # --- self-mode positional-identity regressions -------------------------------
 # Self-exclusion in the kernel is positional; Spark's two cogroup shuffles may
-# deliver the same rows in DIFFERENT orders, so the kernel must canonicalize
-# both frames before excluding (reference passes one shared array instead).
-
-def _kern(pdf1, pdf2, **kw):
-    from bioframe_spark.operators.closest import _closest_kernel
-
-    args = dict(sk1="start", ek1="end", sk2="start", ek2="end", k=1,
-                ignore_overlaps=False, ignore_upstream=False,
-                ignore_downstream=False, direction_col=None,
-                tie_breaking_col=None, self_mode=False)
-    args.update(kw)
-    return _closest_kernel(pdf1, pdf2, **args)
-
+# deliver the same rows in DIFFERENT orders, so the body must canonicalize
+# both tables before excluding (reference passes one shared array instead).
 
 def test_kernel_self_mode_misaligned_arrival_order():
-    import pandas as pd
+    import numpy as np
+    import pyarrow as pa
+
+    from bioframe_spark.core.arrops import closest_kernel
+    from bioframe_spark.operators.closest import _ClosestBody
+
+    # the kernel excludes a row's own position, nothing else
+    s, e = np.array([5, 100, 0]), np.array([15, 110, 10])
+    i1, i2, dist = closest_kernel(s, e, s, e, self_mode=True)
+    assert sorted(zip(i1, i2, dist)) == [(0, 2, 0), (1, 0, 85), (2, 0, 0)]
 
     rows = [("chr1", 0, 10, "a"), ("chr1", 5, 15, "b"), ("chr1", 100, 110, "c")]
-    cols = ["chrom", "start", "end", "name"]
+
+    def table(order):
+        return pa.table({c: [rows[i][j] for i in order]
+                         for j, c in enumerate(["chrom", "start", "end",
+                                                "name"])})
+
+    body = _ClosestBody(cols1=None, cols2=None, suffixes=("", "_"), k=1,
+                        ignore_overlaps=False, ignore_upstream=False,
+                        ignore_downstream=False, direction_col=None,
+                        tie_breaking_col=None, return_overlap=False,
+                        return_distance=True, self_mode=True)
     # adversarial: the two cogroup sides arrive in different orders
-    pdf1 = pd.DataFrame([rows[1], rows[2], rows[0]], columns=cols)
-    pdf2 = pd.DataFrame([rows[2], rows[0], rows[1]], columns=cols)
-    i1, i2, dist, p1, p2 = _kern(pdf1, pdf2, self_mode=True, k=1)
-    got = {(p1.iloc[a]["name"], p2.iloc[b]["name"], d)
-           for a, b, d in zip(i1, i2, dist)}
+    out = body(table([1, 2, 0]), table([2, 0, 1]))
+    got = set(zip(out["name"].to_pylist(), out["name_"].to_pylist(),
+                  out["distance"].to_pylist()))
     assert got == {("a", "b", 0), ("b", "a", 0), ("c", "b", 85)}
 
 
 def test_kernel_self_mode_exact_duplicates():
-    import pandas as pd
+    import numpy as np
+
+    from bioframe_spark.core.arrops import closest_kernel
 
     # fully identical rows are interchangeable: each is the other's
     # distance-0 closest (reference self-closest keeps exact dups)
-    pdf = pd.DataFrame([("chr1", 0, 5), ("chr1", 0, 5)],
-                       columns=["chrom", "start", "end"])
-    i1, i2, dist, p1, p2 = _kern(pdf.copy(), pdf.copy(), self_mode=True, k=1)
-    assert len(i1) == 2
+    s, e = np.array([0, 0]), np.array([5, 5])
+    i1, i2, dist = closest_kernel(s, e, s, e, k=1, self_mode=True)
+    assert sorted(zip(i1, i2)) == [(0, 1), (1, 0)]
     assert all(d == 0 for d in dist)
-    assert all(b >= 0 for b in i2)
 
 
 def test_closest_self_shuffled_partitions(spark):
@@ -342,3 +348,88 @@ def test_closest_binned_releases_ladder_persists(spark):
     del out
     gc.collect()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+# --- one body, four strategies ------------------------------------------------
+
+M = (1 << 63) - 1
+NULL_ROWS1 = [
+    ("chr1", 50, 60, "+", "tie"),  # null-tie df2 row at the same distance
+    ("chr2", 50, 60, None, "nullstrand"),  # a null strand reads as '+'
+    ("chr1", None, 4, "+", "nullstart"),
+    ("chr1", 3, None, "+", "nullend"),
+    (None, 1, 2, "+", "nullchrom"),
+    ("chr3", M, M, "+", "ptmax"),
+    ("chr3", 8, 8, "-", "pt"),
+]
+NULL_ROWS2 = [
+    ("chr1", 30, 40, None, "n1"), ("chr1", 70, 80, 1.0, "s1"),
+    ("chr1", None, 45, 0.0, "nullstart2"),
+    ("chr2", 30, 40, 2.0, "a2"), ("chr2", 75, 80, 2.0, "b2"),
+    ("chr3", 10, 20, 0.5, "c3"), ("chr3", M, M, 0.5, "pt3"),
+]
+
+
+@pytest.fixture(scope="module")
+def null_frames(spark, tmp_path_factory):
+    """df1 read from parquet (its size is known, so ``auto`` finishes on
+    the driver) mixing null chrom/start/end rows with a point at
+    INT64_MAX in one column; df2 with a null tie value and a null
+    start."""
+    from bioframe_spark.core.construction import local_df
+
+    p = str(tmp_path_factory.mktemp("closest_nulls") / "df1")
+    local_df(NULL_ROWS1, "chrom string, start long, end long, "
+                         "strand string, name string").write.parquet(p)
+    df2 = local_df(NULL_ROWS2, "chrom string, start long, end long, "
+                               "score double, name string")
+    return spark.read.parquet(p), df2
+
+
+@pytest.mark.parametrize("k", [1, 2])
+@pytest.mark.parametrize("opts", [
+    dict(tie_breaking_col="score"),
+    dict(direction_col="strand", ignore_upstream=True),
+], ids=["null_tie", "null_strand"])
+def test_closest_strategies_agree_on_nulls(null_frames, k, opts):
+    """auto (driver path), cogroup, broadcast and binned return the same
+    rows: a df1 row with a null chrom, start or end gets the left-join
+    null row, a null tie value ranks last, and a null strand reads as
+    '+'."""
+    from helpers import rows
+
+    df1, df2 = null_frames
+    got = {s: rows(bf.closest(df1, df2, k=k, suffixes=("", "_b"),
+                              return_overlap=True, strategy=s, **opts))
+           for s in ("auto", "cogroup", "broadcast", "binned")}
+    for s in ("cogroup", "broadcast", "binned"):
+        assert got[s] == got["auto"], s
+    out, cols = got["auto"]
+    by_name = {}
+    for r in out:
+        by_name.setdefault(r[cols.index("name")], []).append(
+            (r[cols.index("name_b")], r[cols.index("distance")]))
+    for name in ("nullstart", "nullend", "nullchrom"):
+        assert by_name[name] == [(None, None)]
+    if "tie_breaking_col" in opts and k == 1:
+        assert by_name["tie"] == [("s1", 10)]
+    if "direction_col" in opts:
+        assert by_name["nullstrand"] == [("b2", 15)]
+
+
+def test_closest_self_list_payload_partition_independent(spark):
+    """Self-mode with coordinate duplicates and a list-typed payload
+    (which cannot be sorted natively): the canonical order still makes
+    the output independent of how the rows are partitioned, and a point
+    excluded as its own neighbour still leaves k neighbours."""
+    from helpers import rows
+
+    df = spark.createDataFrame(
+        [("chr1", 0, 10, [1, 2]), ("chr1", 0, 10, [3]),
+         ("chr1", 0, 10, [1, 2]), ("chr1", 20, 30, None),
+         ("chr2", 5, 5, [7]), ("chr2", 5, 5, [8]), ("chr2", 9, 12, [])],
+        "chrom string, start long, end long, tags array<int>")
+    a = rows(bf.closest(df.repartition(3), k=2))
+    b = rows(bf.closest(df.repartition(5, "tags"), k=2))
+    assert a == b
+    assert len(a[0]) == 14  # every row has two neighbours

@@ -17,7 +17,8 @@ from bioframe_spark.operators import ops
 
 M = (1 << 63) - 1
 SCH = "chrom string, start long, end long, name string"
-PYTHON_NODES = ("MapInPandas", "ArrowEvalPython", "BatchEvalPython")
+PYTHON_NODES = ("MapInPandas", "MapInArrow", "ArrowEvalPython",
+                "BatchEvalPython")
 
 A = [
     ("chr1", 1, 5, "a"), ("chr1", 3, 8, "b"), ("chr1", 10, 10, "pt"),
@@ -118,20 +119,12 @@ def test_assign_view(a, distributed):
           distributed, "ArrowEvalPython")
 
 
-def test_closest_with_nulls(a, b, distributed):
-    # null coordinates only: next to INT64_MAX in one column they
-    # cannot cross a pandas float64 column on either path
-    small = "start < 100 or start is null"
-    _same(lambda: bf.closest(a.filter(small), b.filter(small), k=2,
-                             suffixes=("", "_b"), return_overlap=True),
-          distributed, "MapInPandas")
-
-
-def test_closest_int64_max(a, b, distributed):
-    nn = "start is not null and end is not null"
-    _same(lambda: bf.closest(a.filter(nn), b.filter(nn),
-                             suffixes=("", "_b")),
-          distributed, "MapInPandas")
+def test_closest_nulls_and_int64_max(a, b, distributed):
+    # null coordinates next to INT64_MAX in one column: both paths keep
+    # the int64 values exact
+    _same(lambda: bf.closest(a, b, k=2, suffixes=("", "_b"),
+                             return_overlap=True),
+          distributed, "MapInArrow")
 
 
 def test_int_chrom_all_operators(spark, distributed):
@@ -141,7 +134,7 @@ def test_int_chrom_all_operators(spark, distributed):
     _same(lambda: ops.coverage(x, y), distributed, "ArrowEvalPython")
     _same(lambda: ops.count_overlaps(x, y), distributed, "ArrowEvalPython")
     _same(lambda: bf.closest(x, y, suffixes=("", "_y")), distributed,
-          "MapInPandas")
+          "MapInArrow")
 
 
 def test_empty_df1(a, b, distributed):
@@ -171,7 +164,7 @@ def test_inverted_rows_fall_through(a, b):
 
 
 def test_explicit_strategy_keeps_its_construction(a, b):
-    assert "MapInPandas" in _plan(bf.closest(
+    assert "MapInArrow" in _plan(bf.closest(
         a.filter("start < 100"), b.filter("start < 100"),
         strategy="broadcast"))
 
@@ -186,6 +179,17 @@ def test_over_gate_and_unknown_size_keep_python_stage(spark, b):
 def test_streaming_never_tiny(spark):
     stream = spark.readStream.format("rate").load()
     assert not ops._tiny(stream)
+
+
+def test_malformed_knob_raises(spark, a, b):
+    # only an unset knob reads as its default; a typo must not silently
+    # fall back to it
+    spark.conf.set("spark.bioframe.smallInputMaxRows", "2M")
+    try:
+        with pytest.raises(ValueError, match="smallInputMaxRows.*2M"):
+            ops.coverage(a, b.select("chrom", "start", "end"))
+    finally:
+        spark.conf.unset("spark.bioframe.smallInputMaxRows")
 
 
 def test_row_cap_falls_through(spark, a, b):

@@ -140,7 +140,7 @@ def test_merge_premerge_value_identical(spark, min_dist):
 def test_merge_premerge_auto_gate(spark, tmp_path):
     """auto premerge reads merge's smallInputBytes bar: at or under it
     the driver kernel runs (no fuse in the plan); with the bar lowered
-    below the scan size the auto path fuses map-side (MapInPandas in
+    below the scan size the auto path fuses map-side (MapInArrow in
     the plan) and the values stay the same."""
     df = ivals(spark, [("chr1", i, i + 5) for i in range(0, 300, 10)]
                + [("chr2", 7, 7), ("chr2", 7, 7), ("chr2", 3, 9)])
@@ -153,12 +153,12 @@ def test_merge_premerge_auto_gate(spark, tmp_path):
 
     want = rows(bf.merge(df, premerge=False, local=False))
     small = bf.merge(df)
-    assert "MapInPandas" not in plan(small)  # auto -> driver kernel
+    assert "MapInArrow" not in plan(small)  # auto -> driver kernel
     assert rows(small) == want
     spark.conf.set("spark.bioframe.smallInputBytes", "1")
     try:
         fused = bf.merge(df)
-        assert "MapInPandas" in plan(fused)  # auto -> fuse
+        assert "MapInArrow" in plan(fused)  # auto -> fuse
         assert rows(fused) == want
     finally:
         spark.conf.unset("spark.bioframe.smallInputBytes")
@@ -614,7 +614,7 @@ def test_count_overlaps_on_kernel_matches_join(spark, tmp_path):
 def test_closest_null_coord_df2_never_matches(spark, tmp_path):
     """Null-coordinate df2 rows must never be returned as a match by ANY
     strategy (the binned join predicate ignores them naturally; the
-    kernel strategies drop them in _closest_pandas). The reference
+    kernel strategies drop them in closest._ClosestBody). The reference
     rejects such input outright, so filtering is the engine-wide
     null-rows-never-match contract."""
     a = spark.createDataFrame([("chr1", 2, 5)],

@@ -76,12 +76,12 @@ def test_count_overlaps_on_int_key_kernel(spark, tmp_path):
 def test_small_coords_pdf_row_cap(spark, tmp_path):
     """A frame whose Catalyst estimate passes the byte gate but whose
     actual row count exceeds spark.bioframe.smallInputMaxRows returns
-    None from _small_coords_pdf — the operators fall back to the join
+    None from _small_coords — the operators fall back to the join
     formulation instead of an unbounded driver collect."""
     df = ivals(spark, [("chr1", i, i + 1) for i in range(50)])
     spark.conf.set("spark.bioframe.smallInputMaxRows", "10")
     try:
-        assert ops._small_coords_pdf(df, "chrom", "start", "end") is None
+        assert ops._small_coords(df, "chrom", "start", "end") is None
         # operators still produce correct results via the fallback
         d1 = ivals(spark, [("chr1", 0, 100)])
         assert bf.count_overlaps(d1, df).collect()[0]["count"] == 50
@@ -90,8 +90,8 @@ def test_small_coords_pdf_row_cap(spark, tmp_path):
         assert out.count() == 1 and out.collect()[0]["distance"] == 0
     finally:
         spark.conf.unset("spark.bioframe.smallInputMaxRows")
-    pdf = ops._small_coords_pdf(df, "chrom", "start", "end")
-    assert pdf is not None and len(pdf) == 50
+    t = ops._small_coords(df, "chrom", "start", "end")
+    assert t is not None and t.num_rows == 50
 
 
 def test_closest_explicit_broadcast_ignores_cap(spark):

@@ -161,6 +161,13 @@ def _clf_epoch(x):
 
 
 RW = 50_000
+
+
+def _on_key(df, groups):
+    """``df`` plus a ``sample`` on-key with about ``groups`` (chrom,
+    sample) combinations: a per-sample id, the high-cardinality shape."""
+    return df.withColumn("sample", F.abs(F.xxhash64("start", "end"))
+                         % F.lit(max(groups // em.N_CHROMS, 1)))
 CASES = {
     "overlap(auto)": lambda x: bf.overlap(x.iv("a"), x.iv("b"), how="inner"),
     "count_overlaps(fix-b)": lambda x: bf.count_overlaps(x.iv("a"), x.iv("b", 1)),
@@ -178,6 +185,10 @@ CASES = {
                                         range_width=RW),
     "merge(premerge+ranged)": lambda x: bf.merge(x.iv("a"), premerge=True,
                                                  range_width=RW),
+    # ~20k (chrom, on) groups: the per-group cost of the map-side fuse
+    "merge(premerge,on20k)": lambda x: bf.merge(
+        _on_key(x.iv("a"), 20_000), premerge=True, local=False,
+        on=["sample"]),
     "jaccard_cutoff(100)": lambda x: dedup.ngram_jaccard_pairs(
         _docs(x), threshold=0.4, max_doc_freq=100),
     "jaccard_cutoff(100,win)": lambda x: dedup.ngram_jaccard_pairs(

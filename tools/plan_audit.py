@@ -1,9 +1,10 @@
 """Plan audit: run every ``queries()`` entry at a small sf and count
-Python-stage operators (MapInPandas / FlatMapGroupsInPandas / ArrowEvalPython)
-and ReusedExchange in the EXECUTED final plan. A Python kernel appearing
-more times than its op intends is the multi-consumer re-execution hazard
-that cost span_dup_pairs 4x its dominant cost (r6 verdict #1) — this
-sweep is the generic net for that defect class.
+Python-stage operators (MapInPandas / MapInArrow / FlatMapGroupsInPandas /
+ArrowEvalPython / FlatMapCoGroups*) and ReusedExchange in the EXECUTED
+final plan. A Python kernel appearing more times than its op intends is
+the multi-consumer re-execution hazard that cost span_dup_pairs 4x its
+dominant cost (r6 verdict #1) — this sweep is the generic net for that
+defect class.
 
 Heuristic output, not a gate: some ops legitimately run several kernels
 (e.g. remove_duplicate_spans = position kernel + cut kernel). The
@@ -20,8 +21,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-PY_OPS = ("MapInPandas", "FlatMapGroupsInPandas", "ArrowEvalPython",
-          "FlatMapCoGroupsInPandas")
+PY_OPS = ("MapInPandas", "MapInArrow", "FlatMapGroupsInPandas",
+          "ArrowEvalPython", "FlatMapCoGroupsInPandas",
+          "FlatMapCoGroupsInArrow")
 
 
 def final_plan(df) -> str:
