@@ -119,6 +119,21 @@ def test_assign_view(a, distributed):
           distributed, "ArrowEvalPython")
 
 
+def test_closest_with_nulls(a, b, distributed):
+    # null coordinates away from INT64_MAX
+    small = "start < 100 or start is null"
+    _same(lambda: bf.closest(a.filter(small), b.filter(small), k=2,
+                             suffixes=("", "_b"), return_overlap=True),
+          distributed, "MapInArrow")
+
+
+def test_closest_int64_max(a, b, distributed):
+    nn = "start is not null and end is not null"
+    _same(lambda: bf.closest(a.filter(nn), b.filter(nn),
+                             suffixes=("", "_b")),
+          distributed, "MapInArrow")
+
+
 def test_closest_nulls_and_int64_max(a, b, distributed):
     # null coordinates next to INT64_MAX in one column: both paths keep
     # the int64 values exact
